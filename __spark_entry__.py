@@ -127,33 +127,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _emb_dim(sf_dir: str) -> int | None:
-    """Uniform embedding dimension of ``{sf_dir}/embeddings.parquet``, or
-    None if ragged/nullable.  A driver-side pyarrow offsets read (no Spark
-    job, re-done per invocation — nothing cached across runs): when the
-    corpus is uniform, the similarity operators unroll dot/plane
-    projections into whole-stage-codegen multiply-add chains instead of
-    interpreted per-element HOF folds — bit-identical results (same IEEE
-    ops, same left-fold order), ~10x on pair-scored paths (see
-    OPTIMIZATION_r06.md)."""
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        col = (
-            ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet")
-            .to_table(columns=["embedding"])
-            .column("embedding")
-        )
-        if col.null_count:
-            return None
-        lens = pc.list_value_length(col)
-        lo, hi = pc.min(lens).as_py(), pc.max(lens).as_py()
-        return lo if lo == hi and lo else None
-    except Exception:
-        return None
-
-
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents, spread across the cluster: the table is one small parquet
     file locally, so CPU-heavy per-row derivations (hashing, tokenization)
@@ -1883,7 +1856,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH self-join — cosine_topk_lsh without the broadcast; the curation
     backbone for near-dup pruning / diversity sampling)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.knn_graph(emb, k=3, n_planes=6, n_tables=2, dim=_emb_dim(sf_dir))
+    return SIM.knn_graph(emb, k=3, n_planes=6, n_tables=2)
 
 
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

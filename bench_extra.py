@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import time
 
 from bench import HEADLINE, make_spark
@@ -52,10 +53,7 @@ def main() -> None:
             ).save()
             samples[name].append(round(time.time() - t0, 3))
     spark.stop()
-    med = {
-        n: sorted(v)[len(v) // 2] if len(v) % 2 else sorted(v)[len(v) // 2 - 1]
-        for n, v in samples.items()
-    }
+    med = {n: statistics.median(v) for n, v in samples.items()}
     print(json.dumps({
         "sf_dir": args.sf_dir,
         "reps": args.reps,

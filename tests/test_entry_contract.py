@@ -2,10 +2,11 @@
 matching oracle (or is deliberately rows-only), and entry() smokes."""
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E  # noqa: E402
 
 SF = "/root/testdata/sf0.001"

@@ -47,10 +47,9 @@ def test_token_hashes_offsets_matches_string_fold():
 
 
 def test_token_hashes_offsets_non_ascii_vectorized_fold(spark):
-    """The vectorized UTF-16 fallback must reproduce Spark's own
-    split('')/ascii fold for CJK, combining-mark, and non-BMP (surrogate
-    pair) tokens — Java chars are UTF-16 units, so an emoji folds as TWO
-    units."""
+    """The vectorized non-ASCII fallback must reproduce Spark's own
+    split('')/ascii fold for CJK, combining-mark, and non-BMP tokens — the
+    fold is per codepoint, so an emoji folds as ONE unit."""
     from valor_spark.operators.dedup import token_hash
 
     toks = [
@@ -118,17 +117,32 @@ def test_winnow_profile_kernel_matches_column_chain(spark):
     )
 
 
-def test_knn_bucket_kernel_matches_hof_path(spark):
-    import valor_spark.operators.similarity as SIM
+def test_knn_bucket_kernel_matches_oracle(spark, tmp_path):
+    """knn_graph against the DuckDB oracle on a corpus whose 4-plane
+    buckets leave some vectors with <= k bucket-mates — the case that once
+    leaked (i, i, -inf) self-pairs.  No zero vector: DuckDB's
+    list_cosine_similarity is not 0.0 on one."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
 
     rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(120)
-    ] + [(900, [0.0] * 16)]  # zero vector exercises the den==0 guard
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    new = SIM.knn_graph(emb, k=3, n_planes=4, n_tables=2, dim=16)
-    ref = SIM.knn_graph(emb, k=3, n_planes=4, n_tables=2, dim=None)
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, ref.collect()))
+    vecs = rng.normal(0, 1, (150, 16)).astype(np.float32)
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(150), pa.int64()),
+            "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+        }),
+        path,
+    )
+    got = sorted(map(tuple, E.queries()["knn_graph"](spark, str(tmp_path)).collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(E.oracle_sql()["knn_graph"]).fetchall())
+    assert all(src != nbr for src, nbr, _, _ in got)
+    assert got == want
 
 
 def test_spread_width_caps_and_floors(spark):

@@ -158,6 +158,45 @@ def test_cosine_zero_vector_guard(spark):
     # bucketed variants survive too
     assert SIM.cosine_topk_ivf(emb, emb.filter(F.col("vec_id") == 0), k=1,
                                n_centroids=2, n_probe=2).count() >= 1
+    # the bucket kernel: n_planes=0 puts every vector in one bucket
+    graph = {
+        (r["src_id"], r["nbr_id"]): (r["score"], r["rank"])
+        for r in SIM.knn_graph(emb, k=2, n_planes=0, n_tables=1).collect()
+    }
+    assert graph[(0, 1)][1] == 1 and graph[(0, 2)] == (0.0, 2)
+    assert graph[(2, 0)] == (0.0, 1) and graph[(2, 1)] == (0.0, 2)
+    assert len(graph) == 6
+    pairs = {
+        (r["id1"], r["id2"]): r["cosine"]
+        for r in DD.embedding_near_dup_pairs(
+            emb, threshold=0.0, n_planes=0, n_tables=1
+        ).collect()
+    }
+    assert pairs[(0, 2)] == 0.0 and pairs[(1, 2)] == 0.0 and len(pairs) == 3
+
+
+def test_bucket_kernel_null_and_ragged_embeddings(spark):
+    """A NULL vector gets no edges; a ragged vector sharing a bucket, or a
+    NULL element, fails loudly with EmbeddingShapeError (DuckDB rejects
+    unequal lengths too)."""
+    rows = [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.5]), (2, None),
+            (3, [3.0, 2.0, 1.0])]
+    schema = "vec_id bigint, embedding array<float>"
+    emb = spark.createDataFrame(rows, schema)
+    graph = SIM.knn_graph(emb, k=2, n_planes=0, n_tables=1).collect()
+    assert {(r["src_id"], r["nbr_id"]) for r in graph} == {
+        (0, 1), (0, 3), (1, 0), (1, 3), (3, 0), (3, 1)}
+    near = DD.embedding_near_dup_pairs(emb, threshold=0.9, n_planes=0, n_tables=1)
+    assert [(r["id1"], r["id2"]) for r in near.collect()] == [(0, 1)]
+    # a trailing 0.0 leaves every plane projection unchanged, so the
+    # ragged vector shares vec 0's bucket in every table
+    ragged = spark.createDataFrame(rows + [(4, [1.0, 2.0, 3.0, 0.0])], schema)
+    null_elem = spark.createDataFrame(rows + [(5, [1.0, None, 3.0])], schema)
+    for bad in (ragged, null_elem):
+        with pytest.raises(Exception, match="EmbeddingShapeError"):
+            SIM.knn_graph(bad, k=2, n_planes=2, n_tables=2).collect()
+        with pytest.raises(Exception, match="EmbeddingShapeError"):
+            DD.embedding_near_dup_pairs(bad, n_planes=2, n_tables=2).collect()
 
 
 def test_bigrams_null_text_yields_no_bigrams(spark):

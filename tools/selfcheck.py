@@ -3,7 +3,7 @@
 DuckDB at sf0.01, compare row count, column names, and an order-insensitive
 value hash.
 
-Usage: PYTHONPATH=/root/repo python tools/selfcheck.py [sf_dir] [--partitions N]
+Usage: PYTHONPATH=. python tools/selfcheck.py [sf_dir] [--partitions N]
 
 ``--partitions`` varies spark.sql.shuffle.partitions — float aggregation
 order depends on partitioning, so a query that hash-matches at one setting
@@ -27,6 +27,7 @@ the graded one; two round-2 "41/41" claims shipped while the driver scored
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from decimal import Decimal
@@ -36,7 +37,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as entrymod  # noqa: E402
 
 TABLES = [
@@ -106,7 +108,6 @@ def report_gate_window(qs: dict, oracles: dict) -> None:
     submission, not in the next round's verdict."""
     import glob
     import json
-    import os
 
     names = list(qs)
     graded, tail = names[:GRADED_WINDOW], names[GRADED_WINDOW:]
@@ -116,7 +117,7 @@ def report_gate_window(qs: dict, oracles: dict) -> None:
     if no_oracle:
         print(f"  WARNING graded-window queries with NO oracle (rows-only "
               f"driver check): {no_oracle}")
-    latest = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    latest = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     if latest:
         with open(latest[-1]) as fh:
             prev = set(json.load(fh))

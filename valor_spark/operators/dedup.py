@@ -216,7 +216,7 @@ def _token_hashes_offsets(col):
     if used.size and int(used.max()) >= 128:
         # token-level fallback: the byte fold above is only wrong for the
         # tokens that actually contain non-ASCII bytes — re-fold just
-        # those per UTF-16 unit (Spark's split/ascii semantics)
+        # those per codepoint (Spark's split/ascii semantics)
         import pyarrow as pa
 
         # clip guards a (theoretical) trailing zero-length token, same as
@@ -455,41 +455,29 @@ def embedding_near_dup_pairs(
     n_tables: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucketed.
 
     Candidates = pairs sharing a random-hyperplane bucket in ANY of
     ``n_tables`` plane families (deterministic shader-noise planes —
     engine-neutral, oracle-replicable); verified with exact cosine.
-    Returns (id1, id2, cosine) with cosine >= threshold.
+    Returns (id1, id2, cosine) with id1 < id2 and cosine >= threshold.
 
     Scale notes: the self-join is on (table, bucket) — near-linear for
-    spread-out embeddings; exact verification touches only candidates."""
-    from valor_spark.operators.similarity import _f64, _with_tb, cosine
+    spread-out embeddings; each bucket is scored once by the shared
+    Gram-matrix kernel (see similarity._bucket_cosine_pairs)."""
+    from valor_spark.operators.similarity import _bucket_cosine_pairs
 
-    vexpr = F.col(vec_col) if dim is not None else _f64(F.col(vec_col))
-    base = embeddings.select(F.col(id_col).alias("vid"), vexpr.alias("v"))
-    npart = embeddings.sparkSession.sparkContext.defaultParallelism * 2
-    # shared banding helper: cluster-derived spread + codegen-safe unrolled
-    # bucket signs when ``dim`` is known (see similarity._with_tb)
-    banded = _with_tb(base, "v", n_planes, n_tables, dim, spread_to=npart)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["table", "bucket"])
-        .filter(F.col("a.vid") < F.col("b.vid"))
-        .select(
-            F.col("a.vid").alias("id1"),
-            F.col("b.vid").alias("id2"),
-            F.col("a.v").alias("v1"),
-            F.col("b.v").alias("v2"),
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
     return (
-        cand.withColumn("cosine", F.round(cosine(F.col("v1"), F.col("v2"), dim), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("id1", "id2", "cosine")
+        _bucket_cosine_pairs(
+            embeddings, id_col, vec_col, n_planes, n_tables, threshold=threshold
+        )
+        .filter((F.col("src_id") < F.col("nbr_id")) & (F.col("score") >= threshold))
+        .select(
+            F.col("src_id").alias("id1"),
+            F.col("nbr_id").alias("id2"),
+            F.col("score").alias("cosine"),
+        )
     )
 
 
