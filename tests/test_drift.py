@@ -132,6 +132,27 @@ def test_drift_report_chi2_same_scan(spark):
     assert abs(chi2_critical(10) - 18.307) < 0.1
 
 
+def test_drift_report_column_names_with_colons(spark):
+    """Histogram keys are structs, not delimited strings: a column name
+    containing ':' works in drift_report and baseline_from alike."""
+    rows = [(i % 50, ["a:1", "b"][i // 50 % 2]) for i in range(200)]
+    df = spark.createDataFrame(rows, "`dur:ms` int, `sr:hz` string")
+    baseline = D.baseline_from(
+        df, numeric_cols={"dur:ms": (0.0, 50.0, 10)}, categorical_cols=["sr:hz"]
+    )
+    rep = D.drift_report(
+        df.filter(F.col("dur:ms") < 25),
+        baseline,
+        numeric={"dur:ms": dict(lo=0.0, hi=50.0, nbins=10)},
+        categorical={"sr:hz": dict(metrics=("psi", "chi2"))},
+    )
+    got = {(r.column, r.metric): r for r in rep}
+    assert set(got) == {("dur:ms", "ks"), ("sr:hz", "psi"), ("sr:hz", "chi2")}
+    # the lower half of the value range: cumulative shares differ by 0.5
+    assert abs(got[("dur:ms", "ks")].value - 0.5) < 1e-12
+    assert got[("sr:hz", "psi")].value < 1e-9
+
+
 def test_drift_report_stream_matches_batch(spark, tmp_path):
     """drift_report_stream: the full KS+PSI+chi2 one-scan report per micro
     -batch equals the batch drift_report on the same rows."""

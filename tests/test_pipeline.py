@@ -412,20 +412,31 @@ def test_audio_resume_invalidated_by_ref_change(spark, tmp_path_factory):
     assert r2.violations.filter(F.col("rule") == "transcript_equal").count() == 1
 
 
-def test_ref_payload_fingerprint_coverage(spark, tmp_path_factory):
-    """fingerprint_payload="content" extends resume validity to the REF
-    payload: an in-place pcm_ref swap (same row count, same metadata, same
-    length) must re-decode instead of serving stale audio verdicts."""
+@pytest.mark.parametrize(
+    "fingerprint_payload, alt_samples, rule",
+    [
+        # same length, different content: only a content hash sees it
+        ("content", 256, "audio_snr"),
+        # a length change: the length-only payload fingerprint sees it
+        (True, 128, "audio_decode"),
+    ],
+    ids=["content", "length"],
+)
+def test_ref_payload_fingerprint_coverage(
+    spark, tmp_path_factory, fingerprint_payload, alt_samples, rule
+):
+    """``fingerprint_payload`` extends resume validity to the REF payload:
+    an in-place pcm_ref swap (same row count, same metadata) must re-decode
+    instead of serving stale audio verdicts."""
     import numpy as np
 
     clips, ref = _audio_clips_ref(spark, n=4, n_shards=2)
     ckpt = str(tmp_path_factory.mktemp("ckpt_refpayload"))
     r1 = run_pipeline(
-        spark, clips, ref, checkpoint_dir=ckpt, fingerprint_payload="content"
+        spark, clips, ref, checkpoint_dir=ckpt, fingerprint_payload=fingerprint_payload
     )
-    assert r1.violations.filter(F.col("rule") == "audio_snr").count() == 0
-    # same-length, different-content reference pcm for c0
-    alt = np.arange(255, -1, -1, dtype="<i2")
+    assert r1.violations.filter(F.col("rule").startswith("audio")).count() == 0
+    alt = np.arange(alt_samples - 1, -1, -1, dtype="<i2")
     ref2 = spark.createDataFrame(
         [
             ("c0", alt.tobytes(), "t"),
@@ -434,10 +445,42 @@ def test_ref_payload_fingerprint_coverage(spark, tmp_path_factory):
         "clip_id string, pcm_ref binary, transcript_ref string",
     )
     r2 = run_pipeline(
-        spark, clips, ref2, checkpoint_dir=ckpt, fingerprint_payload="content"
+        spark, clips, ref2, checkpoint_dir=ckpt, fingerprint_payload=fingerprint_payload
     )
     assert r2.skipped.get("audio") == []  # recomputed, not served stale
-    assert r2.violations.filter(F.col("rule") == "audio_snr").count() == 1
+    got = r2.violations.filter(F.col("rule").startswith("audio")).collect()
+    assert [(r["clip_id"], r["rule"]) for r in got] == [("c0", rule)]
+
+
+@pytest.mark.parametrize(
+    "stage, rule, bad_transcript",
+    [("row_rules", "transcript_nonempty", ""), ("audio", "transcript_equal", "other")],
+    ids=["row_rules", "audio"],
+)
+def test_resume_keeps_violations_of_shards_absent_from_a_run(
+    spark, tmp_path_factory, stage, rule, bad_transcript
+):
+    """A run over a subset of the shards must not delete the checkpointed
+    violations of the others: a later run that skips them serves their
+    rows from the stage dir."""
+    clips, ref = _audio_clips_ref(spark, n=4, n_shards=2)
+    if stage == "row_rules":
+        ref = None
+    full = clips.withColumn(
+        "transcript",
+        F.when(F.col("shard") == 1, F.lit(bad_transcript)).otherwise(F.col("transcript")),
+    )
+    ckpt = str(tmp_path_factory.mktemp(f"ckpt_absent_{stage}"))
+    r1 = run_pipeline(spark, full, ref, checkpoint_dir=ckpt)
+    assert r1.violations.filter(F.col("rule") == rule).count() == 2
+    # only shard 0, changed: it recomputes, shard 1 is absent
+    only0 = full.filter(F.col("shard") == 0).withColumn("sr_hz", F.lit(16001))
+    r2 = run_pipeline(spark, only0, ref, checkpoint_dir=ckpt)
+    assert r2.skipped[stage] == []
+    # the first input again: shard 1 skips and keeps its 2 violations
+    r3 = run_pipeline(spark, full, ref, checkpoint_dir=ckpt)
+    assert r3.skipped[stage] == [1]
+    assert r3.violations.filter(F.col("rule") == rule).count() == 2
 
 
 def test_negative_shard_rejected(spark):

@@ -217,11 +217,7 @@ def _binary_views(col):
     return get
 
 
-def with_audio_invariant(
-    clips: DataFrame,
-    clips_ref: DataFrame,
-    repartition: int | None = None,
-) -> DataFrame:
+def with_audio_invariant(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
     """Join clips to reference decodes on ``clip_id`` and attach the decoded
     invariant columns ``snr_db / n_samples / decode_error / transcript_ok``.
 
@@ -244,9 +240,6 @@ def with_audio_invariant(
         *(["shard"] if has_shard else []),
     )
     right = clips_ref.select("clip_id", "pcm_ref", "transcript_ref")
-    if repartition:
-        left = left.repartition(repartition, "clip_id")
-        right = right.repartition(repartition, "clip_id")
     joined = left.join(right, on="clip_id", how="inner").select(
         "clip_id",
         *(["shard"] if has_shard else []),

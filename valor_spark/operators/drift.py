@@ -88,6 +88,44 @@ def categorical_histogram(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+def _histograms(df: DataFrame, numeric: dict, categorical: dict) -> DataFrame:
+    """Every requested histogram from ONE scan of ``df``: ``(kind, col, key,
+    cnt)`` rows, kind ``"n"`` (key = uniform-bin index) or ``"c"`` (key =
+    the category value), both keys as strings.
+
+    ``numeric``: {col: {lo, hi, nbins, pred?}}; ``categorical``: {col:
+    {pred?}}.  Each row projects one struct key per column (NULL when the
+    value is NULL or ``pred`` fails), explodes, and a single count
+    aggregate with map-side combine feeds all parts — at 100 TB the scan IS
+    the cost, so one pass replaces one scan per histogram.  Struct keys,
+    not delimited strings: column names and category values may contain
+    any character."""
+
+    def key(kind: str, col: str, spec: dict, value):
+        cond = F.col(col).isNotNull()
+        if spec.get("pred") is not None:
+            cond = cond & spec["pred"]
+        return F.when(
+            cond,
+            F.struct(
+                F.lit(kind).alias("kind"),
+                F.lit(col).alias("col"),
+                value.cast("string").alias("key"),
+            ),
+        )
+
+    keys = [
+        key("n", col, spec, _bin_expr(col, spec["lo"], spec["hi"], spec["nbins"]))
+        for col, spec in numeric.items()
+    ] + [key("c", col, spec, F.col(col)) for col, spec in categorical.items()]
+    return (
+        df.select(F.explode(F.array(*keys)).alias("k"))
+        .filter(F.col("k").isNotNull())
+        .groupBy(*(F.col(f"k.{f}").alias(f) for f in ("kind", "col", "key")))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def _shares(counts: dict, keys: list) -> np.ndarray:
     total = float(sum(counts.values())) or 1.0
     return np.array([counts.get(k, 0) / total for k in keys])
@@ -194,42 +232,14 @@ def drift_report(
     statistics to derive from that column's ONE histogram; chi-square's
     threshold defaults to the Wilson-Hilferty 95% critical value for the
     realized dof (scale-free — see :func:`chi2_critical`), overridable via
-    ``chi2_threshold``.  Per-row bin keys for every metric are computed in
-    one projection and exploded, so the input is read once (vs one scan per
-    metric) — at 100 TB the scan IS the cost; the shuffle stays a few-dozen
-    -row count aggregate with map-side combine.  ``pred`` optionally
-    restricts which rows enter that column's histogram (e.g. only positive
-    durations)."""
+    ``chi2_threshold``.  Every histogram comes from the one scan of
+    :func:`_histograms`; ``pred`` optionally restricts which rows enter
+    that column's histogram (e.g. only positive durations)."""
     numeric = numeric or {}
     categorical = categorical or {}
-    for c in (*numeric, *categorical):
-        if ":" in c:
-            raise ValueError(f"drift_report: column name may not contain ':': {c!r}")
-    keys = []
-    for col, spec in numeric.items():
-        b = _bin_expr(col, spec["lo"], spec["hi"], spec["nbins"])
-        cond = F.col(col).isNotNull()
-        if spec.get("pred") is not None:
-            cond = cond & spec["pred"]
-        keys.append(F.when(cond, F.concat(F.lit(f"n:{col}:"), b.cast("string"))))
-    for col, spec in categorical.items():
-        cond = F.col(col).isNotNull()
-        if spec.get("pred") is not None:
-            cond = cond & spec["pred"]
-        keys.append(
-            F.when(cond, F.concat(F.lit(f"c:{col}:"), F.col(col).cast("string")))
-        )
-    hist_rows = (
-        df.select(F.explode(F.array(*keys)).alias("k"))
-        .filter(F.col("k").isNotNull())
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    obs: dict[str, dict] = {}
-    for r in hist_rows:
-        kind, col, key = r["k"].split(":", 2)
-        obs.setdefault((kind, col), {})[key] = r["cnt"]
+    obs: dict[tuple, dict] = {}
+    for r in _histograms(df, numeric, categorical).collect():
+        obs.setdefault((r["kind"], r["col"]), {})[r["key"]] = r["cnt"]
 
     base_rows = baseline.collect()
     results = []
@@ -337,44 +347,12 @@ def baseline_from(
     VALUE as a string there (so string-typed categories like codec work;
     the legacy numeric bin_lo encoding remains a read fallback), numeric
     rows carry NULL."""
-    # ONE scan for every column's histogram (the drift_report shape): each
-    # row projects one struct key per requested column (NULL when the value
-    # is NULL — same drop semantics as the per-column histograms), explodes,
-    # and a single count aggregate with map-side combine feeds all parts.
-    # The old per-column union re-scanned the input once per histogram
-    # family.  Shares and bin edges are the same expressions as before, so
-    # the output rows are value-identical (order differs; every consumer
-    # builds dicts or joins).  Struct keys, not delimited strings: category
-    # values may contain any character.
-    keys = []
-    for col, (lo, hi, nbins) in numeric_cols.items():
-        keys.append(
-            F.when(
-                F.col(col).isNotNull(),
-                F.struct(
-                    F.lit("n").alias("kind"),
-                    F.lit(col).alias("col"),
-                    _bin_expr(col, lo, hi, nbins).cast("string").alias("key"),
-                ),
-            )
-        )
-    for col in categorical_cols:
-        keys.append(
-            F.when(
-                F.col(col).isNotNull(),
-                F.struct(
-                    F.lit("c").alias("kind"),
-                    F.lit(col).alias("col"),
-                    F.col(col).cast("string").alias("key"),
-                ),
-            )
-        )
-    hist = (
-        df.select(F.explode(F.array(*keys)).alias("k"))
-        .filter(F.col("k").isNotNull())
-        .groupBy(F.col("k.kind").alias("kind"), F.col("k.col").alias("col"),
-                 F.col("k.key").alias("key"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    # ONE scan for every histogram (row order is arbitrary; every consumer
+    # builds dicts or joins)
+    hist = _histograms(
+        df,
+        {c: dict(lo=lo, hi=hi, nbins=nb) for c, (lo, hi, nb) in numeric_cols.items()},
+        {c: {} for c in categorical_cols},
     )
     total = F.sum("cnt").over(Window.partitionBy("kind", "col"))
 

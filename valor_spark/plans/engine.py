@@ -251,25 +251,6 @@ class ValidationResult:
             )
         )
 
-    def partition_verdicts(self) -> DataFrame:
-        """Per-shard pass/fail + metrics (north_rule).  Keyed on the explicit
-        shard column so results are stable under physical repartitioning."""
-        if not self.shard_col:
-            raise ValueError("no shard column configured")
-        aggs = [
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(self._wrong_any, 1).otherwise(0)).alias("invalid_rows"),
-            F.sum(F.size("__violations")).alias("violations"),
-            (~F.max(self._wrong_any)).alias("passed"),
-        ]
-        for n in self.rule_names:
-            aggs.append(
-                F.sum(
-                    F.when(F.col(VERDICT_PREFIX + n).getField(WRONG), 1).otherwise(0)
-                ).alias(f"wrong_{n}")
-            )
-        return self.annotated.groupBy(F.col(self.shard_col).alias("shard")).agg(*aggs)
-
 
 def sample_violations(violations: DataFrame, per_rule: int = 10) -> DataFrame:
     """Deterministic top-K violation examples per rule — the triage view for

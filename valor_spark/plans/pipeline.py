@@ -504,6 +504,25 @@ def clips_row_rules() -> dict:
     }
 
 
+def _fingerprint_cols(
+    df: DataFrame,
+    meta_cols: tuple[str, ...],
+    payload_col: str,
+    fingerprint_payload: bool | Literal["content"],
+) -> list:
+    """Columns hashed into a resume fingerprint: the ``meta_cols`` present
+    in ``df`` (else its first column), plus ``payload_col`` as
+    ``fingerprint_payload`` asks (see :func:`shard_fingerprint_frame`)."""
+    cols = [F.col(c) for c in meta_cols if c in df.columns] or [F.col(df.columns[0])]
+    if fingerprint_payload and payload_col in df.columns:
+        cols.append(
+            F.col(payload_col)
+            if fingerprint_payload == "content"
+            else F.coalesce(F.length(payload_col), F.lit(-1))
+        )
+    return cols
+
+
 def shard_fingerprint_frame(
     clips: DataFrame, fingerprint_payload: bool | Literal["content"] = False
 ) -> DataFrame:
@@ -529,20 +548,8 @@ def shard_fingerprint_frame(
     handled by comparing (rows, fingerprint) PAIRS, never fingerprint alone.
     """
     has_shard = "shard" in clips.columns
-    shard_col = _shard_col(has_shard)
-    fp_cols = [
-        F.col(c)
-        for c in ("clip_id", "sr_hz", "dur_ms", "codec", "transcript")
-        if c in clips.columns
-    ]
-    if fingerprint_payload and "bytes" in clips.columns:
-        # "content": hash the payload bytes themselves — detects in-place
-        # same-length payload swaps at the cost of a full payload scan per
-        # resume decision; any other truthy value hashes length only
-        if fingerprint_payload == "content":
-            fp_cols.append(F.col("bytes"))
-        else:
-            fp_cols.append(F.coalesce(F.length("bytes"), F.lit(-1)))
+    meta = ("clip_id", "sr_hz", "dur_ms", "codec", "transcript")
+    fp_cols = _fingerprint_cols(clips, meta, "bytes", fingerprint_payload)
     # raw_min rides the same aggregate for free and lets the intake guard
     # distinguish a REAL negative shard value from the NULL->UNSHARDED(-2)
     # coalescing above: min() skips NULLs, so a group whose rows were all
@@ -550,7 +557,7 @@ def shard_fingerprint_frame(
     raw_shard = (
         F.col("shard").cast("int") if has_shard else F.lit(0).cast("int")
     )
-    return clips.groupBy(shard_col.alias("shard")).agg(
+    return clips.groupBy(_shard_col(has_shard).alias("shard")).agg(
         F.count(F.lit(1)).alias("rows"),
         F.bit_xor(F.xxhash64(*fp_cols)).alias("fingerprint"),
         F.min(raw_shard).alias("raw_min"),
@@ -622,6 +629,74 @@ def _per_shard_metrics(
     ]
 
 
+def _sharded_stage(
+    spark: SparkSession,
+    clips: DataFrame,
+    manifest: RunManifest | None,
+    stage: str,
+    keys: dict[int, tuple[int, int]],
+    prepare,
+    rules: dict,
+    report: PipelineReport,
+) -> DataFrame:
+    """Run one shard-granular stage (row rules, audio) and return its
+    violation rows.
+
+    ``keys`` maps each input shard to its resume key (rows, fingerprint
+    XOR the stage config); it is empty without a checkpoint dir.  Shards
+    whose key matches the manifest are skipped by filtering the scan;
+    ``validate(prepare(todo), rules)`` covers the rest, whose violations
+    land partition-wise in the stage dir with one metrics record per
+    recomputed shard."""
+    recorded = manifest.shard_rows_fingerprints(stage) if manifest else {}
+    done = {s for s, key in keys.items() if recorded.get(s) == key}
+    report.skipped[stage] = sorted(done)
+
+    def current_shards(df: DataFrame) -> DataFrame:
+        """Read-backs see the whole stage dir — shards REMOVED from the
+        input since the previous run must not resurface as violations."""
+        return df.filter(F.col("shard").isin(list(keys)))
+
+    if done and len(done) == len(keys):
+        return current_shards(
+            manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
+        )
+    todo = clips
+    if done:
+        todo = clips.filter(~_shard_col("shard" in clips.columns).isin(sorted(done)))
+    frame = prepare(todo)
+    has_shard = "shard" in frame.columns
+    res = validate(
+        frame,
+        rules=rules,
+        key_cols=["clip_id"],
+        shard_col="shard" if has_shard else None,
+    )
+    vio = res.violations().select(
+        "clip_id", _shard_col(has_shard).alias("shard"), "rule", "path", "error"
+    )
+    if not manifest:
+        return vio
+    todo_keys = {s: key for s, key in keys.items() if s not in done}
+    # Clear-and-append only the recomputed shards: a whole-dir overwrite
+    # would delete the parquet of shards recorded as done but absent from
+    # this input, which a later run over them serves from the manifest.
+    # Overwrite only when no per-shard record exists (fresh run dir, or the
+    # old stage-granular layout with unpartitioned files at the stage root).
+    per_shard = any(s != GLOBAL_SHARD for s in recorded)
+    manifest.write_violations(
+        stage,
+        vio,
+        partition_by="shard",
+        replace_shards=sorted(todo_keys) if per_shard else None,
+    )
+    # metric counts come from the (tiny) written parquet, not the logical
+    # plan — counting the plan would re-run the whole stage a second time
+    vio = current_shards(manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA))
+    manifest.append(_per_shard_metrics(vio, todo_keys, stage))
+    return vio
+
+
 def run_pipeline(
     spark: SparkSession,
     clips: DataFrame,
@@ -629,29 +704,28 @@ def run_pipeline(
     baseline: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     snr_db_min: float = 30.0,
-    audio_repartition: int | None = None,
-    scan_bytes_in_row_rules: bool | None = None,
     fingerprint_payload: bool | Literal["content"] = False,
 ) -> PipelineReport:
-    """``scan_bytes_in_row_rules``: the ``bytes_present`` row rule forces the
-    row-rule stage to scan the (dominant) binary column.  When the audio
-    stage runs, empty/null payloads already surface there as decode errors,
-    so by default the row-rule scan PRUNES bytes entirely (metadata-only
-    columnar read) — at 100 TB that's the difference between a KB-scale and
-    a PB-scale stage input."""
+    """Validate ``clips`` through every stage; resumable when
+    ``checkpoint_dir`` is set.
+
+    The audio stage runs when ``clips_ref`` carries ``pcm_ref``.  Empty or
+    null payloads then surface there as decode errors, so the row-rule
+    stage drops the ``bytes_present`` rule and PRUNES bytes from its scan
+    (metadata-only columnar read) — at 100 TB that's the difference between
+    a KB-scale and a PB-scale stage input.  ``fingerprint_payload`` extends
+    the resume fingerprints to the payloads (see
+    :func:`shard_fingerprint_frame`)."""
     report = PipelineReport()
-    if scan_bytes_in_row_rules is None:
-        scan_bytes_in_row_rules = clips_ref is None or "pcm_ref" not in clips_ref.columns
+    run_audio = clips_ref is not None and "pcm_ref" in clips_ref.columns
     manifest = RunManifest(checkpoint_dir) if checkpoint_dir else None
     vio_frames: list[DataFrame] = []
 
-    has_shard = "shard" in clips.columns
     # persist: this 1-row-per-shard aggregate is consumed up to three times
     # (resume decisions, verdict assembly, row totals) — without the cache
     # each use re-scans the input's metadata columns
     shards_fp = shard_fingerprint_frame(clips, fingerprint_payload).persist()
     report._persisted = shards_fp
-    shard_col = _shard_col(has_shard)
     # Negative shard values would collide with the GLOBAL (-1) / UNSHARDED
     # (-2) sentinels — a real shard=-1's violations would merge into the
     # global verdict row and resume keys would alias.  Fail fast at intake,
@@ -659,7 +733,7 @@ def run_pipeline(
     # materializes the persisted 1-row-per-shard frame (every later consumer
     # hits the cache), so the guard costs zero extra input scans — it used
     # to be its own full pass over the shard column.
-    if has_shard:
+    if "shard" in clips.columns:
         # raw_min is NULL for the NULL-shard (tolerated, revalidated) group;
         # any non-NULL negative means a genuine negative shard value
         neg = (
@@ -683,20 +757,27 @@ def run_pipeline(
     # the resume contract (same trade as the clips-side fingerprint — the
     # default keeps the resume decision a metadata-only read).
     ref_rows, ref_fp = 0, 0
-    if manifest and clips_ref is not None:
-        ref_cols = [
-            F.col(c) for c in ("clip_id", "transcript_ref") if c in clips_ref.columns
-        ] or [F.col(clips_ref.columns[0])]
-        if fingerprint_payload and "pcm_ref" in clips_ref.columns:
-            if fingerprint_payload == "content":
-                ref_cols.append(F.col("pcm_ref"))
-            else:
-                ref_cols.append(F.coalesce(F.length("pcm_ref"), F.lit(-1)))
-        r = clips_ref.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*ref_cols)), F.lit(0)).alias("fp"),
-        ).collect()[0]
-        ref_rows, ref_fp = int(r["rows"]), int(r["fp"])
+    raw_stats: dict[int, tuple[int, int]] = {}
+    if manifest:
+        if clips_ref is not None:
+            ref_cols = _fingerprint_cols(
+                clips_ref, ("clip_id", "transcript_ref"), "pcm_ref", fingerprint_payload
+            )
+            r = clips_ref.agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(F.bit_xor(F.xxhash64(*ref_cols)), F.lit(0)).alias("fp"),
+            ).collect()[0]
+            ref_rows, ref_fp = int(r["rows"]), int(r["fp"])
+        raw_stats = {
+            int(r["shard"]): (int(r["rows"]), int(r["fingerprint"]))
+            for r in shards_fp.collect()
+        }
+
+    def stage_keys(cfg: int) -> dict[int, tuple[int, int]]:
+        """Per-shard resume keys with a stage's config hash mixed in:
+        enabling/disabling rules or changing a threshold must recompute
+        shards, not serve the old configuration's violations."""
+        return {s: (rows, fp ^ cfg) for s, (rows, fp) in raw_stats.items()}
 
     # ---- stage 0: schema gate -------------------------------------------
     t0 = time.time()
@@ -711,77 +792,20 @@ def run_pipeline(
         )
     report.stage_wall_s["schema"] = time.time() - t0
 
-    # ---- stage 1: row rules (resume: skip shards whose recorded input
-    # fingerprint still matches; changed shards recompute and their
-    # violations partition is dynamically overwritten) --------------------
+    # ---- stage 1: row rules (shard-granular resume) ----------------------
     t0 = time.time()
-    stage = "row_rules"
     rules = clips_row_rules()
-    if not scan_bytes_in_row_rules:
+    if run_audio:
         del rules["bytes_present"]
-    # config mixed into the shard fingerprints: enabling/disabling rules
-    # must recompute shards, not serve the old rule set's violations
-    row_cfg = _cfg_fingerprint("row_rules", tuple(sorted(rules)))
-    done: set[int] = set()
-    shard_stats: dict[int, tuple[int, int]] = {}
-
-    def _current_shards_only(df: DataFrame) -> DataFrame:
-        """Read-backs see the whole stage dir — shards REMOVED from the
-        input since the previous run must not resurface as violations."""
-        return df.filter(F.col("shard").isin([int(s) for s in shard_stats]))
-
-    raw_stats: dict[int, tuple[int, int]] = {}
-    if manifest:
-        raw_stats = {
-            int(r["shard"]): (int(r["rows"]), int(r["fingerprint"]))
-            for r in shards_fp.collect()
-        }
-        # row_cfg only keys THIS stage's resume; global stages derive their
-        # keys from the raw data fingerprints plus their own config hashes
-        shard_stats = {s: (rows, fp ^ row_cfg) for s, (rows, fp) in raw_stats.items()}
-        recorded = manifest.shard_rows_fingerprints(stage)
-        done = {
-            s for s, (rows, fp) in shard_stats.items() if recorded.get(s) == (rows, fp)
-        }
-    if manifest and done and len(done) == len(shard_stats):
-        report.skipped[stage] = sorted(done)
-        vio_frames.append(
-            _current_shards_only(
-                manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-            )
+    vio_frames.append(
+        _sharded_stage(
+            spark, clips, manifest, "row_rules",
+            stage_keys(_cfg_fingerprint("row_rules", tuple(sorted(rules)))),
+            (lambda todo: todo.drop("bytes")) if run_audio else (lambda todo: todo),
+            rules, report,
         )
-    else:
-        todo = clips.filter(~shard_col.isin([int(s) for s in done])) if done else clips
-        if not scan_bytes_in_row_rules:
-            todo = todo.drop("bytes")
-        res = validate(
-            todo,
-            rules=rules,
-            key_cols=["clip_id"],
-            shard_col="shard" if has_shard else None,
-        )
-        vio = res.violations().select(
-            "clip_id",
-            _shard_col(has_shard).alias("shard"),
-            "rule",
-            "path",
-            "error",
-        )
-        if manifest:
-            todo_stats = {s: v for s, v in shard_stats.items() if s not in done}
-            manifest.write_violations(
-                stage, vio, partition_by="shard", replace_shards=sorted(todo_stats)
-            )
-            # metric counts come from the (tiny) written parquet, not the
-            # logical plan — counting the plan would re-run the whole
-            # validation scan a second time
-            vio = _current_shards_only(
-                manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-            )
-            manifest.append(_per_shard_metrics(vio, todo_stats, stage))
-        vio_frames.append(vio)
-        report.skipped[stage] = sorted(done)
-    report.stage_wall_s[stage] = time.time() - t0
+    )
+    report.stage_wall_s["row_rules"] = time.time() - t0
 
     # Global (whole-table) stages resume at stage granularity, validated by
     # a table-level (rows, fingerprint) key covering BOTH inputs (XOR of
@@ -826,78 +850,22 @@ def run_pipeline(
 
     # ---- stage 3: audio payload invariant (SHARD-granular resume) --------
     # At 100 TB the audio decode pass is the dominant cost: a 99%-complete
-    # run that dies must not re-decode everything.  Resume keys are
-    # per-shard: clips shard fingerprint XOR the GLOBAL ref fingerprint XOR
-    # the stage config (snr threshold + ref row count) — the ref table has
-    # no shard alignment of its own, so a ref change conservatively
-    # invalidates every shard, while the dominant case (appended / changed
-    # clips shards) recomputes only the affected shards.
-    if clips_ref is not None and "pcm_ref" in clips_ref.columns:
+    # run that dies must not re-decode everything.  Resume keys mix in the
+    # GLOBAL ref fingerprint and the stage config (snr threshold + ref row
+    # count) — the ref table has no shard alignment of its own, so a ref
+    # change conservatively invalidates every shard, while the dominant case
+    # (appended / changed clips shards) recomputes only the affected shards.
+    if run_audio:
         t0 = time.time()
-        stage = "audio"
-        audio_cfg = _cfg_fingerprint("audio", snr_db_min, ref_rows) ^ ref_fp
-        audio_stats = {
-            s: (rows, fp ^ audio_cfg) for s, (rows, fp) in raw_stats.items()
-        }
-        a_done: set[int] = set()
-        if manifest:
-            recorded = manifest.shard_rows_fingerprints(stage)
-            a_done = {
-                s for s, key in audio_stats.items() if recorded.get(s) == key
-            }
-
-        def _audio_current_shards(df: DataFrame) -> DataFrame:
-            return df.filter(F.col("shard").isin([int(s) for s in audio_stats]))
-
-        if manifest and a_done and len(a_done) == len(audio_stats):
-            vio_frames.append(
-                _audio_current_shards(
-                    manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-                )
+        vio_frames.append(
+            _sharded_stage(
+                spark, clips, manifest, "audio",
+                stage_keys(_cfg_fingerprint("audio", snr_db_min, ref_rows) ^ ref_fp),
+                lambda todo: with_audio_invariant(todo, clips_ref),
+                audio_rules(snr_db_min), report,
             )
-            report.skipped[stage] = sorted(a_done)
-        else:
-            todo_clips = (
-                clips.filter(~shard_col.isin([int(s) for s in a_done]))
-                if a_done
-                else clips
-            )
-            inv = with_audio_invariant(
-                todo_clips, clips_ref, repartition=audio_repartition
-            )
-            res = validate(
-                inv,
-                rules=audio_rules(snr_db_min),
-                key_cols=["clip_id"],
-                shard_col="shard" if "shard" in inv.columns else None,
-            )
-            vio = res.violations().select(
-                "clip_id",
-                _shard_col("shard" in inv.columns).alias("shard"),
-                "rule",
-                "path",
-                "error",
-            )
-            if manifest:
-                todo_stats = {
-                    s: v for s, v in audio_stats.items() if s not in a_done
-                }
-                # a_done empty also covers manifests written by the old
-                # stage-granular layout (unpartitioned files at the stage
-                # root): full overwrite replaces that layout wholesale
-                manifest.write_violations(
-                    stage,
-                    vio,
-                    partition_by="shard",
-                    replace_shards=sorted(todo_stats) if a_done else None,
-                )
-                vio = _audio_current_shards(
-                    manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-                )
-                manifest.append(_per_shard_metrics(vio, todo_stats, stage))
-            vio_frames.append(vio)
-            report.skipped[stage] = sorted(a_done)
-        report.stage_wall_s[stage] = time.time() - t0
+        )
+        report.stage_wall_s["audio"] = time.time() - t0
 
     # ---- stage 4: distribution drift (ALL metrics from one scan) ---------
     if baseline is not None:
