@@ -343,6 +343,81 @@ def test_checkpoint_manifest_has_lineage(spark, tables, tmp_path_factory):
     assert all(sum(r.by_rule.values()) == r.violations for r in row_recs)
 
 
+#: Spark jobs of one checkpointed run_pipeline over the module tables
+#: (inputs already cached).  A change here is a change in the number of
+#: actions the pipeline takes — fingerprint, stage writes, metric reads.
+RUN_PIPELINE_JOBS = 22
+
+
+def test_checkpointed_run_job_count_and_observed_constraint_count(
+    spark, tables, tmp_path_factory
+):
+    from valor_spark.operators.constraints import VIOLATION_SCHEMA
+    from valor_spark.plans.checkpoint import RunManifest
+
+    clips, ref, baseline = tables
+    # earlier runs' persisted fingerprint frames would serve this run's
+    # fingerprint from cache; start from the module tables alone
+    spark.catalog.clearCache()
+    for df in tables:
+        df.cache().count()  # fill the caches outside the counted group
+    ckpt = str(tmp_path_factory.mktemp("ckpt_jobs"))
+    sc = spark.sparkContext
+    group = "test-run-pipeline-jobs"
+    sc.setJobGroup(group, group, False)
+    try:
+        rep = run_pipeline(spark, clips, ref, baseline, checkpoint_dir=ckpt)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rep.release()
+    assert jobs == RUN_PIPELINE_JOBS
+    # the constraints count is observed on the write, not read back
+    manifest = RunManifest(ckpt)
+    (rec,) = [r for r in manifest.records() if r.stage == "constraints"]
+    written = manifest.read_violations(spark, "constraints", VIOLATION_SCHEMA)
+    assert rec.violations == written.count() > 0
+
+
+def test_drift_violation_rows_are_built_in_the_jvm(spark, tables):
+    """A drifting baseline puts one ``drift_<metric>`` row per failed metric
+    into ``violations`` (shard NULL, so it counts under the global verdict
+    row), and those rows come from no Python-RDD scan."""
+    clips, _, _ = tables
+    ok = clips.filter((F.col("dur_ms") > 0) & (F.col("sr_hz") > 0))
+    drifted = D.baseline_from(
+        ok.withColumn("dur_ms", F.lit(5)),
+        numeric_cols={"dur_ms": (0.0, 1001.0, 20)},
+        categorical_cols=["sr_hz"],
+    )
+    rep = run_pipeline(spark, clips, None, drifted)
+    failed = [d for d in rep.drift if not d.passed]
+    assert failed
+    got = {
+        tuple(r)
+        for r in rep.violations.filter(F.col("rule").startswith("drift_")).collect()
+    }
+    assert got == {
+        (None, None, f"drift_{d.metric}", f".{d.column}",
+         f"DriftExceeded:{d.metric}={d.value:.4f}>{d.threshold}")
+        for d in failed
+    }
+    (glob,) = rep.shard_verdicts.filter(F.col("shard") == -1).collect()
+    assert glob["violations"] == rep.violations.filter(F.col("shard").isNull()).count()
+    # the only Python-RDD scan is the row rules' localCheckpoint, with or
+    # without the drift rows
+    plain = run_pipeline(spark, clips, None)
+
+    def rdd_scans(r):
+        return r.violations._jdf.queryExecution().executedPlan().toString().count("ExistingRDD")
+
+    assert rdd_scans(rep) == rdd_scans(plain) == 1
+    rep.release()
+    plain.release()
+
+
 def _audio_clips_ref(spark, n=8, n_shards=4):
     """Matching pcm clips + reference (zero audio violations)."""
     import numpy as np

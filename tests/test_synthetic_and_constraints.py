@@ -135,3 +135,29 @@ def test_column_stats_string_ranges(clips_df):
     d = stats["dur_ms"]
     assert d["min_str"] is None and d["max_str"] is None
     assert d["min"] is not None
+
+
+def test_column_stats_quoted_names_match_pandas(spark):
+    """Column names that need quoting in SQL (a dot, a backtick, a quote)
+    give the same stats as pandas over the same rows."""
+    import pandas as pd
+
+    rows = [(1.5, "b", 3), (None, "a`'", 7), (-2.0, None, 7), (4.0, "zz", None)]
+    pdf = pd.DataFrame(rows, columns=["a.b", "x`y", "it's"])
+    df = spark.createDataFrame(rows, "`a.b` double, `x``y` string, `it's` int")
+    stats = {r["column"]: r.asDict() for r in C.column_stats(df).collect()}
+    assert list(stats) == ["a.b", "x`y", "it's"]
+    for c in pdf.columns:
+        s, col = stats[c], pdf[c].dropna()
+        assert s["count"] == len(pdf)
+        assert s["nulls"] == pdf[c].isna().sum()
+        assert s["approx_distinct"] == col.nunique()
+    for c in ("a.b", "it's"):
+        s, col = stats[c], pdf[c].dropna()
+        assert (s["min"], s["max"]) == (col.min(), col.max())
+        assert s["mean"] == pytest.approx(col.mean())
+        assert s["stddev"] == pytest.approx(col.std())
+        assert s["min_str"] is None and s["max_str"] is None
+    s, col = stats["x`y"], pdf["x`y"].dropna()
+    assert (s["min_str"], s["max_str"]) == (col.min(), col.max())
+    assert s["min"] is None and s["mean"] is None

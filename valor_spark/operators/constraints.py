@@ -31,7 +31,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from valor_spark.utils import sql_ident, sql_str
+
 VIOLATION_SCHEMA = "clip_id string, shard int, rule string, path string, error string"
+
+
+def global_violations(spark, rows: Sequence[tuple[str, str, str]]) -> DataFrame:
+    """Table-level violation rows from driver-side ``(rule, path, error)``
+    triples, with NULL ``clip_id`` and ``shard``.  Built in the JVM as one
+    ``inline`` over literals: ``createDataFrame`` would plan a Python-RDD
+    scan, whose collect costs a Python worker."""
+    structs = ", ".join(
+        "named_struct('clip_id', CAST(NULL AS STRING), 'shard', CAST(NULL AS INT), "
+        f"'rule', {sql_str(rule)}, 'path', {sql_str(path)}, 'error', {sql_str(error)})"
+        for rule, path, error in rows
+    )
+    return spark.range(1).selectExpr(f"inline(array({structs}))")
 
 
 # ---------------------------------------------------------------------------
@@ -71,53 +86,45 @@ def column_stats(df: DataFrame, columns: Sequence[str] | None = None) -> DataFra
 
     min/max/mean/stddev are populated for numeric columns; string columns
     get their LEXICOGRAPHIC range in min_str/max_str (a separate pair —
-    they cannot share the double min/max slots)."""
+    they cannot share the double min/max slots).
+
+    Built as SQL text: one ``selectExpr`` of aggregates (aliased by
+    position, ``a<k>``) and one ``selectExpr`` inlining a struct per
+    column — two driver calls whatever the column count, and lazy (no
+    Spark job until the result is used)."""
     cols = list(columns) if columns else df.columns
-    numeric = {
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (T.NumericType,))
-    }
-    stringy = {
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-    }
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls__{c}"))
-        aggs.append(F.approx_count_distinct(c).alias(f"dist__{c}"))
-        if c in numeric:
-            aggs += [
-                F.min(c).cast("double").alias(f"min__{c}"),
-                F.max(c).cast("double").alias(f"max__{c}"),
-                F.avg(c).alias(f"mean__{c}"),
-                F.stddev(c).alias(f"std__{c}"),
-            ]
-        elif c in stringy:
-            aggs += [
-                F.min(c).alias(f"smin__{c}"),
-                F.max(c).alias(f"smax__{c}"),
-            ]
-    wide = df.agg(*aggs)
-    null_d = F.lit(None).cast("double")
-    null_s = F.lit(None).cast("string")
-    # unpivot driver-side-free: build one struct per column then explode
+    types = {f.name: f.dataType for f in df.schema.fields}
+    aggs = ["count(1)"]
+
+    def agg(expr: str) -> str:
+        """Add an aggregate; return its positional alias."""
+        aggs.append(expr)
+        return f"a{len(aggs) - 1}"
+
+    null_d, null_s = "CAST(NULL AS DOUBLE)", "CAST(NULL AS STRING)"
     entries = []
     for c in cols:
+        q = sql_ident(c)
+        num = isinstance(types.get(c), T.NumericType)
+        txt = isinstance(types.get(c), T.StringType)
+        stats = {
+            "count": "a0",
+            "nulls": agg(f"sum(CASE WHEN {q} IS NULL THEN 1 ELSE 0 END)"),
+            "approx_distinct": agg(f"approx_count_distinct({q})"),
+            "min": agg(f"CAST(min({q}) AS DOUBLE)") if num else null_d,
+            "max": agg(f"CAST(max({q}) AS DOUBLE)") if num else null_d,
+            "mean": agg(f"avg({q})") if num else null_d,
+            "stddev": agg(f"stddev({q})") if num else null_d,
+            "min_str": agg(f"min({q})") if txt else null_s,
+            "max_str": agg(f"max({q})") if txt else null_s,
+        }
         entries.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col("__rows").alias("count"),
-                F.col(f"nulls__{c}").alias("nulls"),
-                F.col(f"dist__{c}").alias("approx_distinct"),
-                (F.col(f"min__{c}") if c in numeric else null_d).alias("min"),
-                (F.col(f"max__{c}") if c in numeric else null_d).alias("max"),
-                (F.col(f"mean__{c}") if c in numeric else null_d).alias("mean"),
-                (F.col(f"std__{c}") if c in numeric else null_d).alias("stddev"),
-                (F.col(f"smin__{c}") if c in stringy else null_s).alias("min_str"),
-                (F.col(f"smax__{c}") if c in stringy else null_s).alias("max_str"),
-            )
+            f"named_struct('column', {sql_str(c)}"
+            + "".join(f", '{k}', {v}" for k, v in stats.items())
+            + ")"
         )
-    return wide.select(F.explode(F.array(*entries)).alias("s")).select("s.*")
+    wide = df.selectExpr(*[f"{a} AS a{k}" for k, a in enumerate(aggs)])
+    return wide.selectExpr(f"inline(array({', '.join(entries)}))")
 
 
 # ---------------------------------------------------------------------------

@@ -47,84 +47,75 @@ from valor_spark.functions.errtypes import (
     ErrType,
 )
 from valor_spark.functions.rules import Rule
+from valor_spark.utils import sql_ident, sql_str
 
 VERDICT_PREFIX = "__valor_"
 
 
 # ---------------------------------------------------------------------------
-# violation flattening: verdict struct -> array<struct<path:string, error:string>>
+# violation flattening: verdict structs -> array<struct<rule, path, error>>,
+# generated as ONE SQL expression (one py4j call, parsed in the JVM) instead
+# of a Column tree whose every node and HOF lambda is a driver round trip
 # ---------------------------------------------------------------------------
 
-def _flatten_err(etype: ErrType, err: Column, path: Column) -> Column:
-    """Recursively flatten an error payload to ``array<struct<path, error>>``.
+_EMPTY = "CAST(array() AS array<struct<rule:string,path:string,error:string>>)"
+
+
+def _flatten_sql(
+    etype: ErrType, err: str, path: list[str], rule: str, depth: int = 0
+) -> str:
+    """SQL flattening an error payload to ``array<struct<rule, path,
+    error>>``.
 
     Mirrors the nested ``Maybe`` / record / per-element error shapes of the
     tutorial (Valor.hs:619-671): records contribute ``.field`` path segments,
-    checkN elements contribute ``[i]`` segments, NULL (=Nothing) contributes
-    no violations.
-    """
-    entry_t = "array<struct<path:string,error:string>>"
+    checkN elements contribute ``[i]`` segments, map entries ``[key]``
+    segments, NULL (=Nothing) contributes no violations.  ``path`` holds SQL
+    string expressions concatenated into the path; lambda variables carry
+    ``depth`` so nested transforms never shadow each other."""
+
+    def entry(error: str) -> str:
+        p = f"concat({', '.join(path)})" if path else "''"
+        return f"named_struct('rule', {rule}, 'path', {p}, 'error', CAST({error} AS STRING))"
+
+    v, i = f"__v{depth}", f"__i{depth}"
     if isinstance(etype, EString):
-        return F.array(
-            F.struct(path.alias("path"), err.cast("string").alias("error"))
-        ).cast(entry_t)
+        return f"array({entry(err)})"
     if isinstance(etype, EArray):
-        return F.transform(
-            err,
-            lambda e: F.struct(path.alias("path"), e.cast("string").alias("error")),
-        ).cast(entry_t)
+        return f"transform({err}, {v} -> {entry(v)})"
     if isinstance(etype, ENullable):
-        return F.when(err.isNull(), F.array().cast(entry_t)).otherwise(
-            _flatten_err(etype.inner, err, path)
-        )
+        inner = _flatten_sql(etype.inner, err, path, rule, depth)
+        return f"CASE WHEN {err} IS NULL THEN {_EMPTY} ELSE {inner} END"
     if isinstance(etype, ERecord):
         parts = [
-            _flatten_err(
-                ft,
-                err.getField(fname),
-                F.concat(path, F.lit(f".{fname}")),
-            )
-            for fname, ft in etype.fields.items()
+            _flatten_sql(ft, f"{err}.{sql_ident(f)}", path + [sql_str(f".{f}")], rule, depth)
+            for f, ft in etype.fields.items()
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = F.concat(out, p)
-        return out
+        return f"concat({', '.join(parts)})"
     if isinstance(etype, EArrayOf):
-        nested = F.transform(
-            err,
-            lambda e, i: _flatten_err(
-                etype.inner, e, F.concat(path, F.lit("["), i.cast("string"), F.lit("]"))
-            ),
+        inner = _flatten_sql(
+            etype.inner, v, path + ["'['", f"CAST({i} AS STRING)", "']'"], rule, depth + 1
         )
-        return F.flatten(nested).cast(entry_t)
+        return f"flatten(transform({err}, ({v}, {i}) -> {inner}))"
     if isinstance(etype, EMapOf):
-        # per-entry map payloads (checkN_map): keys become [key] path segments
-        nested = F.transform(
-            F.map_entries(err),
-            lambda kv: _flatten_err(
-                etype.inner,
-                kv.getField("value"),
-                F.concat(path, F.lit("["), kv.getField("key").cast("string"), F.lit("]")),
-            ),
+        inner = _flatten_sql(
+            etype.inner, f"{v}.value", path + ["'['", f"CAST({v}.key AS STRING)", "']'"],
+            rule, depth + 1,
         )
-        return F.flatten(nested).cast(entry_t)
+        return f"flatten(transform(map_entries({err}), {v} -> {inner}))"
     raise TypeError(f"cannot flatten payload type {etype}")
 
 
-def violations_array(rule_name: str, etype: ErrType, verdict: Column) -> Column:
-    """``array<struct<rule,path,error>>`` for one named rule's verdict."""
-    flat = _flatten_err(etype, verdict.getField(ERR), F.lit(""))
-    entries = F.transform(
-        flat,
-        lambda e: F.struct(
-            F.lit(rule_name).alias("rule"),
-            e.getField("path").alias("path"),
-            e.getField("error").alias("error"),
-        ),
-    )
-    empty = F.array().cast("array<struct<rule:string,path:string,error:string>>")
-    return F.when(verdict.getField(WRONG), entries).otherwise(empty)
+def violations_sql(rules: Mapping[str, Rule]) -> str:
+    """The per-row violation array over every named rule's verdict column:
+    ``concat(CASE WHEN <verdict>.wrong THEN <flattened err> ELSE [] END,
+    ...)``."""
+    parts = []
+    for n, rule in rules.items():
+        verdict = sql_ident(VERDICT_PREFIX + n)
+        flat = _flatten_sql(rule.etype, f"{verdict}.{ERR}", [], sql_str(n))
+        parts.append(f"CASE WHEN {verdict}.{WRONG} THEN {flat} ELSE {_EMPTY} END")
+    return f"concat({', '.join(parts)})"
 
 
 # ---------------------------------------------------------------------------
@@ -204,10 +195,9 @@ class ValidationResult:
 
     @property
     def _wrong_any(self) -> Column:
-        out = F.lit(False)
-        for n in self.rule_names:
-            out = out | F.col(VERDICT_PREFIX + n).getField(WRONG)
-        return out
+        return F.expr(
+            " OR ".join(f"{sql_ident(VERDICT_PREFIX + n)}.{WRONG}" for n in self.rule_names)
+        )
 
     def valid(self) -> DataFrame:
         """Rows that passed every rule, original columns only (``Valid i`` /
@@ -220,7 +210,7 @@ class ValidationResult:
     def violations(self, barrier: bool = True) -> DataFrame:
         """Exploded violation rows: ``keys... , shard?, rule, path, error``.
         One pass: per-row concat of per-rule violation arrays, then a single
-        explode — no per-rule unions/scans.
+        ``inline`` (explode into columns) — no per-rule unions/scans.
 
         ``barrier`` (default on): materialize the slim
         ``(keys, violation-array)`` frame — VIOLATING rows only — through a
@@ -235,21 +225,12 @@ class ValidationResult:
         keep = list(self.key_cols)
         if self.shard_col and self.shard_col not in keep:
             keep.append(self.shard_col)
-        arr = F.col("__violations")
         slim = self.annotated.filter(self._wrong_any).select(
-            *keep, arr.alias("__v_arr")
+            *keep, F.expr("__violations AS __v_arr")
         )
         if barrier:
             slim = slim.localCheckpoint(eager=False)
-        return (
-            slim.select(*keep, F.explode(F.col("__v_arr")).alias("v"))
-            .select(
-                *keep,
-                F.col("v.rule").alias("rule"),
-                F.col("v.path").alias("path"),
-                F.col("v.error").alias("error"),
-            )
-        )
+        return slim.select(*keep, F.expr("inline(__v_arr)"))
 
 
 def sample_violations(violations: DataFrame, per_rule: int = 10) -> DataFrame:
@@ -300,18 +281,12 @@ def validate(
         ctx = stage.apply(ctx)
 
     # one select: every named rule's verdict materialized exactly once
-    row = F.struct(*[F.col(c) for c in ctx.columns])
+    row = F.expr(f"struct({', '.join(sql_ident(c) for c in ctx.columns)})")
     verdicts = [rules[n](row).alias(VERDICT_PREFIX + n) for n in rules]
     annotated = ctx.select(*input_cols, *verdicts)
 
     # second select: assemble the per-row violation array from the verdicts
-    vio_arrays = [
-        violations_array(n, rules[n].etype, F.col(VERDICT_PREFIX + n)) for n in rules
-    ]
-    vio = vio_arrays[0]
-    for a in vio_arrays[1:]:
-        vio = F.concat(vio, a)
-    annotated = annotated.withColumn("__violations", vio)
+    annotated = annotated.withColumn("__violations", F.expr(violations_sql(rules)))
 
     return ValidationResult(
         annotated=annotated,

@@ -13,7 +13,7 @@ import time
 from dataclasses import dataclass, field as dc_field
 from typing import Literal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,10 +47,18 @@ ALLOWED_CODECS = ["pcm_s16le", "wav"]
 UNSHARDED = -2
 
 
-def _shard_col(has_shard: bool):
+def _shard_sql(has_shard: bool) -> str:
     if not has_shard:
-        return F.lit(0).cast("int")
-    return F.coalesce(F.col("shard").cast("int"), F.lit(UNSHARDED))
+        return "CAST(0 AS INT)"
+    return f"coalesce(CAST(shard AS INT), {UNSHARDED})"
+
+
+def _in_shards(shard_sql: str, shards) -> Column:
+    """``shard_sql IN (shards...)`` as one SQL expression (``isin`` builds
+    one literal Column per shard, a driver round trip each)."""
+    if not shards:
+        return F.lit(False)
+    return F.expr(f"{shard_sql} IN ({', '.join(str(int(s)) for s in shards)})")
 
 
 #: speech-rate plausibility window (words per minute).  Conversational
@@ -557,7 +565,7 @@ def shard_fingerprint_frame(
     raw_shard = (
         F.col("shard").cast("int") if has_shard else F.lit(0).cast("int")
     )
-    return clips.groupBy(_shard_col(has_shard).alias("shard")).agg(
+    return clips.groupBy(F.expr(_shard_sql(has_shard)).alias("shard")).agg(
         F.count(F.lit(1)).alias("rows"),
         F.bit_xor(F.xxhash64(*fp_cols)).alias("fingerprint"),
         F.min(raw_shard).alias("raw_min"),
@@ -590,9 +598,11 @@ class PipelineReport:
 
     def release(self) -> None:
         """Unpersist the cached per-shard fingerprint frame.  Call when done
-        with the report in a long-lived session — ``shard_verdicts``/``rows``
-        derive from it and would otherwise pin executor storage memory per
-        run_pipeline call (later actions still work, they just recompute)."""
+        with the report in a long-lived session — ``run_pipeline`` collects
+        it once (``rows`` is already a number), but the lazy
+        ``shard_verdicts`` join it again and would otherwise pin executor
+        storage memory per run_pipeline call (later actions still work,
+        they just recompute)."""
         if self._persisted is not None:
             self._persisted.unpersist()
             self._persisted = None
@@ -643,8 +653,8 @@ def _sharded_stage(
     violation rows.
 
     ``keys`` maps each input shard to its resume key (rows, fingerprint
-    XOR the stage config); it is empty without a checkpoint dir.  Shards
-    whose key matches the manifest are skipped by filtering the scan;
+    XOR the stage config).  Shards whose key matches the manifest are
+    skipped by filtering the scan;
     ``validate(prepare(todo), rules)`` covers the rest, whose violations
     land partition-wise in the stage dir with one metrics record per
     recomputed shard."""
@@ -655,7 +665,7 @@ def _sharded_stage(
     def current_shards(df: DataFrame) -> DataFrame:
         """Read-backs see the whole stage dir — shards REMOVED from the
         input since the previous run must not resurface as violations."""
-        return df.filter(F.col("shard").isin(list(keys)))
+        return df.filter(_in_shards("shard", keys))
 
     if done and len(done) == len(keys):
         return current_shards(
@@ -663,7 +673,7 @@ def _sharded_stage(
         )
     todo = clips
     if done:
-        todo = clips.filter(~_shard_col("shard" in clips.columns).isin(sorted(done)))
+        todo = clips.filter(~_in_shards(_shard_sql("shard" in clips.columns), sorted(done)))
     frame = prepare(todo)
     has_shard = "shard" in frame.columns
     res = validate(
@@ -673,7 +683,7 @@ def _sharded_stage(
         shard_col="shard" if has_shard else None,
     )
     vio = res.violations().select(
-        "clip_id", _shard_col(has_shard).alias("shard"), "rule", "path", "error"
+        "clip_id", F.expr(_shard_sql(has_shard)).alias("shard"), "rule", "path", "error"
     )
     if not manifest:
         return vio
@@ -715,39 +725,41 @@ def run_pipeline(
     (metadata-only columnar read) — at 100 TB that's the difference between
     a KB-scale and a PB-scale stage input.  ``fingerprint_payload`` extends
     the resume fingerprints to the payloads (see
-    :func:`shard_fingerprint_frame`)."""
+    :func:`shard_fingerprint_frame`).
+
+    Spark actions: ONE collect of the persisted per-shard fingerprint frame
+    (shard guard, resume keys and ``report.rows``) and the drift histograms;
+    with ``checkpoint_dir`` also the ``clips_ref`` fingerprint aggregate,
+    per shard-granular stage one violations write plus one per-(shard,
+    rule) count of the written parquet, and the constraints write (its row
+    count observed on the write).  ``violations``, ``shard_verdicts`` and
+    ``stats`` stay lazy."""
     report = PipelineReport()
     run_audio = clips_ref is not None and "pcm_ref" in clips_ref.columns
     manifest = RunManifest(checkpoint_dir) if checkpoint_dir else None
     vio_frames: list[DataFrame] = []
 
-    # persist: this 1-row-per-shard aggregate is consumed up to three times
-    # (resume decisions, verdict assembly, row totals) — without the cache
-    # each use re-scans the input's metadata columns
+    # persist: the verdict join reads this 1-row-per-shard aggregate again;
+    # without the cache it would re-scan the input's metadata columns.  Its
+    # ONE collect feeds the shard guard, the resume keys and the row total.
     shards_fp = shard_fingerprint_frame(clips, fingerprint_payload).persist()
     report._persisted = shards_fp
+    shard_rows = shards_fp.collect()
     # Negative shard values would collide with the GLOBAL (-1) / UNSHARDED
     # (-2) sentinels — a real shard=-1's violations would merge into the
-    # global verdict row and resume keys would alias.  Fail fast at intake,
-    # riding the fingerprint aggregate the run needs anyway: the probe
-    # materializes the persisted 1-row-per-shard frame (every later consumer
-    # hits the cache), so the guard costs zero extra input scans — it used
-    # to be its own full pass over the shard column.
-    if "shard" in clips.columns:
-        # raw_min is NULL for the NULL-shard (tolerated, revalidated) group;
-        # any non-NULL negative means a genuine negative shard value
-        neg = (
-            shards_fp.filter(F.col("raw_min") < 0)
-            .select("raw_min")
-            .limit(1)
-            .collect()
+    # global verdict row and resume keys would alias.  Fail fast at intake.
+    # raw_min is NULL for the NULL-shard (tolerated, revalidated) group;
+    # any non-NULL negative means a genuine negative shard value.
+    neg = [r["raw_min"] for r in shard_rows if r["raw_min"] is not None and r["raw_min"] < 0]
+    if neg:
+        raise ValueError(
+            f"run_pipeline: shard values must be non-negative (found "
+            f"{neg[0]}); negative values are reserved for the "
+            f"GLOBAL ({GLOBAL_SHARD}) and UNSHARDED ({UNSHARDED}) sentinels"
         )
-        if neg:
-            raise ValueError(
-                f"run_pipeline: shard values must be non-negative (found "
-                f"{neg[0]['raw_min']}); negative values are reserved for the "
-                f"GLOBAL ({GLOBAL_SHARD}) and UNSHARDED ({UNSHARDED}) sentinels"
-            )
+    raw_stats = {
+        int(r["shard"]): (int(r["rows"]), int(r["fingerprint"])) for r in shard_rows
+    }
 
     # Reference-table fingerprint: the constraints (referential) and audio
     # stages consume clips_ref, so their resume validity must cover it —
@@ -757,21 +769,15 @@ def run_pipeline(
     # the resume contract (same trade as the clips-side fingerprint — the
     # default keeps the resume decision a metadata-only read).
     ref_rows, ref_fp = 0, 0
-    raw_stats: dict[int, tuple[int, int]] = {}
-    if manifest:
-        if clips_ref is not None:
-            ref_cols = _fingerprint_cols(
-                clips_ref, ("clip_id", "transcript_ref"), "pcm_ref", fingerprint_payload
-            )
-            r = clips_ref.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(F.bit_xor(F.xxhash64(*ref_cols)), F.lit(0)).alias("fp"),
-            ).collect()[0]
-            ref_rows, ref_fp = int(r["rows"]), int(r["fp"])
-        raw_stats = {
-            int(r["shard"]): (int(r["rows"]), int(r["fingerprint"]))
-            for r in shards_fp.collect()
-        }
+    if manifest and clips_ref is not None:
+        ref_cols = _fingerprint_cols(
+            clips_ref, ("clip_id", "transcript_ref"), "pcm_ref", fingerprint_payload
+        )
+        r = clips_ref.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.bit_xor(F.xxhash64(*ref_cols)), F.lit(0)).alias("fp"),
+        ).collect()[0]
+        ref_rows, ref_fp = int(r["rows"]), int(r["fp"])
 
     def stage_keys(cfg: int) -> dict[int, tuple[int, int]]:
         """Per-shard resume keys with a stage's config hash mixed in:
@@ -785,10 +791,7 @@ def run_pipeline(
     report.schema_errors = C.schema_violations(core, CLIPS_SCHEMA)
     if report.schema_errors:
         vio_frames.append(
-            spark.createDataFrame(
-                [(None, None, "schema", "", e) for e in report.schema_errors],
-                C.VIOLATION_SCHEMA,
-            )
+            C.global_violations(spark, [("schema", "", e) for e in report.schema_errors])
         )
     report.stage_wall_s["schema"] = time.time() - t0
 
@@ -835,13 +838,15 @@ def run_pipeline(
         for p in parts[1:]:
             cons = cons.unionByName(p)
         if manifest:
-            manifest.write_violations(stage, cons)
-            cons = manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-            n = cons.count()
+            # the row count rides the write as an observed metric — no
+            # second job reading the written parquet back to count it
+            written = Observation()
+            manifest.write_violations(stage, cons.observe(written, F.count(F.lit(1)).alias("n")))
             manifest.mark_global(
-                stage, rows=key_rows, violations=n,
+                stage, rows=key_rows, violations=written.get["n"],
                 wall_s=time.time() - t0, fingerprint=cons_fp,
             )
+            cons = manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
         vio_frames.append(cons)
     report.stats = C.column_stats(
         clips.select("clip_id", "sr_hz", "dur_ms", "codec", "transcript")
@@ -881,15 +886,14 @@ def run_pipeline(
             },
             categorical={"sr_hz": dict(threshold=0.2, pred=F.col("sr_hz") > 0)},
         )
-        for d in report.drift:
-            if not d.passed:
-                vio_frames.append(
-                    spark.createDataFrame(
-                        [(None, None, f"drift_{d.metric}", f".{d.column}",
-                          f"DriftExceeded:{d.metric}={d.value:.4f}>{d.threshold}")],
-                        C.VIOLATION_SCHEMA,
-                    )
-                )
+        drifted = [
+            (f"drift_{d.metric}", f".{d.column}",
+             f"DriftExceeded:{d.metric}={d.value:.4f}>{d.threshold}")
+            for d in report.drift
+            if not d.passed
+        ]
+        if drifted:
+            vio_frames.append(C.global_violations(spark, drifted))
         report.stage_wall_s["drift"] = time.time() - t0
 
     # ---- stage 5: verdict assembly ---------------------------------------
@@ -926,10 +930,6 @@ def run_pipeline(
         F.lit(0).cast("long").alias("fingerprint"),
     )
     report.shard_verdicts = per_shard.unionByName(global_verdict)
-    report.rows = (
-        global_rows
-        if raw_stats
-        else sum(r["rows"] for r in shards_fp.select("rows").collect())
-    )
+    report.rows = global_rows
     report.stage_wall_s["verdicts"] = time.time() - t0
     return report

@@ -1,9 +1,20 @@
-"""Deployment helpers."""
+"""Deployment helpers, and quoting for expressions built as SQL text."""
 
 from __future__ import annotations
 
 import os
 import zipfile
+
+
+def sql_ident(name: str) -> str:
+    """A column or field name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """A Python string as a SQL string literal (Spark's default backslash
+    escapes)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def spread_width(
