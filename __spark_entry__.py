@@ -2118,8 +2118,10 @@ def _sql_winnow_cte(k: int = 4, w: int = 4, src: str = "documents",
                     lead: str = "WITH") -> str:
     """CTE chain ending in ``win(doc_id, kh, fp)``: rolling k-token-gram
     16-hex md5 stream, then winnowing min-per-w-window selection (matches
-    operators/text.py::kgram_hashes_t/winnow_t — DuckDB's ``kh[j:j+n]``
-    slice clamps at the array end exactly like Spark's ``slice``).
+    operators/text.py::_winnow_arrow and its Column reference
+    tests/reference_fingerprints.py::kgram_hashes_t/winnow_t — DuckDB's
+    ``kh[j:j+n]`` slice clamps at the array end exactly like Spark's
+    ``slice``).
     ``src``/``lead`` let the chain compose mid-WITH over a prior CTE."""
     toks = _SQL_TOKENS.format(col="text")
     return f"""

@@ -35,6 +35,18 @@ def test_pipeline_empty_clips(spark):
     assert rep.shard_verdicts.count() == 0
 
 
+def test_pipeline_empty_clips_checkpointed(spark, tmp_path):
+    """Empty input into a checkpoint dir: no shard to run or read, and the
+    resume serves the committed (empty) constraints run."""
+    df = spark.createDataFrame([], CLIPS_SCHEMA)
+    for skipped in ([], [-1]):
+        rep = run_pipeline(spark, df, None, checkpoint_dir=str(tmp_path))
+        assert rep.skipped == {"row_rules": [], "constraints": skipped}
+        assert rep.violations.count() == 0
+        assert rep.shard_verdicts.count() == 0
+        rep.release()
+
+
 def test_all_null_column_rules(spark):
     df = spark.createDataFrame(
         [("a", None), ("b", None)], "clip_id string, dur_ms int"

@@ -137,14 +137,17 @@ def test_fingerprint_invalidation_recomputes_changed_shard(
     ).count()
     rows_shard3 = mutated.filter(F.col("shard") == 3).count()
     assert n_shard3_empty == rows_shard3  # every shard-3 transcript now empty
-    # and no duplicated rows for shard 3 (dynamic overwrite, not append)
+    # the committed stage rows serve shard 3 from the new run only
+    from valor_spark.operators.constraints import VIOLATION_SCHEMA
     from valor_spark.plans.checkpoint import RunManifest
 
-    stage_rows = spark.read.parquet(
-        RunManifest(ckpt).violations_path("row_rules")
-    )
+    stage_rows = RunManifest(ckpt).read_violations(spark, "row_rules", VIOLATION_SCHEMA)
+    # the superseded run's shard-3 rows carry the unmutated clip ids
+    assert stage_rows.filter(
+        (F.col("shard") == 3) & ~F.col("clip_id").endswith("_x")
+    ).count() == 0
     # the planted hot key legitimately repeats within a shard; any OTHER
-    # duplicated violation row would mean append-instead-of-overwrite
+    # duplicated violation row would mean both runs' shard-3 rows are served
     dup_check = (
         stage_rows.filter(~F.col("clip_id").startswith("clip_hotkey"))
         .groupBy("clip_id", "shard", "rule", "error")
@@ -247,7 +250,7 @@ def test_resume_invalidated_by_ref_table_change(spark, tmp_path_factory):
     # shrink the ref: same clips -> referential orphans must now appear
     ref_small = ref_full.filter(F.col("clip_id") > "clean_0009")
     r2 = run_pipeline(spark, clips, ref_small, checkpoint_dir=ckpt)
-    assert "constraints" not in r2.skipped  # recomputed, not served stale
+    assert r2.skipped["constraints"] == []  # recomputed, not served stale
     got = r2.violations.filter(F.col("rule") == "referential").count()
     assert got == 10  # clean_0000..0009 lost their ref rows
 
@@ -345,8 +348,10 @@ def test_checkpoint_manifest_has_lineage(spark, tables, tmp_path_factory):
 
 #: Spark jobs of one checkpointed run_pipeline over the module tables
 #: (inputs already cached).  A change here is a change in the number of
-#: actions the pipeline takes — fingerprint, stage writes, metric reads.
-RUN_PIPELINE_JOBS = 22
+#: actions the pipeline takes — fingerprint, stage writes, metric counts.
+#: The row-rule and audio writes are one unpartitioned job each (no
+#: pre-write shuffle).
+RUN_PIPELINE_JOBS = 20
 
 
 def test_checkpointed_run_job_count_and_observed_constraint_count(
@@ -558,6 +563,130 @@ def test_resume_keeps_violations_of_shards_absent_from_a_run(
     assert r3.violations.filter(F.col("rule") == rule).count() == 2
 
 
+def _outputs(rep):
+    """A report's violation and verdict rows, as multisets."""
+    from collections import Counter
+
+    out = (
+        Counter(map(tuple, rep.violations.collect())),
+        Counter(map(tuple, rep.shard_verdicts.collect())),
+    )
+    rep.release()
+    return out
+
+
+def test_resume_after_crash_between_write_and_commit(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A stage run that dies after writing its run directory but before the
+    manifest append commits nothing: a resume over the first input serves
+    the first run's rows, identical to a cold run, and the next commit
+    sweeps the uncommitted directory."""
+    from valor_spark.plans.checkpoint import RunManifest
+
+    dirty = _clean_clips(spark).withColumn(
+        "transcript",
+        F.when(F.col("shard") == 1, F.lit("")).otherwise(F.col("transcript")),
+    )
+    cold = _outputs(
+        run_pipeline(spark, dirty, None, checkpoint_dir=str(tmp_path_factory.mktemp("cold")))
+    )
+    assert sum(cold[0].values()) == 10
+    ckpt = str(tmp_path_factory.mktemp("ckpt_crash"))
+    _outputs(run_pipeline(spark, dirty, None, checkpoint_dir=ckpt))
+
+    def crash(self, records):
+        raise RuntimeError("injected crash before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(RunManifest, "append", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, _clean_clips(spark), None, checkpoint_dir=ckpt)
+    stage_dir = RunManifest(ckpt).violations_path("row_rules")
+    assert len(os.listdir(stage_dir)) == 2  # the first run's + the uncommitted one
+
+    resumed = run_pipeline(spark, dirty, None, checkpoint_dir=ckpt)
+    assert resumed.skipped["row_rules"] == [0, 1]
+    assert _outputs(resumed) == cold
+    # a committed run over the fixed input supersedes shard 1 and sweeps
+    # the uncommitted directory; shard 0 stays in the first run's
+    fixed = run_pipeline(spark, _clean_clips(spark), None, checkpoint_dir=ckpt)
+    assert fixed.skipped["row_rules"] == [0]
+    assert fixed.violations.count() == 0
+    fixed.release()
+    assert len(os.listdir(stage_dir)) == 2
+
+
+def test_resume_after_manifest_truncated_mid_line(spark, tmp_path_factory):
+    """A manifest cut mid-line (a crash mid-append) loses the torn record
+    and every one after it: those stages recompute, the resume matches a
+    cold run, and the next append does not run into the torn line."""
+    from valor_spark.plans.checkpoint import GLOBAL_SHARD, RunManifest
+
+    clips, ref = _audio_clips_ref(spark)
+    clips = clips.withColumn(
+        "transcript",
+        F.when(F.col("shard") == 1, F.lit(""))
+        .when(F.col("shard") == 2, F.lit("other"))
+        .otherwise(F.col("transcript")),
+    )
+    ref = ref.filter(F.col("clip_id") != "c3")  # a referential orphan
+    cold = _outputs(
+        run_pipeline(spark, clips, ref, checkpoint_dir=str(tmp_path_factory.mktemp("cold")))
+    )
+    ckpt = str(tmp_path_factory.mktemp("ckpt_torn"))
+    _outputs(run_pipeline(spark, clips, ref, checkpoint_dir=ckpt))
+    manifest = RunManifest(ckpt)
+    lines = open(manifest.path, "rb").read().split(b"\n")
+    # header, 4 row_rules records, then the constraints record: cut it
+    assert b'"constraints"' in lines[5]
+    cut = sum(len(line) + 1 for line in lines[:5]) + len(lines[5]) // 2
+    with open(manifest.path, "r+b") as f:
+        f.truncate(cut)
+
+    resumed = run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    assert resumed.skipped == {"row_rules": [0, 1, 2, 3], "constraints": [], "audio": []}
+    assert _outputs(resumed) == cold
+    again = run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    assert again.skipped == {
+        "row_rules": [0, 1, 2, 3], "constraints": [GLOBAL_SHARD], "audio": [0, 1, 2, 3]
+    }
+    assert _outputs(again) == cold
+
+
+def test_parent_format_checkpoint_refused(spark, tmp_path):
+    """A run directory of the shard-partitioned layout, whose manifest has
+    no format header, is refused with a named error instead of being
+    misread."""
+    import json
+
+    from valor_spark.plans.checkpoint import CheckpointFormatError
+
+    (tmp_path / "violations" / "stage=row_rules" / "shard=0").mkdir(parents=True)
+    (tmp_path / "manifest.jsonl").write_text(
+        json.dumps(
+            {"stage": "row_rules", "shard": 0, "rows": 20, "violations": 0,
+             "wall_s": 0.0, "fingerprint": 1, "finished_at": 0.0, "by_rule": {}}
+        ) + "\n"
+    )
+    with pytest.raises(CheckpointFormatError, match="fresh checkpoint_dir"):
+        run_pipeline(spark, _clean_clips(spark), None, checkpoint_dir=str(tmp_path))
+
+
+def test_failed_run_releases_fingerprint_cache(spark):
+    """A run that raises leaves no report to release, so it must not leave
+    its fingerprint frame cached."""
+    from valor_spark.plans.pipeline import shard_fingerprint_frame
+
+    clips = _clean_clips(spark).withColumn(
+        "shard", F.when(F.col("clip_id") == "clean_0001", F.lit(-1)).otherwise(F.col("shard"))
+    )
+    with pytest.raises(ValueError, match="non-negative"):
+        run_pipeline(spark, clips, None)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(shard_fingerprint_frame(clips)._jdf).isEmpty()
+
+
 def test_negative_shard_rejected(spark):
     """Negative shard values collide with the GLOBAL (-1) / UNSHARDED (-2)
     sentinels — intake fails fast instead of corrupting verdicts."""
@@ -574,9 +703,9 @@ def test_negative_shard_rejected(spark):
 
 
 def test_uri_run_dir_rejected():
-    """manifest.jsonl append and shard-partition clearing are local-FS
-    operations — a URI-schemed run_dir would silently no-op rmtree on
-    object stores and serve stale shard violations."""
+    """The manifest append and the sweep of uncommitted run directories
+    are local-FS operations — a URI-schemed run_dir would make the sweep a
+    silent no-op on object stores."""
     import pytest as _pytest
 
     from valor_spark.plans.checkpoint import RunManifest

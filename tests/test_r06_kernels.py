@@ -8,17 +8,21 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from valor_spark.operators.dedup import (
-    _list_column_tokens,
-    _token_hashes_np,
-    _token_hashes_offsets,
-    tokens,
-)
-from valor_spark.operators.text import (
-    _winnow_arrow,
+from reference_fingerprints import (
     kgram_hashes_t,
+    list_column_tokens,
+    simhash,
+    token_hash,
+    token_hashes_np,
     winnow_t,
 )
+from valor_spark.operators.dedup import (
+    _simhash_arrow,
+    _token_hashes_offsets,
+    simhash_table,
+    tokens,
+)
+from valor_spark.operators.text import _winnow_arrow
 
 
 CORPUS = [
@@ -39,8 +43,8 @@ def test_token_hashes_offsets_matches_string_fold():
          ["mixed", "ascïi", "run"]],
         type=pa.list_(pa.string()),
     )
-    flat, lens0, starts0 = _list_column_tokens(col)
-    hs0 = _token_hashes_np(flat)
+    flat, lens0, starts0 = list_column_tokens(col)
+    hs0 = token_hashes_np(flat)
     hs1, lens1, starts1 = _token_hashes_offsets(col)
     assert (hs0 == hs1).all()
     assert (lens0 == lens1).all() and (starts0 == starts1).all()
@@ -50,8 +54,6 @@ def test_token_hashes_offsets_non_ascii_vectorized_fold(spark):
     """The vectorized non-ASCII fallback must reproduce Spark's own
     split('')/ascii fold for CJK, combining-mark, and non-BMP tokens — the
     fold is per codepoint, so an emoji folds as ONE unit."""
-    from valor_spark.operators.dedup import token_hash
-
     toks = [
         "漢字テスト", "русский", "mixé", "🚀rocket", "a🚀b", "🚀",
         "éclair", "plain", "ümlaut-ö", "ḟancy\U0001F600end",
@@ -71,6 +73,37 @@ def test_token_hashes_offsets_empty():
     col = pa.array([], type=pa.list_(pa.string()))
     hs, lens, starts = _token_hashes_offsets(col)
     assert len(hs) == 0 and len(lens) == 0 and list(starts) == [0]
+
+
+def test_simhash_table_matches_column_fold(spark):
+    """The SimHash kernel against the Column fold on non-ASCII (CJK,
+    combining marks, non-BMP), empty, whitespace-only and NULL texts."""
+    rows = CORPUS + [
+        (9, "漢字 テスト 漢字 🚀rocket a🚀b"),
+        (10, "   "),
+        (11, "ḟancy\U0001F600end mixé ümlaut-ö 🚀"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    want = {
+        r["doc_id"]: r["h"]
+        for r in df.select("doc_id", simhash(F.col("text")).alias("h")).collect()
+    }
+    got = {r["doc_id"]: r["simhash"] for r in simhash_table(df).collect()}
+    assert got == want
+    # an empty token set sets every bit (0 >= 0); a NULL text stays NULL
+    assert got[5] == got[10] == (1 << 32) - 1 and got[6] is None
+    # one batch that ends in rows without tokens, whatever batches Spark cuts
+    toks = {
+        r["doc_id"]: r["t"]
+        for r in df.select("doc_id", F.array_distinct(tokens(F.col("text"))).alias("t")).collect()
+    }
+    ids = [1, 7, 5, 6]
+    batch = pa.record_batch(
+        [pa.array(ids, pa.int32()), pa.array([toks[i] for i in ids], pa.list_(pa.string()))],
+        names=["doc_id", "__toks"],
+    )
+    (out,) = _simhash_arrow(32, "doc_id")([batch])
+    assert out.column("sh").to_pylist() == [want[i] for i in ids]
 
 
 def test_winnow_kernel_matches_column_chain(spark):

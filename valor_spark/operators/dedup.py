@@ -6,9 +6,13 @@
   set-overlap Jaccard; all DataFrame ops
 * MinHash + LSH          — deterministic polynomial token hashes ->
   k minhashes -> banded LSH buckets -> candidate pairs verified by true
-  Jaccard; built from F.transform/F.aggregate (no Python UDFs)
-* SimHash                — 64-bit sign-sum fingerprint over token hashes,
-  near-dup = Hamming distance <= k
+  Jaccard; the hashes, signatures and buckets are one vectorized
+  mapInArrow integer pass over JVM-tokenized rows
+* SimHash                — sign-sum fingerprint over token hashes (the
+  same mapInArrow integer pass), near-dup = Hamming distance <= k
+
+The Column-expression folds these kernels replicate bit for bit live in
+``tests/reference_fingerprints.py`` as their oracle.
 
 Scale notes: every operator shuffles on a *hash/bucket key*, never on raw
 text; candidate generation is bounded (frequency cap / LSH bands) so the
@@ -19,7 +23,7 @@ scale path for near-dup (tunable bands/rows trade recall vs cost).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from valor_spark.operators.text import tokens
@@ -95,76 +99,13 @@ def ngram_jaccard_pairs(
     return out
 
 
-def token_hash(tok: Column) -> Column:
-    """Deterministic polynomial rolling hash over character codes:
-    fold (acc*31 + ascii(char)) % MOD.  Chosen over xxhash64 so an
-    engine-independent oracle (DuckDB list_reduce) can reproduce it."""
-    chars = F.split(tok, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % MOD,
-    )
-
-
-def _token_hashes_np(tokens_list):
-    """Vectorized :func:`token_hash` over a flat Python list of tokens —
-    EXACT integer replica of the Column fold ``(acc*31 + ascii(ch)) % MOD``
-    (numpy int64; products stay < 2^35, far from overflow).
-
-    Character semantics match Spark exactly: ``F.split(tok, '')`` splits
-    into CODEPOINTS (Spark strings are UTF8String; regex ops are
-    codepoint-aware — verified: ``split('a🚀b','')`` = [a, 🚀, b]) and
-    ``F.ascii`` returns the codepoint's numeric value (``ascii('🚀')`` =
-    128640, not a surrogate), so the fast path folds UTF-8 BYTES only when
-    the batch is pure ASCII (bytes == codepoints there) and anything else
-    folds ``ord(ch)`` per character."""
-    import numpy as np
-
-    n = len(tokens_list)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    joined = "".join(tokens_list)
-    if not joined.isascii():
-        out = np.zeros(n, dtype=np.int64)
-        for i, t in enumerate(tokens_list):
-            acc = 0
-            for ch in t:
-                acc = (acc * 31 + ord(ch)) % MOD
-            out[i] = acc
-        return out
-    data = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).astype(np.int64)
-    lens = np.fromiter((len(t) for t in tokens_list), dtype=np.int64, count=n)
-    lmax = int(lens.max()) if n else 0
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    acc = np.zeros(n, dtype=np.int64)
-    for j in range(lmax):
-        m = lens > j
-        idx = starts[m] + j
-        acc[m] = (acc[m] * 31 + data[idx]) % MOD
-    return acc
-
-
-def _list_column_tokens(col):
-    """(flat token list, per-row offsets) from an Arrow list<string> column."""
-    import numpy as np
-
-    lens = np.asarray(
-        col.value_lengths().fill_null(0)  # null rows -> 0 tokens
-        if col.null_count
-        else col.value_lengths()
-    ).astype(np.int64)
-    flat = col.flatten().to_pylist()
-    starts = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    return flat, lens, starts
-
-
 def _token_hashes_offsets(col):
     """``(per-token int64 hashes, per-row token counts, per-row offsets)``
-    for an Arrow ``list<string>`` column — the :func:`token_hash` fold
-    computed straight off the Arrow byte buffers.
+    for an Arrow ``list<string>`` column — the polynomial token hash
+    ``(acc*31 + codepoint) % MOD`` folded straight off the Arrow byte
+    buffers (the ``token_hash`` Column fold of
+    ``tests/reference_fingerprints.py``, which an engine-independent oracle
+    such as DuckDB's ``list_reduce`` can also reproduce).
 
     The list's flattened string values are ONE contiguous UTF-8 buffer plus
     an offsets array, so the ASCII fast path never materializes a Python
@@ -242,7 +183,8 @@ def _token_hashes_offsets(col):
 
 def _simhash_arrow(bits: int, id_name: str):
     """mapInArrow kernel over ``(id, __toks)`` -> ``(id, simhash)``; exact
-    integer replica of :func:`simhash` (bit one-counts + majority vote —
+    integer replica of the ``simhash`` Column fold in
+    ``tests/reference_fingerprints.py`` (bit one-counts + majority vote —
     both order-free over the distinct-token set)."""
 
     def fn(batches):
@@ -255,16 +197,18 @@ def _simhash_arrow(bits: int, id_name: str):
             hs, lens, starts = _token_hashes_offsets(toks_col)
             n_rows = batch.num_rows
             if len(hs):
-                # clip: reduceat raises on a start == len (trailing empty
-                # segment) and copies the next row for any empty segment —
-                # both fixed by clipping then zeroing empty segments.
+                # a trailing 0 makes a start == len(hs) (trailing empty
+                # rows) a valid index without cutting the last token off
+                # the row before them; reduceat returns one element for
+                # any empty segment, which the zeroing below discards.
                 # One 1D reduceat per bit: the 2D (tokens x bits) matrix
                 # variant materializes 32x the token count and measured 16x
                 # slower (4.2 s vs 0.26 s single-core at 2.7M tokens)
-                seg = np.minimum(starts[:-1], len(hs) - 1)
+                padded = np.append(hs, 0)
+                seg = starts[:-1]
                 ones = np.empty((n_rows, bits), dtype=np.int64)
                 for b in range(bits):
-                    ones[:, b] = np.add.reduceat((hs >> b) & 1, seg)
+                    ones[:, b] = np.add.reduceat((padded >> b) & 1, seg)
                 ones[lens == 0] = 0
             else:
                 ones = np.zeros((n_rows, bits), dtype=np.int64)
@@ -286,8 +230,10 @@ def _simhash_arrow(bits: int, id_name: str):
 
 def _minhash_bands_arrow(k: int, bands: int, id_name: str):
     """mapInArrow kernel over ``(id, toks)`` -> exploded ``(id, band,
-    bucket)``; exact integer replica of ``minhash_signature_from_tokens`` +
-    the per-band polynomial combine in :func:`minhash_lsh_pairs`.  Rows
+    bucket)``; exact integer replica of the
+    ``minhash_signature_from_tokens`` Column fold in
+    ``tests/reference_fingerprints.py`` + the per-band polynomial combine
+    in :func:`minhash_lsh_pairs`.  Rows
     with empty token sets emit nothing (callers filter them anyway)."""
     coeffs = minhash_coeffs(k)
     rows_per_band = k // bands
@@ -351,23 +297,6 @@ def minhash_coeffs(k: int) -> list[tuple[int, int]]:
         ((2654435761 * (i + 1)) % MOD, (2246822519 * (i + 7) + 3) % MOD)
         for i in range(k)
     ]
-
-
-def minhash_signature_from_tokens(toks: Column, k: int = 16) -> Column:
-    """k minhashes over a precomputed distinct-token array:
-    h_i(t) = (a_i * H(t) + b_i) % MOD minimized over tokens."""
-    hs = F.transform(toks, token_hash)
-    sigs = []
-    for a, b in minhash_coeffs(k):
-        sigs.append(
-            F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % MOD))
-        )
-    return F.array(*sigs)
-
-
-def minhash_signature(text: Column, k: int = 16) -> Column:
-    """k minhashes: h_i(t) = (a_i * H(t) + b_i) % MOD minimized over tokens."""
-    return minhash_signature_from_tokens(F.array_distinct(tokens(text)), k)
 
 
 def minhash_lsh_pairs(
@@ -481,52 +410,17 @@ def embedding_near_dup_pairs(
     )
 
 
-def simhash(text: Column, bits: int = 32) -> Column:
-    """SimHash fingerprint: for each bit position, majority vote of the
-    token-hash bits; the sign vector packs into a long.
-
-    One ``aggregate`` pass accumulates all per-bit one-counts into an array
-    state (a per-bit ``filter`` scan repeated 32x traverses the token list
-    32 times — measured ~3x slower on the bench corpus)."""
-    toks = F.array_distinct(tokens(text))
-    hs = F.transform(toks, token_hash)
-    zero_counts = F.array_repeat(F.lit(0).cast("long"), bits)
-    # pyspark's shiftright/shiftleft only take int shift amounts, so bit
-    # extraction divides by a LITERAL power-of-two array (h < 2^30 << 2^53:
-    # double division is exact).  A per-element pow(2.0, b) here cost ~25%
-    # of the whole pass (measured at sf0.1) — the literal array folds the
-    # powers at plan time.
-    divs = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    ones = F.aggregate(
-        hs,
-        zero_counts,
-        lambda acc, h: F.zip_with(
-            acc, divs, lambda c, dv: c + (h / dv).cast("long") % 2
-        ),
-    )
-    n = F.size(hs)
-    # majority per bit -> weighted sum of 2^bit
-    return F.aggregate(
-        F.zip_with(
-            ones,
-            divs,
-            lambda c, w: F.when(c * 2 >= n, w).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def simhash_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
 ) -> DataFrame:
-    """``(id, simhash)`` for every row — the :func:`simhash` fingerprint
+    """``(id, simhash)`` for every row — the SimHash fingerprint
     computed as ONE vectorized mapInArrow integer pass (exact replica of
-    the Column fold; round 6 measured the interpreted HOF chain at ~134
-    core-seconds for 50k docs vs ~2 for this kernel).  Tokenization stays
+    the ``simhash`` Column fold in ``tests/reference_fingerprints.py``;
+    round 6 measured the interpreted HOF chain at ~134 core-seconds for
+    50k docs vs ~2 for this kernel).  Tokenization stays
     a JVM expression; only the integer hashing crosses to numpy.  The
     round-robin spread first matters because the corpus is typically a
     couple of scan partitions."""

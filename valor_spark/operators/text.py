@@ -466,50 +466,13 @@ def tfidf_topk(
     )
 
 
-def kgram_hashes_t(toks: Column, k: int = 4) -> Column:
-    """Rolling k-token-gram hash stream over an ALREADY-MATERIALIZED token
-    array: 16-hex md5 prefixes, one per gram position, order-preserving.
-    Fixed-width lowercase hex compares exactly like the underlying 64-bit
-    number, so ``array_min`` over these strings is a numeric min in both
-    engines.  Fewer than k tokens yields an empty array.  Same scale
-    contract as :func:`bigrams_t`: an inline token expression here would
-    re-tokenize per element inside the interpreted HOF lambda."""
-    cnt = F.coalesce(F.size(toks), F.lit(0))
-    idx = F.sequence(F.lit(1), F.greatest(cnt - (k - 1), F.lit(0)))
-    return F.when(cnt < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i, k))), 1, 16),
-        )
-    )
-
-
-def winnow_t(khashes: Column, w: int = 4) -> Column:
-    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD'03
-    §4): slide a w-window over the rolling k-gram hash stream, keep the min
-    hash of every window, dedup + sort.  Guarantees every substring of
-    w+k-1 tokens contributes at least one selected hash, so any sufficiently
-    long shared passage between two documents yields a shared fingerprint —
-    the locality property plain modulo-sampling (0 mod p) lacks.
-
-    ``khashes`` must be a plain column reference (materialize
-    :func:`kgram_hashes_t` in a lower Project first — it is referenced once
-    per window element inside the interpreted HOF lambda).  Fewer hashes
-    than a window selects the whole-stream min (standard boundary choice);
-    an empty stream selects nothing."""
-    m = F.coalesce(F.size(khashes), F.lit(0))
-    idx = F.sequence(F.lit(1), F.greatest(m - (w - 1), F.lit(1)))
-    wins = F.when(m == 0, F.array().cast("array<string>")).otherwise(
-        # slice() clamps at the array end, so the single m<w window spans
-        # the whole stream — same clamp semantics as DuckDB's kh[j:j+w-1]
-        F.transform(idx, lambda j: F.array_min(F.slice(khashes, j, w)))
-    )
-    return F.array_sort(F.array_distinct(wins))
-
-
 def _winnow_arrow(k: int, w: int, id_name: str, mode: str):
     """mapInArrow winnowing kernel over ``(id, __toks)`` — exact replica of
-    the :func:`kgram_hashes_t` -> :func:`winnow_t` Column chain, which is
+    the ``kgram_hashes_t`` -> ``winnow_t`` Column chain kept in
+    ``tests/reference_fingerprints.py`` (winnowing: Schleimer/Wilkerson/
+    Aiken, SIGMOD'03 §4 — the min hash of every w-window over the rolling
+    k-gram hash stream, so any shared passage of w+k-1 tokens yields a
+    shared fingerprint), which is
     ~10M interpreted HOF lambda evaluations (one md5 + concat per k-gram,
     one array_min per window) on a 50k-doc corpus.
 

@@ -13,7 +13,7 @@ import time
 from dataclasses import dataclass, field as dc_field
 from typing import Literal
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -21,7 +21,7 @@ from valor_spark import EArray, adapt, conN, field, make
 from valor_spark.operators import constraints as C
 from valor_spark.operators import drift as D
 from valor_spark.operators.audio import audio_rules, with_audio_invariant
-from valor_spark.plans.checkpoint import GLOBAL_SHARD, RunManifest, ShardRecord
+from valor_spark.plans.checkpoint import GLOBAL_SHARD, RunManifest, ShardRecord, in_shards
 from valor_spark.plans.engine import validate
 
 EA = EArray()
@@ -51,14 +51,6 @@ def _shard_sql(has_shard: bool) -> str:
     if not has_shard:
         return "CAST(0 AS INT)"
     return f"coalesce(CAST(shard AS INT), {UNSHARDED})"
-
-
-def _in_shards(shard_sql: str, shards) -> Column:
-    """``shard_sql IN (shards...)`` as one SQL expression (``isin`` builds
-    one literal Column per shard, a driver round trip each)."""
-    if not shards:
-        return F.lit(False)
-    return F.expr(f"{shard_sql} IN ({', '.join(str(int(s)) for s in shards)})")
 
 
 #: speech-rate plausibility window (words per minute).  Conversational
@@ -609,30 +601,43 @@ class PipelineReport:
 
 
 def _per_shard_metrics(
-    vio: DataFrame, shard_stats: dict, stage: str
+    vio: DataFrame,
+    shard_stats: dict,
+    stage: str,
+    run_id: str,
+    started: float,
+    written: Observation | None = None,
 ) -> list[ShardRecord]:
-    """Per-shard metric records: (rows, fingerprint) from the input stats,
-    total AND per-rule violation counts from the stage output (one groupBy
-    over the tiny written parquet — the north_rule's per-partition lineage
-    + rule metrics)."""
-    by_shard_rule = vio.groupBy("shard", "rule").agg(
-        F.count(F.lit(1)).alias("n")
-    ).collect()
+    """The records that commit a stage run: one per computed shard, naming
+    ``run_id``, with (rows, fingerprint) from the input stats and total and
+    per-rule violation counts from ``vio``, the frame just written (the
+    north_rule's per-partition lineage + rule metrics).  A rule stage's
+    ``vio`` sits above the ``violations()`` localCheckpoint barrier, so one
+    groupBy counts it without running the stage again or reading parquet
+    back.  A whole-table stage's rows sit below no barrier: its one record
+    takes the row count ``written`` observed on the write."""
     vio_counts: dict = {}
     rule_counts: dict = {}
-    for r in by_shard_rule:
-        vio_counts[r["shard"]] = vio_counts.get(r["shard"], 0) + r["n"]
-        rule_counts.setdefault(r["shard"], {})[r["rule"]] = r["n"]
+    if written is not None:
+        vio_counts[GLOBAL_SHARD] = written.get["n"]
+    else:
+        by_shard_rule = vio.groupBy("shard", "rule").agg(
+            F.count(F.lit(1)).alias("n")
+        ).collect()
+        for r in by_shard_rule:
+            vio_counts[r["shard"]] = vio_counts.get(r["shard"], 0) + r["n"]
+            rule_counts.setdefault(r["shard"], {})[r["rule"]] = r["n"]
     now = time.time()
     return [
         ShardRecord(
             stage=stage,
-            shard=int(s) if s is not None else GLOBAL_SHARD,
+            shard=int(s),
             rows=rows,
             violations=int(vio_counts.get(s, 0)),
-            wall_s=0.0,
+            wall_s=now - started,
             fingerprint=fp,
             finished_at=now,
+            run_id=run_id,
             by_rule=rule_counts.get(s, {}),
         )
         for s, (rows, fp) in shard_stats.items()
@@ -646,65 +651,56 @@ def _sharded_stage(
     stage: str,
     keys: dict[int, tuple[int, int]],
     prepare,
-    rules: dict,
+    rules: dict | None,
     report: PipelineReport,
 ) -> DataFrame:
-    """Run one shard-granular stage (row rules, audio) and return its
-    violation rows.
+    """Run one checkpointed stage and return its violation rows.
 
-    ``keys`` maps each input shard to its resume key (rows, fingerprint
-    XOR the stage config).  Shards whose key matches the manifest are
-    skipped by filtering the scan;
-    ``validate(prepare(todo), rules)`` covers the rest, whose violations
-    land partition-wise in the stage dir with one metrics record per
-    recomputed shard."""
-    recorded = manifest.shard_rows_fingerprints(stage) if manifest else {}
-    done = {s for s, key in keys.items() if recorded.get(s) == key}
-    report.skipped[stage] = sorted(done)
-
-    def current_shards(df: DataFrame) -> DataFrame:
-        """Read-backs see the whole stage dir — shards REMOVED from the
-        input since the previous run must not resurface as violations."""
-        return df.filter(_in_shards("shard", keys))
-
-    if done and len(done) == len(keys):
-        return current_shards(
-            manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-        )
+    ``keys`` maps each shard of the stage to its resume key (rows,
+    fingerprint XOR the stage config); a whole-table stage has the one
+    shard ``GLOBAL_SHARD``.  Shards whose key matches their committed record
+    are skipped by filtering the scan.  The rest run as
+    ``validate(prepare(todo), rules)``, or with ``rules=None`` as
+    ``prepare(todo)``, which then builds the violation rows itself (the
+    constraints).  With a manifest, those rows are written once to a new
+    run directory and committed by one record per computed shard; the
+    stage's result is read from the committed run directories."""
+    latest = manifest.latest(stage) if manifest else {}
+    done = sorted(
+        s for s, key in keys.items()
+        if s in latest and (latest[s].rows, latest[s].fingerprint) == key
+    )
+    report.skipped[stage] = done
+    if manifest and len(done) == len(keys):
+        return manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA, shards=keys)
+    started = time.time()
     todo = clips
     if done:
-        todo = clips.filter(~_in_shards(_shard_sql("shard" in clips.columns), sorted(done)))
+        todo = clips.filter(~in_shards(_shard_sql("shard" in clips.columns), done))
     frame = prepare(todo)
-    has_shard = "shard" in frame.columns
-    res = validate(
-        frame,
-        rules=rules,
-        key_cols=["clip_id"],
-        shard_col="shard" if has_shard else None,
-    )
-    vio = res.violations().select(
-        "clip_id", F.expr(_shard_sql(has_shard)).alias("shard"), "rule", "path", "error"
-    )
+    written = None
+    if rules is None:
+        vio = frame
+        if manifest:
+            written = Observation()
+            vio = vio.observe(written, F.count(F.lit(1)).alias("n"))
+    else:
+        has_shard = "shard" in frame.columns
+        res = validate(
+            frame,
+            rules=rules,
+            key_cols=["clip_id"],
+            shard_col="shard" if has_shard else None,
+        )
+        vio = res.violations().select(
+            "clip_id", F.expr(_shard_sql(has_shard)).alias("shard"), "rule", "path", "error"
+        )
     if not manifest:
         return vio
     todo_keys = {s: key for s, key in keys.items() if s not in done}
-    # Clear-and-append only the recomputed shards: a whole-dir overwrite
-    # would delete the parquet of shards recorded as done but absent from
-    # this input, which a later run over them serves from the manifest.
-    # Overwrite only when no per-shard record exists (fresh run dir, or the
-    # old stage-granular layout with unpartitioned files at the stage root).
-    per_shard = any(s != GLOBAL_SHARD for s in recorded)
-    manifest.write_violations(
-        stage,
-        vio,
-        partition_by="shard",
-        replace_shards=sorted(todo_keys) if per_shard else None,
-    )
-    # metric counts come from the (tiny) written parquet, not the logical
-    # plan — counting the plan would re-run the whole stage a second time
-    vio = current_shards(manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA))
-    manifest.append(_per_shard_metrics(vio, todo_keys, stage))
-    return vio
+    run_id = manifest.write_violations(stage, vio)
+    manifest.append(_per_shard_metrics(vio, todo_keys, stage, run_id, started, written))
+    return manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA, shards=keys)
 
 
 def run_pipeline(
@@ -729,21 +725,43 @@ def run_pipeline(
 
     Spark actions: ONE collect of the persisted per-shard fingerprint frame
     (shard guard, resume keys and ``report.rows``) and the drift histograms;
-    with ``checkpoint_dir`` also the ``clips_ref`` fingerprint aggregate,
-    per shard-granular stage one violations write plus one per-(shard,
-    rule) count of the written parquet, and the constraints write (its row
-    count observed on the write).  ``violations``, ``shard_verdicts`` and
-    ``stats`` stay lazy."""
+    with ``checkpoint_dir`` also the ``clips_ref`` fingerprint aggregate and,
+    per stage that runs, one write of its new run directory; the row-rule
+    and audio stages add one per-(shard, rule) count of the frame just
+    written (the constraints count is observed on their write).
+    ``violations``, ``shard_verdicts`` and ``stats`` stay lazy."""
     report = PipelineReport()
-    run_audio = clips_ref is not None and "pcm_ref" in clips_ref.columns
     manifest = RunManifest(checkpoint_dir) if checkpoint_dir else None
-    vio_frames: list[DataFrame] = []
-
     # persist: the verdict join reads this 1-row-per-shard aggregate again;
     # without the cache it would re-scan the input's metadata columns.  Its
     # ONE collect feeds the shard guard, the resume keys and the row total.
-    shards_fp = shard_fingerprint_frame(clips, fingerprint_payload).persist()
-    report._persisted = shards_fp
+    # A run that raises has no report to release it, so it releases here.
+    report._persisted = shard_fingerprint_frame(clips, fingerprint_payload).persist()
+    try:
+        _run_stages(
+            spark, clips, clips_ref, baseline, manifest, snr_db_min,
+            fingerprint_payload, report,
+        )
+    except BaseException:
+        report.release()
+        raise
+    return report
+
+
+def _run_stages(
+    spark: SparkSession,
+    clips: DataFrame,
+    clips_ref: DataFrame | None,
+    baseline: DataFrame | None,
+    manifest: RunManifest | None,
+    snr_db_min: float,
+    fingerprint_payload: bool | Literal["content"],
+    report: PipelineReport,
+) -> None:
+    """The stages of :func:`run_pipeline`, filling ``report``."""
+    run_audio = clips_ref is not None and "pcm_ref" in clips_ref.columns
+    vio_frames: list[DataFrame] = []
+    shards_fp = report._persisted
     shard_rows = shards_fp.collect()
     # Negative shard values would collide with the GLOBAL (-1) / UNSHARDED
     # (-2) sentinels — a real shard=-1's violations would merge into the
@@ -827,27 +845,19 @@ def run_pipeline(
     # ---- stage 2: whole-table constraints (global resume) ---------------
     t0 = time.time()
     stage = "constraints"
-    if manifest and manifest.stage_done_for(stage, key_rows, cons_fp):
-        vio_frames.append(manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA))
-        report.skipped[stage] = [GLOBAL_SHARD]
-    else:
-        parts = [C.uniqueness_violations(clips, "clip_id")]
+
+    def constraints(todo: DataFrame) -> DataFrame:
+        cons = C.uniqueness_violations(todo, "clip_id")
         if clips_ref is not None:
-            parts.append(C.referential_violations(clips, clips_ref, "clip_id"))
-        cons = parts[0]
-        for p in parts[1:]:
-            cons = cons.unionByName(p)
-        if manifest:
-            # the row count rides the write as an observed metric — no
-            # second job reading the written parquet back to count it
-            written = Observation()
-            manifest.write_violations(stage, cons.observe(written, F.count(F.lit(1)).alias("n")))
-            manifest.mark_global(
-                stage, rows=key_rows, violations=written.get["n"],
-                wall_s=time.time() - t0, fingerprint=cons_fp,
-            )
-            cons = manifest.read_violations(spark, stage, C.VIOLATION_SCHEMA)
-        vio_frames.append(cons)
+            cons = cons.unionByName(C.referential_violations(todo, clips_ref, "clip_id"))
+        return cons
+
+    vio_frames.append(
+        _sharded_stage(
+            spark, clips, manifest, stage, {GLOBAL_SHARD: (key_rows, cons_fp)},
+            constraints, None, report,
+        )
+    )
     report.stats = C.column_stats(
         clips.select("clip_id", "sr_hz", "dur_ms", "codec", "transcript")
     )
@@ -932,4 +942,3 @@ def run_pipeline(
     report.shard_verdicts = per_shard.unionByName(global_verdict)
     report.rows = global_rows
     report.stage_wall_s["verdicts"] = time.time() - t0
-    return report
