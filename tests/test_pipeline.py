@@ -654,6 +654,37 @@ def test_resume_after_manifest_truncated_mid_line(spark, tmp_path_factory):
     assert _outputs(again) == cold
 
 
+def test_checkpointed_run_parses_manifest_once(spark, tmp_path_factory, monkeypatch):
+    """A checkpointed run reads ``manifest.jsonl`` once, when it opens the
+    manifest; the resume tests, the commit sweep and the violation reads of
+    every stage use the records kept in memory."""
+    from valor_spark.plans.checkpoint import RunManifest
+
+    clips, ref = _audio_clips_ref(spark)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_parse"))
+    parses = []
+    parse = RunManifest.records
+
+    def counted(self):
+        parses.append(self.path)
+        return parse(self)
+
+    monkeypatch.setattr(RunManifest, "records", counted)
+    cold = _outputs(run_pipeline(spark, clips, ref, checkpoint_dir=ckpt))
+    assert len(parses) == 1
+    # a second run over a changed shard: one stage part resumed, part recomputed
+    changed = clips.withColumn(
+        "transcript", F.when(F.col("shard") == 1, F.lit("")).otherwise(F.col("transcript"))
+    )
+    rep = run_pipeline(spark, changed, ref, checkpoint_dir=ckpt)
+    assert rep.skipped["row_rules"] == [0, 2, 3]
+    _outputs(rep)
+    assert len(parses) == 2
+    # and the in-memory records serve the same rows as a fresh parse
+    assert _outputs(run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)) == cold
+    assert len(parses) == 3
+
+
 def test_parent_format_checkpoint_refused(spark, tmp_path):
     """A run directory of the shard-partitioned layout, whose manifest has
     no format header, is refused with a named error instead of being

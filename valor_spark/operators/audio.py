@@ -19,6 +19,15 @@ row rule).
 
 Scale notes (100 TB of audio):
 
+* every per-clip audio operator (this module, bandwidth, defects,
+  loudness, resample, audio_fp, fused, channels, flac) runs through ONE
+  payload driver, :func:`map_payload`: one ``mapInArrow`` batch loop with
+  zero-copy views of the binary columns, the key columns passed through in
+  Arrow, and the output schema built once from the operator's DDL.  Each
+  operator keeps only its projection, its per-clip kernel, its output
+  fields and its error row; :func:`decode_one` is the one place a payload
+  becomes PCM.  The driver's batch loop is where the planned per-batch
+  fault-injection hook (ROADMAP, failure injection) attaches;
 * the decode+SNR pass touches ``bytes`` exactly once, inside one
   ``mapInArrow`` pass evaluated per Arrow batch (zero-copy buffer views); tune
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch is ~64-128 MB;
@@ -31,7 +40,9 @@ Scale notes (100 TB of audio):
 
 from __future__ import annotations
 
+import hashlib
 import io
+import math
 import struct
 import wave
 
@@ -140,17 +151,23 @@ def _wav_nonpcm_fallback(
 
 
 def decode_one(
-    raw: bytes | None, codec: str | None
+    raw: bytes | np.ndarray | None, codec: str | None
 ) -> tuple[np.ndarray | None, int | None, str | None]:
     """Decode one payload to int16 PCM; returns (samples, header_rate, error).
-    ``header_rate`` is the container's sample rate (WAV) or None for raw PCM."""
+    ``header_rate`` is the container's sample rate (WAV) or None for raw PCM.
+
+    The one place a payload becomes PCM.  ``raw`` is ``bytes``, a zero-copy
+    ``uint8`` view over an Arrow buffer (what :func:`map_payload` hands its
+    row functions), or None.  ``pcm_s16le`` stays a zero-copy view; every
+    other codec parses a ``bytes`` copy."""
     if raw is None:
         return None, None, "null_bytes"
+    if codec == "pcm_s16le":
+        if len(raw) % 2:
+            return None, None, "odd_byte_length"
+        return np.frombuffer(raw, dtype="<i2"), None, None
+    raw = bytes(raw)
     try:
-        if codec == "pcm_s16le":
-            if len(raw) % 2:
-                return None, None, "odd_byte_length"
-            return np.frombuffer(raw, dtype="<i2"), None, None
         if codec == "wav":
             try:
                 with wave.open(io.BytesIO(raw), "rb") as w:
@@ -217,6 +234,110 @@ def _binary_views(col):
     return get
 
 
+def sample_rate() -> Column:
+    """The clip's metadata sample rate, NULL read as 0 (the kernels' "no
+    usable rate"), computed in the JVM before the payload pass."""
+    return F.coalesce(F.col("sr_hz"), F.lit(0)).alias("sr")
+
+
+def field_names(ddl: str) -> list[str]:
+    """The field names of a ``name type, ...`` DDL string."""
+    return [f.split()[0] for f in ddl.split(",")]
+
+
+def map_payload(df: DataFrame, out_ddl: str, row_fn) -> DataFrame:
+    """The one Arrow payload driver of the audio operators:
+    ``df.mapInArrow`` over a per-row function.
+
+    The leading columns of ``df`` that are also the leading fields of
+    ``out_ddl`` are KEYS (``clip_id``, and ``shard``, ``transcript_ok``,
+    ``sr_hz``, ``src_sr`` or ``out_sr`` where an operator carries them):
+    they never enter Python — they pass to the output as they came in, or
+    repeated by an Arrow ``take`` where rows expand.
+    ``row_fn`` is called once per input row with the values of the other
+    columns — binary columns as zero-copy ``uint8`` views (None for NULL),
+    the rest as Python values — and returns a list of output rows, each a
+    tuple of the non-key fields: one row for a per-clip operator, none or
+    many for an expanding one.  Every output row repeats the keys of the
+    input row it came from.
+
+    The Arrow schema is built once, here, from ``out_ddl``; the batch loop
+    below is the only one in the audio tier, so it is where a per-batch
+    hook (fault injection, timing) attaches."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T.DataType.fromDDL(out_ddl))
+    n_keys = 0
+    for col, name in zip(df.columns, schema.names):
+        if col != name:
+            break
+        n_keys += 1
+    value_types = schema.types[n_keys:]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            getters = [
+                _binary_views(c)
+                if pa.types.is_binary(c.type) or pa.types.is_large_binary(c.type)
+                else c.to_pylist().__getitem__
+                for c in b.columns[n_keys:]
+            ]
+            take: list[int] = []
+            rows: list[tuple] = []
+            for i in range(b.num_rows):
+                out = row_fn(*[get(i) for get in getters])
+                take.extend([i] * len(out))
+                rows.extend(out)
+            keys = b.columns[:n_keys]
+            if take != list(range(b.num_rows)):
+                # Arrow's take always adds a validity bitmap: one-row-per-
+                # input batches pass their keys on as they came in
+                idx = pa.array(take, pa.int64())
+                keys = [c.take(idx) for c in keys]
+            cols = list(zip(*rows)) or [()] * len(value_types)
+            yield pa.RecordBatch.from_arrays(
+                keys + [pa.array(c, t) for c, t in zip(cols, value_types)],
+                schema=schema,
+            )
+
+    return df.mapInArrow(gen, out_ddl)
+
+
+def per_clip(kernel, err_row: tuple):
+    """Row function of a one-row-per-clip operator over ``(bytes, codec,
+    *args)``: ``kernel(sig, *args)`` and a NULL error for a clip that
+    decodes, else ``err_row`` and the decode error."""
+
+    def row(raw, codec, *args):
+        sig, _rate, err = decode_one(raw, codec)
+        if err is not None:
+            return [(*err_row, err)]
+        return [(*kernel(sig, *args), None)]
+
+    return row
+
+
+def _invariant_row(raw, codec, ref) -> list[tuple]:
+    """``(snr_db, n_samples, decode_error, header_sr_hz)`` of one clip
+    against its reference decode (raw int16 PCM)."""
+    sig, rate, err = decode_one(raw, codec)
+    n = 0
+    if err is None:
+        if ref is None:
+            err = "missing_reference"
+        elif len(ref) % 2:
+            err = "reference_odd_byte_length"
+        else:
+            n = len(sig)
+            ref = ref.view("<i2")
+            if n == len(ref):
+                return [(snr_db(sig, ref), n, None, rate)]
+            err = f"length_mismatch:{n}!={len(ref)}"
+    return [(math.nan, n, err, rate)]
+
+
 def with_audio_invariant(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
     """Join clips to reference decodes on ``clip_id`` and attach the decoded
     invariant columns ``snr_db / n_samples / decode_error / transcript_ok``.
@@ -249,76 +370,13 @@ def with_audio_invariant(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
         "codec",
         "pcm_ref",
     )
-
     shard_field = "shard int, " if has_shard else ""
-    out_schema = (
+    return map_payload(
+        joined,
         f"clip_id string, {shard_field}transcript_ok boolean, sr_hz int, "
-        "snr_db double, n_samples int, decode_error string, header_sr_hz int"
+        "snr_db double, n_samples int, decode_error string, header_sr_hz int",
+        _invariant_row,
     )
-    n_pass = 3 + (1 if has_shard else 0)  # passthrough column count
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(n_pass))
-            codecs = b.column(n_pass + 1).to_pylist()
-            get_ref = _binary_views(b.column(n_pass + 2))
-            snrs = np.full(n, np.nan)
-            counts = np.zeros(n, dtype=np.int32)
-            errors: list[str | None] = [None] * n
-            header_rates: list[int | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, rate, err = decode_one(rw.tobytes(), cod)
-                    header_rates[i] = rate
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                rr = get_ref(i)
-                if rr is None:
-                    errors[i] = "missing_reference"
-                    continue
-                if len(rr) % 2:
-                    errors[i] = "reference_odd_byte_length"
-                    continue
-                ref = rr.view("<i2")
-                counts[i] = len(sig)
-                if len(sig) != len(ref):
-                    errors[i] = f"length_mismatch:{len(sig)}!={len(ref)}"
-                    continue
-                snrs[i] = snr_db(sig, ref)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(k) for k in range(n_pass)]
-                + [
-                    pa.array(snrs, pa.float64()),
-                    pa.array(counts, pa.int32()),
-                    pa.array(errors, pa.string()),
-                    pa.array(header_rates, pa.int32()),
-                ],
-                schema=pa.schema(
-                    [b.schema.field(k) for k in range(n_pass)]
-                    + [
-                        pa.field("snr_db", pa.float64()),
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                        pa.field("header_sr_hz", pa.int32()),
-                    ]
-                ),
-            )
-
-    return joined.mapInArrow(gen, out_schema)
 
 
 def audio_rules(snr_db_min: float = SNR_DB_MIN) -> dict:
@@ -376,6 +434,14 @@ def audio_rules(snr_db_min: float = SNR_DB_MIN) -> dict:
     }
 
 
+#: ``profile_ints``'s output fields, and its metrics for an undecodable clip
+PROFILE_FIELDS = (
+    "n_samples int, peak_abs int, sum_sq bigint, n_clipped int, "
+    "n_silent int, lead_silence int, trail_silence int"
+)
+PROFILE_ERR = (0, 0, 0, 0, 0, 0, 0)
+
+
 def profile_ints(
     sig: np.ndarray, silence_threshold: int = 512
 ) -> tuple[int, int, int, int, int, int, int]:
@@ -419,86 +485,12 @@ def audio_profile(clips: DataFrame, silence_threshold: int = 512) -> DataFrame:
     output KB-scale per million clips.  Tune
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` for ~64-128 MB batches.
     """
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = (
-        "clip_id string, n_samples int, peak_abs int, sum_sq bigint, "
-        "n_clipped int, n_silent int, lead_silence int, trail_silence int, "
-        "decode_error string"
-    )
     thr = int(silence_threshold)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            peak = np.zeros(n, np.int32)
-            sumsq = np.zeros(n, np.int64)
-            clipped = np.zeros(n, np.int32)
-            silent = np.zeros(n, np.int32)
-            lead = np.zeros(n, np.int32)
-            trail = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                m = len(sig)
-                n_samples[i] = m
-                if m == 0:
-                    continue
-                a = np.abs(sig.astype(np.int32))
-                peak[i] = int(a.max())
-                s64 = sig.astype(np.int64)
-                sumsq[i] = int(np.dot(s64, s64))
-                clipped[i] = int((a >= 32767).sum())
-                loud = np.nonzero(a >= thr)[0]
-                silent[i] = m - len(loud)
-                lead[i] = int(loud[0]) if len(loud) else m
-                trail[i] = int(m - 1 - loud[-1]) if len(loud) else m
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)]
-                + [
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(peak, pa.int32()),
-                    pa.array(sumsq, pa.int64()),
-                    pa.array(clipped, pa.int32()),
-                    pa.array(silent, pa.int32()),
-                    pa.array(lead, pa.int32()),
-                    pa.array(trail, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [b.schema.field(0)]
-                    + [
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("peak_abs", pa.int32()),
-                        pa.field("sum_sq", pa.int64()),
-                        pa.field("n_clipped", pa.int32()),
-                        pa.field("n_silent", pa.int32()),
-                        pa.field("lead_silence", pa.int32()),
-                        pa.field("trail_silence", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec"),
+        f"clip_id string, {PROFILE_FIELDS}, decode_error string",
+        per_clip(lambda sig: profile_ints(sig, thr), PROFILE_ERR),
+    )
 
 
 def audio_profile_derived(prof: DataFrame) -> DataFrame:
@@ -595,6 +587,12 @@ def audio_quality_rules(
 #: keeps leakage from the dominant tone out of the impurity measurement
 SPECTRUM_EXCLUDE_BINS = 3
 SPECTRUM_MIN_SAMPLES = 8
+#: ``spectral_ints``'s output fields, and its metrics for an undecodable clip
+SPECTRUM_FIELDS = (
+    "n_samples int, dom_bin int, dom_hz int, second_bin int, "
+    "impurity_milli int"
+)
+SPECTRUM_ERR = (0, 0, 0, 0, 0)
 
 
 def spectral_ints(sig, sr: int) -> tuple[int, int, int, int, int]:
@@ -644,74 +642,11 @@ def audio_spectrum(clips: DataFrame) -> DataFrame:
     narrow columnar scan, zero-copy payload views, integer outputs (floats
     never cross the Arrow boundary).  FFT cost is O(m log m) per clip
     inside the batch loop — compute-bound, embarrassingly parallel."""
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, dom_bin int, dom_hz int, "
-        "second_bin int, impurity_milli int, decode_error string"
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec", sample_rate()),
+        f"clip_id string, {SPECTRUM_FIELDS}, decode_error string",
+        per_clip(spectral_ints, SPECTRUM_ERR),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            dom_bin = np.zeros(n, np.int32)
-            dom_hz = np.zeros(n, np.int32)
-            second_bin = np.zeros(n, np.int32)
-            impurity = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    dom_bin[i],
-                    dom_hz[i],
-                    second_bin[i],
-                    impurity[i],
-                ) = spectral_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(dom_bin, pa.int32()),
-                    pa.array(dom_hz, pa.int32()),
-                    pa.array(second_bin, pa.int32()),
-                    pa.array(impurity, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [
-                        b.schema.field(0),
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("dom_bin", pa.int32()),
-                        pa.field("dom_hz", pa.int32()),
-                        pa.field("second_bin", pa.int32()),
-                        pa.field("impurity_milli", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def audio_segments(
@@ -734,71 +669,28 @@ def audio_segments(
     what Arrow map operators allow), zero shuffle; output is
     segment-boundary integers only, KB-scale per million clips.
     """
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = (
-        "clip_id string, seg_idx int, start_sample int, end_sample int"
-    )
     thr = int(silence_threshold)
     gap = int(min_gap)
     mlen = int(min_len)
 
-    def gen(batches):
-        import pyarrow as pa
+    def row(raw, codec):
+        sig, _rate, err = decode_one(raw, codec)
+        if err is not None:
+            return []
+        idx = np.nonzero(np.abs(sig.astype(np.int32)) >= thr)[0]
+        if idx.size == 0:
+            return []
+        splits = np.nonzero(np.diff(idx) > gap)[0]
+        starts = np.concatenate(([idx[0]], idx[splits + 1]))
+        ends = np.concatenate((idx[splits], [idx[-1]])) + 1
+        kept = [(int(s), int(e)) for s, e in zip(starts, ends) if e - s >= mlen]
+        return [(k, s, e) for k, (s, e) in enumerate(kept)]
 
-        for b in batches:
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            ids = b.column(0).to_pylist()
-            out_id: list[str] = []
-            out_seg: list[int] = []
-            out_lo: list[int] = []
-            out_hi: list[int] = []
-            for i in range(b.num_rows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        continue
-                a = np.abs(sig.astype(np.int32))
-                idx = np.nonzero(a >= thr)[0]
-                if idx.size == 0:
-                    continue
-                splits = np.nonzero(np.diff(idx) > gap)[0]
-                starts = np.concatenate(([idx[0]], idx[splits + 1]))
-                ends = np.concatenate((idx[splits], [idx[-1]])) + 1
-                seg = 0
-                for s, e in zip(starts, ends):
-                    if e - s >= mlen:
-                        out_id.append(ids[i])
-                        out_seg.append(seg)
-                        out_lo.append(int(s))
-                        out_hi.append(int(e))
-                        seg += 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.string()),
-                    pa.array(out_seg, pa.int32()),
-                    pa.array(out_lo, pa.int32()),
-                    pa.array(out_hi, pa.int32()),
-                ],
-                schema=pa.schema(
-                    [
-                        pa.field("clip_id", pa.string()),
-                        pa.field("seg_idx", pa.int32()),
-                        pa.field("start_sample", pa.int32()),
-                        pa.field("end_sample", pa.int32()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec"),
+        "clip_id string, seg_idx int, start_sample int, end_sample int",
+        row,
+    )
 
 
 def audio_content_hash(clips: DataFrame) -> DataFrame:
@@ -813,46 +705,14 @@ def audio_content_hash(clips: DataFrame) -> DataFrame:
     Undecodable payloads carry a NULL hash plus the decode error.  Same
     scale shape as :func:`audio_profile`: zero shuffle, zero-copy views,
     output is (id, 32-hex, error) — KB-scale per million clips."""
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = "clip_id string, content_hash string, decode_error string"
-
-    def gen(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            hashes: list[str | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                hashes[i] = hashlib.md5(np.ascontiguousarray(sig, "<i2").tobytes()).hexdigest()
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(hashes, pa.string()), pa.array(errors, pa.string())],
-                schema=pa.schema(
-                    [b.schema.field(0), pa.field("content_hash", pa.string()),
-                     pa.field("decode_error", pa.string())]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec"),
+        "clip_id string, content_hash string, decode_error string",
+        per_clip(
+            lambda sig: (hashlib.md5(np.ascontiguousarray(sig, "<i2").tobytes()).hexdigest(),),
+            (None,),
+        ),
+    )
 
 
 def audio_dedup_groups(clips: DataFrame) -> DataFrame:

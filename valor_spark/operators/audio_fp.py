@@ -124,55 +124,20 @@ def audio_fingerprints(clips: DataFrame) -> DataFrame:
     projection — inherits every ``decode_one`` codec; undecodable or
     sub-frame clips simply contribute no rows (the near-dup contract:
     no fingerprints, no candidates)."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import decode_one, map_payload, sample_rate
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = "clip_id string, fp_hash long, t_frame int"
+    def row(raw, codec, sr):
+        sig, _rate, err = decode_one(raw, codec)
+        if err is not None:
+            return []
+        h, t = fingerprint_ints(sig, sr)
+        return list(zip(h.tolist(), t.tolist()))
 
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            ids: list[str] = []
-            hs: list[np.ndarray] = []
-            ts: list[np.ndarray] = []
-            counts: list[int] = []
-            id_col = b.column(0).to_pylist()
-            for i in range(b.num_rows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _r, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                h, t = fingerprint_ints(sig, sr)
-                if h.size:
-                    ids.append(id_col[i])
-                    hs.append(h)
-                    ts.append(t)
-                    counts.append(h.size)
-            if not ids:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(np.asarray(ids, object), counts)),
-                    pa.array(np.concatenate(hs), pa.int64()),
-                    pa.array(np.concatenate(ts), pa.int32()),
-                ],
-                names=["clip_id", "fp_hash", "t_frame"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec", sample_rate()),
+        "clip_id string, fp_hash long, t_frame int",
+        row,
+    )
 
 
 def audio_near_dup_fp(

@@ -42,6 +42,9 @@ FRAME_S = 0.064
 #: power fractions for the two rolloff outputs
 ROLLOFF_LO = 0.95
 ROLLOFF_HI = 0.99
+#: ``bandwidth_ints``'s output fields, and its metrics for an undecodable clip
+BANDWIDTH_FIELDS = "n_samples int, rolloff95_hz int, rolloff99_hz int, hf_permille int"
+BANDWIDTH_ERR = (0, None, None, None)
 
 
 def bandwidth_ints(
@@ -90,70 +93,10 @@ def audio_bandwidth(clips: DataFrame) -> DataFrame:
     carried through so downstream provenance rules can compare content
     bandwidth against the claimed Nyquist without a join back to the
     clips table."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import map_payload, per_clip, sample_rate
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, src_sr int, n_samples int, rolloff95_hz int, "
-        "rolloff99_hz int, hf_permille int, decode_error string"
+    return map_payload(
+        clips.select("clip_id", sample_rate().alias("src_sr"), "bytes", "codec", sample_rate()),
+        f"clip_id string, src_sr int, {BANDWIDTH_FIELDS}, decode_error string",
+        per_clip(bandwidth_ints, BANDWIDTH_ERR),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            r95: list[int | None] = [None] * n
-            r99: list[int | None] = [None] * n
-            hf: list[int | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                n_samples[i], r95[i], r99[i], hf[i] = bandwidth_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(
-                        np.asarray(
-                            [r if r is not None else 0 for r in rates],
-                            np.int32,
-                        ),
-                        pa.int32(),
-                    ),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(r95, pa.int32()),
-                    pa.array(r99, pa.int32()),
-                    pa.array(hf, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "src_sr",
-                    "n_samples",
-                    "rolloff95_hz",
-                    "rolloff99_hz",
-                    "hf_permille",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

@@ -63,7 +63,7 @@ def channel_frames(
         from valor_spark.operators.flac import FlacError, decode_flac
 
         try:
-            frames, _rate, _info = decode_flac(raw)
+            frames, _rate, _info = decode_flac(bytes(raw))
         except FlacError as exc:
             return None, str(exc)
         except Exception as exc:  # malformed container
@@ -138,73 +138,18 @@ def audio_channels(clips: DataFrame) -> DataFrame:
     ssq_l, ssq_r, dot_lr, dual_mono, balance_permille, phase_permille,
     decode_error)`` in ONE mapInArrow pass, zero shuffle; the scan is
     pruned to ``(clip_id, bytes, codec)``."""
-    from valor_spark.operators.audio import _binary_views
+    from valor_spark.operators.audio import map_payload
 
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = (
+    def row(raw, codec):
+        frames, err = channel_frames(raw, codec)
+        if err is not None:
+            return [(0, 0, None, None, None, None, None, None, err)]
+        return [(*channel_ints(frames), None)]
+
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec"),
         "clip_id string, n_channels int, n_frames int, ssq_l bigint, "
         "ssq_r bigint, dot_lr bigint, dual_mono int, "
-        "balance_permille int, phase_permille int, decode_error string"
+        "balance_permille int, phase_permille int, decode_error string",
+        row,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            nchs = np.zeros(n, np.int32)
-            nfrm = np.zeros(n, np.int32)
-            ssq_l: list[int | None] = [None] * n
-            ssq_r: list[int | None] = [None] * n
-            dot: list[int | None] = [None] * n
-            dual: list[int | None] = [None] * n
-            bal: list[int | None] = [None] * n
-            phase: list[int | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                raw = rw.tobytes() if rw is not None else None
-                frames, err = channel_frames(raw, codecs[i])
-                if err is not None:
-                    errors[i] = err
-                    continue
-                (
-                    nchs[i],
-                    nfrm[i],
-                    ssq_l[i],
-                    ssq_r[i],
-                    dot[i],
-                    dual[i],
-                    bal[i],
-                    phase[i],
-                ) = channel_ints(frames)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(nchs, pa.int32()),
-                    pa.array(nfrm, pa.int32()),
-                    pa.array(ssq_l, pa.int64()),
-                    pa.array(ssq_r, pa.int64()),
-                    pa.array(dot, pa.int64()),
-                    pa.array(dual, pa.int32()),
-                    pa.array(bal, pa.int32()),
-                    pa.array(phase, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "n_channels",
-                    "n_frames",
-                    "ssq_l",
-                    "ssq_r",
-                    "dot_lr",
-                    "dual_mono",
-                    "balance_permille",
-                    "phase_permille",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

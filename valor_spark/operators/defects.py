@@ -34,6 +34,12 @@ from pyspark.sql import DataFrame
 #: full-scale pin thresholds for int16
 CLIP_HI = 32767
 CLIP_LO = -32768
+#: ``defect_ints``'s output fields, and its metrics for an undecodable clip
+DEFECT_FIELDS = (
+    "n_samples int, clipped_samples int, max_clip_run int, max_zero_run int, "
+    "max_zero_run_ms int, dc_offset_permille int"
+)
+DEFECT_ERR = (0, 0, 0, 0, None, 0)
 
 
 def _max_run(mask: np.ndarray) -> int:
@@ -71,76 +77,10 @@ def audio_defects(clips: DataFrame) -> DataFrame:
     """Per-clip defect table ``(clip_id, n_samples, clipped_samples,
     max_clip_run, max_zero_run, max_zero_run_ms, dc_offset_permille,
     decode_error)`` in ONE mapInArrow pass."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import map_payload, per_clip, sample_rate
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, clipped_samples int, "
-        "max_clip_run int, max_zero_run int, max_zero_run_ms int, "
-        "dc_offset_permille int, decode_error string"
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec", sample_rate()),
+        f"clip_id string, {DEFECT_FIELDS}, decode_error string",
+        per_clip(defect_ints, DEFECT_ERR),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            clipped = np.zeros(n, np.int32)
-            clip_run = np.zeros(n, np.int32)
-            zero_run = np.zeros(n, np.int32)
-            zero_ms: list[int | None] = [None] * n
-            dc = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    clipped[i],
-                    clip_run[i],
-                    zero_run[i],
-                    zero_ms[i],
-                    dc[i],
-                ) = defect_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(clipped, pa.int32()),
-                    pa.array(clip_run, pa.int32()),
-                    pa.array(zero_run, pa.int32()),
-                    pa.array(zero_ms, pa.int32()),
-                    pa.array(dc, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "n_samples",
-                    "clipped_samples",
-                    "max_clip_run",
-                    "max_zero_run",
-                    "max_zero_run_ms",
-                    "dc_offset_permille",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

@@ -50,6 +50,8 @@ import struct
 
 import numpy as np
 
+from valor_spark.operators.audio import field_names
+
 FIXED_COEFFS = {
     0: [],
     1: [1],
@@ -435,21 +437,26 @@ def decode_flac_mono(
     return frames[:, 0], rate, None
 
 
-def probe_one(raw: bytes | None) -> dict:
+#: ``probe_flac``'s output fields after ``(clip_id, sr_hz)``, in order
+PROBE_FIELDS = (
+    "claim_sample_rate int, claim_channels int, claim_bps int, "
+    "claim_total_samples bigint, claim_min_blocksize int, "
+    "claim_max_blocksize int, has_md5 int, decoded_samples bigint, "
+    "decoded_rate int, md5_ok int, decode_error string"
+)
+
+
+def probe_one(raw: bytes | np.ndarray | None) -> dict:
     """Claims-vs-facts probe for one payload (driver of ``flac_meta``).
 
-    Always returns the full column dict; decode failures carry the
-    claims that WERE parseable plus the typed error."""
-    out = {
-        "claim_sample_rate": None, "claim_channels": None, "claim_bps": None,
-        "claim_total_samples": None, "claim_min_blocksize": None,
-        "claim_max_blocksize": None, "has_md5": None,
-        "decoded_samples": None, "decoded_rate": None, "md5_ok": None,
-        "decode_error": None,
-    }
+    Always returns the full column dict, keyed in PROBE_FIELDS order;
+    decode failures carry the claims that WERE parseable plus the typed
+    error."""
+    out = dict.fromkeys(field_names(PROBE_FIELDS))
     if raw is None:
         out["decode_error"] = "null_bytes"
         return out
+    raw = bytes(raw)
     try:
         info = parse_streaminfo(raw)
     except FlacError as exc:
@@ -487,40 +494,12 @@ def probe_one(raw: bytes | None) -> dict:
 
 def probe_flac(clips) -> "DataFrame":  # noqa: F821 - pyspark import below
     """Per-clip FLAC claims-vs-facts table in ONE shuffle-free
-    ``mapInArrow`` pass over the pruned ``(clip_id, bytes)`` projection:
+    ``mapInArrow`` pass over the pruned ``(clip_id, sr_hz, bytes)`` projection:
     STREAMINFO claims, decoded facts, MD5 verdict, typed errors."""
-    from valor_spark.operators.audio import _binary_views
+    from valor_spark.operators.audio import map_payload
 
-    sel = clips.select("clip_id", "sr_hz", "bytes")
-    cols = [
-        ("claim_sample_rate", "int"), ("claim_channels", "int"),
-        ("claim_bps", "int"), ("claim_total_samples", "bigint"),
-        ("claim_min_blocksize", "int"), ("claim_max_blocksize", "int"),
-        ("has_md5", "int"), ("decoded_samples", "bigint"),
-        ("decoded_rate", "int"), ("md5_ok", "int"), ("decode_error", "string"),
-    ]
-    out_schema = "clip_id string, sr_hz int, " + ", ".join(
-        f"{n} {t}" for n, t in cols
+    return map_payload(
+        clips.select("clip_id", "sr_hz", "bytes"),
+        f"clip_id string, sr_hz int, {PROBE_FIELDS}",
+        lambda raw: [tuple(probe_one(raw).values())],
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        pa_types = {
-            "int": pa.int32(), "bigint": pa.int64(), "string": pa.string(),
-        }
-        for b in batches:
-            get_bytes = _binary_views(b.column(2))
-            rows = []
-            for i in range(b.num_rows):
-                rw = get_bytes(i)
-                rows.append(probe_one(rw.tobytes() if rw is not None else None))
-            arrays = [b.column(0), b.column(1)] + [
-                pa.array([r[name] for r in rows], pa_types[t])
-                for name, t in cols
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=["clip_id", "sr_hz"] + [c for c, _ in cols]
-            )
-
-    return sel.mapInArrow(gen, out_schema)

@@ -6,17 +6,21 @@ decoding ``bytes`` — and the five per-family operators (audio_profile,
 audio_spectrum, audio_loudness, audio_bandwidth, audio_defects) each
 read and decode the payload independently.  A corpus intake job wants
 ALL of them; running them separately multiplies the scan+decode cost by
-five.  This operator calls the SAME per-family integer kernels
-(profile_ints, spectral_ints, loudness_ints, bandwidth_ints,
-defect_ints) on one decoded signal inside one ``mapInArrow`` generator:
-one columnar scan of (clip_id, bytes, codec, sr_hz), one decode per
-clip, zero shuffle, 24 integer/error columns out.
+five.
 
-The per-family kernels remain the single source of truth — this module
-contains NO metric arithmetic of its own, so the fused row is equal by
-construction to the join of the five family operators on the same input
-(asserted over every fixture plant in tests/test_fused.py, and gated
-against a spec-side expected parquet in the driver contract).
+The fused pass is the COMPOSITION of the family kernels under the shared
+payload driver (operators/audio.py ``map_payload`` + ``per_clip``): one
+columnar scan of (clip_id, bytes, codec, sr_hz), one ``decode_one`` per
+clip, then ``profile_ints``, ``spectral_ints``, ``loudness_ints``,
+``bandwidth_ints`` and ``defect_ints`` on the same signal; zero shuffle,
+24 integer/error columns out.  Each FUSED_SCHEMA metric is picked BY NAME
+from the concatenation of the family field lists, and the error row is
+the same pick from the concatenation of the family error rows — this
+module holds no metric arithmetic, no error row and no Arrow type of its
+own, so the fused row equals the join of the five family operators on the
+same input by construction (asserted over every fixture plant in
+tests/test_fused.py, and gated against a spec-side expected parquet in
+the driver contract).
 
 Reference parity note: the reference engine (mastarija/valor,
 lib/Data/Valor.hs) has no audio layer; this is the scan-efficiency
@@ -27,6 +31,22 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
+
+from valor_spark.operators.audio import (
+    PROFILE_ERR,
+    PROFILE_FIELDS,
+    SPECTRUM_ERR,
+    SPECTRUM_FIELDS,
+    field_names,
+    map_payload,
+    per_clip,
+    profile_ints,
+    sample_rate,
+    spectral_ints,
+)
+from valor_spark.operators.bandwidth import BANDWIDTH_ERR, BANDWIDTH_FIELDS, bandwidth_ints
+from valor_spark.operators.defects import DEFECT_ERR, DEFECT_FIELDS, defect_ints
+from valor_spark.operators.loudness import LOUDNESS_ERR, LOUDNESS_FIELDS, loudness_ints
 
 #: fused output schema — family order: identity, profile, spectrum,
 #: loudness, bandwidth, defects, error
@@ -43,90 +63,41 @@ FUSED_SCHEMA = (
 )
 
 
+#: position of each fused metric in the concatenated family outputs (the
+#: first family that names it)
+_FAMILY_NAMES = field_names(
+    ", ".join(
+        (PROFILE_FIELDS, SPECTRUM_FIELDS, LOUDNESS_FIELDS, BANDWIDTH_FIELDS, DEFECT_FIELDS)
+    )
+)
+_PICK = [_FAMILY_NAMES.index(n) for n in field_names(FUSED_SCHEMA)[2:-1]]
+#: the fused error row: the family error rows, concatenated and picked
+FUSED_ERR = tuple(
+    (PROFILE_ERR + SPECTRUM_ERR + LOUDNESS_ERR + BANDWIDTH_ERR + DEFECT_ERR)[k]
+    for k in _PICK
+)
+
+
 def fused_ints(sig: np.ndarray, sr: int) -> tuple:
     """All five families' integers for one decoded int16 signal, in
     FUSED_SCHEMA order (minus clip_id/src_sr/decode_error)."""
-    from valor_spark.operators.audio import profile_ints, spectral_ints
-    from valor_spark.operators.bandwidth import bandwidth_ints
-    from valor_spark.operators.defects import defect_ints
-    from valor_spark.operators.loudness import loudness_ints
-
-    m, peak, sumsq, ncl, nsil, lead, trail = profile_ints(sig)
-    _m, _db, dom_hz, _sb, imp = spectral_ints(sig, sr)
-    _m, nblk, gblk, lufs, pk_db, tp_db = loudness_ints(sig, sr)
-    _m, r95, r99, hf = bandwidth_ints(sig, sr)
-    _m, _c, mcr, mzr, zms, dc = defect_ints(sig, sr)
-    return (
-        m, peak, sumsq, ncl, nsil, lead, trail,
-        dom_hz, imp,
-        nblk, gblk, lufs, pk_db, tp_db,
-        r95, r99, hf,
-        mcr, mzr, zms, dc,
+    full = (
+        profile_ints(sig)
+        + spectral_ints(sig, sr)
+        + loudness_ints(sig, sr)
+        + bandwidth_ints(sig, sr)
+        + defect_ints(sig, sr)
     )
+    return tuple(full[k] for k in _PICK)
 
 
 def audio_all_stats(clips: DataFrame) -> DataFrame:
     """Per-clip FUSED metric table (see FUSED_SCHEMA) in ONE mapInArrow
-    pass: one scan, one decode, all families.  Error rows carry NULL for
-    every gated/NULLable metric and zero for the counters, matching each
-    family operator's own error contract."""
-    from valor_spark.operators.audio import _binary_views, decode_one
-
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    n_metrics = 21  # fused_ints arity
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            nrows = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            src_sr = np.asarray(
-                [r if r is not None else 0 for r in rates], np.int32
-            )
-            rows: list[tuple | None] = [None] * nrows
-            errors: list[str | None] = [None] * nrows
-            for i in range(nrows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                rows[i] = fused_ints(np.asarray(sig), int(src_sr[i]))
-            err_row = (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, None, None, None,
-                       None, None, None, 0, 0, None, 0)
-            assert len(err_row) == n_metrics
-            cols = list(
-                zip(*(r if r is not None else err_row for r in rows))
-            )
-            types = [
-                pa.int32(), pa.int64(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(), pa.int32(),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(src_sr, pa.int32())]
-                + [
-                    pa.array(list(c), t)
-                    for c, t in zip(cols, [pa.int32()] + types)
-                ]
-                + [pa.array(errors, pa.string())],
-                names=[f.strip().split(" ")[0] for f in FUSED_SCHEMA.split(",")],
-            )
-
-    return sel.mapInArrow(gen, FUSED_SCHEMA)
+    pass: one scan, one decode, all families.  An undecodable clip's row
+    is FUSED_ERR, so each metric reads 0 or NULL exactly as its family
+    operator's error row does."""
+    return map_payload(
+        clips.select("clip_id", sample_rate().alias("src_sr"), "bytes", "codec", sample_rate()),
+        FUSED_SCHEMA,
+        per_clip(fused_ints, FUSED_ERR),
+    )

@@ -66,6 +66,12 @@ ABS_GATE_LKFS = -70.0
 REL_GATE_LU = 10.0
 #: the spec's mean-square -> LKFS offset
 LKFS_OFFSET = -0.691
+#: ``loudness_ints``'s output fields, and its metrics for an undecodable clip
+LOUDNESS_FIELDS = (
+    "n_samples int, n_blocks int, gated_blocks int, lufs_milli int, "
+    "peak_milli_dbfs int, true_peak_milli_dbtp int"
+)
+LOUDNESS_ERR = (0, 0, 0, None, None, None)
 
 #: analog prototype parameters behind the spec's 48 kHz coefficient table
 #: (stage 1 pre-filter shelf; stage 2 RLB high-pass) — public derivation
@@ -251,78 +257,10 @@ def audio_loudness(clips: DataFrame) -> DataFrame:
     the spectrum pass cannot make: a clip whose waveform stats look
     healthy but that was mastered 20 LU hot (or whose speech sits under a
     gated-out noise floor) shows up directly in ``lufs_milli``."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import map_payload, per_clip, sample_rate
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, n_blocks int, gated_blocks int, "
-        "lufs_milli int, peak_milli_dbfs int, true_peak_milli_dbtp int, "
-        "decode_error string"
+    return map_payload(
+        clips.select("clip_id", "bytes", "codec", sample_rate()),
+        f"clip_id string, {LOUDNESS_FIELDS}, decode_error string",
+        per_clip(loudness_ints, LOUDNESS_ERR),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            n_blocks = np.zeros(n, np.int32)
-            gated = np.zeros(n, np.int32)
-            lufs: list[int | None] = [None] * n
-            peak: list[int | None] = [None] * n
-            tpeak: list[int | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    n_blocks[i],
-                    gated[i],
-                    lufs[i],
-                    peak[i],
-                    tpeak[i],
-                ) = loudness_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(n_blocks, pa.int32()),
-                    pa.array(gated, pa.int32()),
-                    pa.array(lufs, pa.int32()),
-                    pa.array(peak, pa.int32()),
-                    pa.array(tpeak, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [
-                        b.schema.field(0),
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("n_blocks", pa.int32()),
-                        pa.field("gated_blocks", pa.int32()),
-                        pa.field("lufs_milli", pa.int32()),
-                        pa.field("peak_milli_dbfs", pa.int32()),
-                        pa.field("true_peak_milli_dbtp", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)

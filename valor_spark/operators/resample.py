@@ -32,6 +32,7 @@ from functools import lru_cache
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: taps per polyphase branch.  beta=8.6 buys ~90 dB stopband at ANY
 #: length; the length buys TRANSITION WIDTH: ~5.7/N of the upsampled
@@ -120,76 +121,31 @@ def audio_resample_stats(clips: DataFrame, target_sr: int = 16000) -> DataFrame:
     the tone a clip carried survived the rate change at the right
     frequency.  ONE mapInArrow pass, no shuffle."""
     from valor_spark.operators.audio import (
-        _binary_views,
-        decode_one,
+        map_payload,
+        per_clip,
+        sample_rate,
         spectral_ints,
     )
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
+    target = int(target_sr)
+
+    def stats(sig, sr):
+        out = resample_poly(np.asarray(sig), sr, target)
+        return len(sig), len(out), spectral_ints(out, target)[2]
+
+    resampled = per_clip(stats, (0, 0, 0))
+
+    def row(raw, codec, sr):
+        if raw is not None and sr <= 0:
+            return [(0, 0, 0, "bad_rate")]
+        return resampled(raw, codec, sr)
+
+    return map_payload(
+        clips.select(
+            "clip_id", sample_rate().alias("src_sr"), F.lit(target).alias("out_sr"),
+            "bytes", "codec", sample_rate(),
+        ),
         "clip_id string, src_sr int, out_sr int, n_in int, n_out int, "
-        "dom_hz int, decode_error string"
+        "dom_hz int, decode_error string",
+        row,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            nrows = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            src_sr = np.zeros(nrows, np.int32)
-            n_in = np.zeros(nrows, np.int32)
-            n_out = np.zeros(nrows, np.int32)
-            dom_hz = np.zeros(nrows, np.int32)
-            errors: list[str | None] = [None] * nrows
-            for i in range(nrows):
-                rw = get_bytes(i)
-                sr = rates[i] if rates[i] is not None else 0
-                src_sr[i] = sr
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if sr <= 0:
-                    errors[i] = "bad_rate"
-                    continue
-                cod = codecs[i]
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                n_in[i] = len(sig)
-                out = resample_poly(np.asarray(sig), sr, target_sr)
-                n_out[i] = len(out)
-                dom_hz[i] = spectral_ints(out, target_sr)[2]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(src_sr, pa.int32()),
-                    pa.array(
-                        np.full(nrows, target_sr, np.int32), pa.int32()
-                    ),
-                    pa.array(n_in, pa.int32()),
-                    pa.array(n_out, pa.int32()),
-                    pa.array(dom_hz, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "src_sr",
-                    "out_sr",
-                    "n_in",
-                    "n_out",
-                    "dom_hz",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

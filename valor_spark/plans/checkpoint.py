@@ -33,6 +33,12 @@ Iceberg partitions.  A whole-table stage (constraints) commits one record
 with shard ``GLOBAL_SHARD`` (-1); its run directory is read whole, because
 its rows carry shard NULL.
 
+One writer per checkpoint dir: a ``RunManifest`` parses ``manifest.jsonl``
+once, when it is opened, and from then on keeps each stage's latest
+records in memory, updated by its own ``append``.  The sweep makes the
+same assumption — a second process committing to the same dir would have
+its run directories swept and its records unseen until it reopens.
+
 Deployment note: the run directory must be a filesystem every retry of the
 DRIVER can reach (HDFS/S3/DBFS mount on a cluster; local disk suffices in
 local mode).  Executors never touch the manifest — only violation parquet
@@ -121,8 +127,15 @@ class RunManifest:
                     f"(first line {first.strip()[:80]!r}); start from a fresh "
                     f"checkpoint_dir"
                 )
+        self._latest: dict[str, dict[int, ShardRecord]] = {}
+        self._remember(self.records())
+
+    def _remember(self, records: list[ShardRecord]) -> None:
+        for r in records:
+            self._latest.setdefault(r.stage, {})[r.shard] = r
 
     def records(self) -> list[ShardRecord]:
+        """Parse every committed record of the manifest file."""
         out = []
         with open(self.path) as f:
             f.readline()  # the header, checked on open
@@ -137,7 +150,7 @@ class RunManifest:
 
     def latest(self, stage: str) -> dict[int, ShardRecord]:
         """The committed record of each shard of ``stage``: its last one."""
-        return {r.shard: r for r in self.records() if r.stage == stage}
+        return dict(self._latest.get(stage, {}))
 
     def append(self, records: list[ShardRecord]) -> None:
         """Commit: append ``records`` (fsync'd), then sweep the run
@@ -150,8 +163,9 @@ class RunManifest:
             f.write((("\n" if torn else "") + text).encode())
             f.flush()
             os.fsync(f.fileno())
+        self._remember(records)
         for stage in {r.stage for r in records}:
-            named = {r.run_id for r in self.latest(stage).values()}
+            named = {r.run_id for r in self._latest[stage].values()}
             stage_dir = self.violations_path(stage)
             for run_id in os.listdir(stage_dir):
                 if run_id not in named:
