@@ -281,6 +281,66 @@ def test_resume_invalidated_by_config_change(spark, tmp_path_factory):
     assert r2.violations.filter(F.col("rule") == "audio_snr").count() == 1
 
 
+def test_row_rules_resume_invalidated_by_same_name_gate_change(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The row-rules resume key hashes the gate text, not the rule names:
+    a narrower ``ALLOWED_SR`` under the same ``sr_valid`` name recomputes
+    every shard, and an unchanged rerun still skips them all."""
+    from valor_spark.plans import pipeline as P
+
+    clips = _clean_clips(spark)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_gate_row"))
+    assert run_pipeline(spark, clips, None, checkpoint_dir=ckpt).violations.count() == 0
+    assert run_pipeline(spark, clips, None, checkpoint_dir=ckpt).skipped["row_rules"] == [0, 1]
+
+    monkeypatch.setattr(P, "ALLOWED_SR", [8000, 44100, 48000])
+    r = run_pipeline(spark, clips, None, checkpoint_dir=ckpt)
+    assert r.skipped["row_rules"] == []
+    got = {(x["rule"], x["error"]) for x in r.violations.collect()}
+    assert got == {("sr_valid", "SampleRateNotAllowed")}
+    assert r.violations.count() == clips.count()
+    again = run_pipeline(spark, clips, None, checkpoint_dir=ckpt)
+    assert again.skipped["row_rules"] == [0, 1]
+    assert again.violations.count() == clips.count()
+
+
+def test_audio_resume_invalidated_by_same_name_gate_change(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A changed ``audio_snr`` gate body at the same ``snr_db_min`` (a
+    non-finite SNR now fails too) recomputes every audio shard instead of
+    serving the old gate's verdicts."""
+    from valor_spark import gates
+    from valor_spark.operators import audio as A
+    from valor_spark.plans import pipeline as P
+
+    clips, ref = _audio_clips_ref(spark)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_gate_audio"))
+    run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    r1 = run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    assert sorted(r1.skipped["audio"]) == [0, 1, 2, 3]
+    assert r1.violations.filter(F.col("rule") == "audio_snr").count() == 0
+
+    def finite_snr_rules(snr_db_min):
+        rules = A.audio_rules(snr_db_min)
+        rules.update(gates({"audio_snr": [(
+            f"decode_error IS NULL AND NOT (snr_db >= {snr_db_min!r}D "
+            "AND snr_db < CAST('Infinity' AS DOUBLE))",
+            "concat('SnrBelowThreshold:', CAST(round(snr_db, 2) AS STRING))",
+        )]}))
+        return rules
+
+    monkeypatch.setattr(P, "audio_rules", finite_snr_rules)
+    r2 = run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    assert r2.skipped["audio"] == []
+    snr = r2.violations.filter(F.col("rule") == "audio_snr")
+    assert {x["error"] for x in snr.collect()} == {"SnrBelowThreshold:Infinity"}
+    assert snr.count() == clips.count()
+    r3 = run_pipeline(spark, clips, ref, checkpoint_dir=ckpt)
+    assert sorted(r3.skipped["audio"]) == [0, 1, 2, 3]
+
+
 def test_resume_drops_violations_of_removed_shards(spark, tmp_path_factory):
     """A shard removed from the input must not resurface its old violations
     from the stage directory on resume."""

@@ -35,6 +35,7 @@ from valor_spark.functions.rules import (
     fail_if,
     field,
     fmap_err,
+    gates,
     inert,
     inert_col,
     is_inert,
@@ -58,7 +59,8 @@ __all__ = [
     "strings",
     "Rule", "acc", "adapt", "alt", "bind", "bind_k", "check1", "checkN",
     "checkN_map", "con", "conN",
-    "fail_", "fail_col", "fail_if", "field", "fmap_err", "inert", "inert_col",
+    "fail_", "fail_col", "fail_if", "field", "fmap_err", "gates", "inert",
+    "inert_col",
     "is_inert",
     "is_wrong", "make", "mk", "nerf", "pass_", "pass_if", "peek", "peer",
     "poke", "record", "test", "val_w", "wrong_case",

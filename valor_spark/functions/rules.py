@@ -19,6 +19,12 @@ Wrong a x Inert b     Wrong (a <> b)     Wrong (a b)       Inert b    Inert b
 Wrong a x Wrong b     Wrong (a <> b)     Wrong (a b)       Wrong b    Wrong (a <> b)
 ====================  =================  ================  =========  =============
 
+Product rule sets are data: :func:`gates` builds one from a table of
+``(when_sql, error_sql)`` gates, each a :func:`make` over one SQL-text leaf
+(one ``F.expr``, where a hand-built leaf is a tree of Column nodes, each a
+py4j round trip on the driver), folded per rule by :func:`conN`.  The text
+stays on the rule (``Rule.sql``) for resume keys to hash.
+
 Monadic combinators (``failIfM``/``passIfM``/``make`` with effects): the
 reference runs effects value-at-a-time inside ``m`` (Valor.hs:422-423); our
 engine hoists effects to DataFrame pre-passes (joins / aggregations) that
@@ -62,6 +68,10 @@ class Rule:
     Operators: ``a & b`` = :func:`con`, ``a | b`` = :func:`alt`,
     ``a ^ b`` = :func:`acc` (cf. Valor.hs:75-97).
     """
+
+    #: the ``(when_sql, error_sql)`` text of a rule built by :func:`gates`
+    #: (what a resume key hashes); None for a rule built from Columns
+    sql: tuple[tuple[str, str], ...] | None = None
 
     def __init__(self, fn: Callable[[Column], Column], etype: ErrType):
         self.fn = fn
@@ -148,6 +158,27 @@ def make(err_fn: Callable[[Column], Column], etype: ErrType | None = None) -> Ru
         )
 
     return Rule(fn, et)
+
+
+def gates(table: Mapping[str, Sequence[tuple[str, str]]]) -> dict[str, Rule]:
+    """A rule set from a table of SQL-text gates, ``{rule_name:
+    [(when_sql, error_sql), ...]}``.  Each gate is a :func:`make` whose leaf
+    is ``CASE WHEN <when_sql> THEN array(<error_sql>) END`` (a NULL
+    condition leaves it inert), and a rule is the :func:`conN` of its gates.
+
+    The leaves name the frame's top-level columns rather than a focused
+    input: ``validate`` evaluates every rule in one select over the frame.
+    Each rule keeps its gate text as :attr:`Rule.sql`."""
+    ea = EArray()
+
+    def gate(when: str, error: str) -> Rule:
+        return make(lambda _row: F.expr(f"CASE WHEN {when} THEN array({error}) END"), ea)
+
+    out = {}
+    for name, pairs in table.items():
+        out[name] = conN(*[gate(w, e) for w, e in pairs])
+        out[name].sql = tuple(pairs)
+    return out
 
 
 # ---------------------------------------------------------------------------

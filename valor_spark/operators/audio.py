@@ -51,9 +51,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from valor_spark.functions.rules import gates
 from valor_spark.operators.adpcm import decode_ima_adpcm
+from valor_spark.utils import sql_lit
 
 SNR_DB_MIN = 30.0
+
+#: the one gate every audio rule set reports decode failures with
+DECODE_GATE = ("decode_error IS NOT NULL", "'DecodeError:' || decode_error")
 
 
 def _build_g711_luts() -> tuple[np.ndarray, np.ndarray]:
@@ -380,58 +385,15 @@ def with_audio_invariant(clips: DataFrame, clips_ref: DataFrame) -> DataFrame:
 
 
 def audio_rules(snr_db_min: float = SNR_DB_MIN) -> dict:
-    """Row rules over the invariant columns (pure Valor combinators)."""
-    from valor_spark import EArray, make
-
-    EA = EArray()
-    decode_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNotNull(),
-            F.array(F.concat(F.lit("DecodeError:"), row.getField("decode_error"))),
-        ),
-        EA,
-    )
-    snr_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNull()
-            & (row.getField("snr_db") < F.lit(snr_db_min)),
-            F.array(
-                F.concat(
-                    F.lit("SnrBelowThreshold:"),
-                    F.round(row.getField("snr_db"), 2).cast("string"),
-                )
-            ),
-        ),
-        EA,
-    )
-    transcript_rule = make(
-        lambda row: F.when(
-            ~row.getField("transcript_ok"), EA.lit(["TranscriptMismatch"])
-        ),
-        EA,
-    )
-    sr_header_rule = make(
-        lambda row: F.when(
-            row.getField("header_sr_hz").isNotNull()
-            & (row.getField("sr_hz") > 0)
-            & (row.getField("header_sr_hz") != row.getField("sr_hz")),
-            F.array(
-                F.concat(
-                    F.lit("SampleRateHeaderMismatch:"),
-                    row.getField("header_sr_hz").cast("string"),
-                    F.lit("!="),
-                    row.getField("sr_hz").cast("string"),
-                )
-            ),
-        ),
-        EA,
-    )
-    return {
-        "audio_decode": decode_rule,
-        "audio_snr": snr_rule,
-        "transcript_equal": transcript_rule,
-        "sr_header_consistent": sr_header_rule,
-    }
+    """Row rules over the invariant columns, as SQL-text gates."""
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "audio_snr": [(f"decode_error IS NULL AND snr_db < {sql_lit(snr_db_min)}",
+                       "'SnrBelowThreshold:' || round(snr_db, 2)")],
+        "transcript_equal": [("NOT transcript_ok", "'TranscriptMismatch'")],
+        "sr_header_consistent": [("sr_hz > 0 AND header_sr_hz != sr_hz",
+                                  "'SampleRateHeaderMismatch:' || header_sr_hz || '!=' || sr_hz")],
+    })
 
 
 #: ``profile_ints``'s output fields, and its metrics for an undecodable clip
@@ -513,73 +475,20 @@ def audio_profile_derived(prof: DataFrame) -> DataFrame:
 def audio_quality_rules(
     max_clipping_per_mille: int = 10, max_silence_per_mille: int = 900
 ) -> dict:
-    """Row rules over the integer profile (pure Valor combinators; integer
+    """Row rules over the integer profile, as SQL-text gates (integer
     per-mille thresholds so no float literal enters the comparison):
     decode failures, clipping beyond threshold, mostly-silent clips, and
     all-zero signal."""
-    from valor_spark import EArray, make
-
-    EA = EArray()
-    decode_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNotNull(),
-            F.array(F.concat(F.lit("DecodeError:"), row.getField("decode_error"))),
-        ),
-        EA,
-    )
-    clip_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNull()
-            & (row.getField("n_samples") > 0)
-            & (
-                row.getField("n_clipped").cast("bigint") * 1000
-                > F.lit(max_clipping_per_mille) * row.getField("n_samples")
-            ),
-            F.array(
-                F.concat(
-                    F.lit("ClippingDetected:"),
-                    row.getField("n_clipped").cast("string"),
-                    F.lit("/"),
-                    row.getField("n_samples").cast("string"),
-                )
-            ),
-        ),
-        EA,
-    )
-    silence_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNull()
-            & (row.getField("n_samples") > 0)
-            & (
-                row.getField("n_silent").cast("bigint") * 1000
-                > F.lit(max_silence_per_mille) * row.getField("n_samples")
-            ),
-            F.array(
-                F.concat(
-                    F.lit("MostlySilent:"),
-                    row.getField("n_silent").cast("string"),
-                    F.lit("/"),
-                    row.getField("n_samples").cast("string"),
-                )
-            ),
-        ),
-        EA,
-    )
-    zero_rule = make(
-        lambda row: F.when(
-            row.getField("decode_error").isNull()
-            & (row.getField("n_samples") > 0)
-            & (row.getField("peak_abs") == 0),
-            EA.lit(["ZeroSignal"]),
-        ),
-        EA,
-    )
-    return {
-        "audio_decode": decode_rule,
-        "audio_clipping": clip_rule,
-        "audio_silence": silence_rule,
-        "audio_zero_signal": zero_rule,
-    }
+    live = "decode_error IS NULL AND n_samples > 0"
+    clip, silent = sql_lit(max_clipping_per_mille), sql_lit(max_silence_per_mille)
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "audio_clipping": [(f"{live} AND CAST(n_clipped AS BIGINT) * 1000 > {clip} * n_samples",
+                            "'ClippingDetected:' || n_clipped || '/' || n_samples")],
+        "audio_silence": [(f"{live} AND CAST(n_silent AS BIGINT) * 1000 > {silent} * n_samples",
+                           "'MostlySilent:' || n_silent || '/' || n_samples")],
+        "audio_zero_signal": [(f"{live} AND peak_abs = 0", "'ZeroSignal'")],
+    })
 
 
 #: half-width (in bins) of the main-lobe exclusion zone when hunting the

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from valor_spark.functions.rules import gates
+from valor_spark.utils import sql_lit
+
 # tiny per-language stopword marker sets (heuristic language ID)
 LANG_MARKERS = {
     "en": ["the", "and", "of", "is", "in"],
@@ -349,42 +352,24 @@ def doc_quality_rules(
     max_mean_chars_deci: int = 100,
 ) -> dict:
     """Gopher-style document quality filters AS VALOR RULES over the
-    integer feature row :func:`doc_repetition` produces — the rule algebra
-    applied to the training-data domain: too-short docs, token-repetition
-    beyond threshold (distinct/total below ``min_distinct_per_mille``), and
-    mean word length outside [3.0, 10.0] chars.  Every decision is an
-    integer cross-product (per-mille / deci-char thresholds), so verdicts
-    are exact and engine-portable."""
-    from valor_spark import EArray, conN, make
-
-    EA = EArray()
-
-    def rule(cond_fn, err: str):
-        return make(
-            lambda row: F.when(cond_fn(row), EA.lit([err])), EA
-        )
-
-    nt = lambda r: r.getField("n_tokens").cast("bigint")
-    nd = lambda r: r.getField("n_distinct_tokens").cast("bigint")
-    sc = lambda r: r.getField("sum_token_chars")
-    return {
-        "min_tokens": rule(lambda r: nt(r) < min_tokens, "TooFewTokens"),
-        "repetition": rule(
-            lambda r: (nt(r) > 0)
-            & (nd(r) * 1000 < nt(r) * min_distinct_per_mille),
-            "TooRepetitive",
-        ),
-        "word_length": conN(
-            rule(
-                lambda r: (nt(r) > 0) & (sc(r) * 10 < nt(r) * min_mean_chars_deci),
-                "WordsTooShort",
-            ),
-            rule(
-                lambda r: (nt(r) > 0) & (sc(r) * 10 > nt(r) * max_mean_chars_deci),
-                "WordsTooLong",
-            ),
-        ),
-    }
+    integer feature row :func:`doc_repetition` produces, as SQL-text gates
+    — the rule algebra applied to the training-data domain: too-short docs,
+    token-repetition beyond threshold (distinct/total below
+    ``min_distinct_per_mille``), and mean word length outside [3.0, 10.0]
+    chars.  Every decision is an integer cross-product (per-mille /
+    deci-char thresholds), so verdicts are exact and engine-portable."""
+    nt, nd = "CAST(n_tokens AS BIGINT)", "CAST(n_distinct_tokens AS BIGINT)"
+    return gates({
+        "min_tokens": [(f"{nt} < {sql_lit(min_tokens)}", "'TooFewTokens'")],
+        "repetition": [(f"{nt} > 0 AND {nd} * 1000 < {nt} * {sql_lit(min_distinct_per_mille)}",
+                        "'TooRepetitive'")],
+        "word_length": [
+            (f"{nt} > 0 AND sum_token_chars * 10 < {nt} * {sql_lit(min_mean_chars_deci)}",
+             "'WordsTooShort'"),
+            (f"{nt} > 0 AND sum_token_chars * 10 > {nt} * {sql_lit(max_mean_chars_deci)}",
+             "'WordsTooLong'"),
+        ],
+    })
 
 
 def tfidf_topk(

@@ -5,6 +5,14 @@ Stages (SURVEY.md §2.6): (0) schema gate -> (1) vectorized row rules ->
 payload invariant -> (4) distribution drift -> (5) verdict assembly.  Every
 stage emits violation rows in one uniform shape and per-shard metrics into
 the checkpoint manifest; a resumed run skips completed shards/stages.
+
+The module also holds the product's corpus rule sets (row rules, speech
+rate, loudness, defects, channels, bandwidth, FLAC claims and their fused
+merge).  Each is a table of SQL-text gates handed to
+:func:`~valor_spark.functions.rules.gates`, so its thresholds and error
+strings are plain text.  The row-rule and audio stages hash that text into
+their resume keys: a changed gate under the same rule name recomputes the
+stage instead of serving the old gate's violations.
 """
 
 from __future__ import annotations
@@ -17,14 +25,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from valor_spark import EArray, adapt, conN, field, make
+from valor_spark.functions.rules import gates
 from valor_spark.operators import constraints as C
 from valor_spark.operators import drift as D
-from valor_spark.operators.audio import audio_rules, with_audio_invariant
+from valor_spark.operators.audio import DECODE_GATE, audio_rules, with_audio_invariant
 from valor_spark.plans.checkpoint import GLOBAL_SHARD, RunManifest, ShardRecord, in_shards
 from valor_spark.plans.engine import validate
-
-EA = EArray()
+from valor_spark.utils import sql_lit
 
 CLIPS_SCHEMA = T.StructType(
     [
@@ -64,36 +71,25 @@ MAX_WPM = 400
 
 def speech_rate_rules(min_wpm: int = MIN_WPM, max_wpm: int = MAX_WPM) -> dict:
     """Transcript-vs-duration consistency rule over the full row struct
-    (the rule algebra's multi-column form: no ``adapt``/``field`` focus —
-    ``make`` reads two fields of the row).
+    (a multi-column gate: it reads two columns of the row).
 
     All-integer decision: ``n_tokens * 60000`` vs ``wpm_bound * dur_ms``
     (bigint — no float division, so the verdict is exact and
     engine-portable).  Rows with NULL/empty transcripts or non-positive
     durations are OUT of scope — the single-field rules already flag them,
     and a rate over garbage inputs would double-report."""
-
-    def _toks(tr):
-        return F.filter(F.split(F.lower(tr), r"\s+"), lambda t: t != "")
-
-    def _guarded(cond_fn, err: str):
-        def err_fn(row):
-            tr = row.getField("transcript")
-            dur = row.getField("dur_ms")
-            in_scope = (
-                tr.isNotNull() & (tr != "") & dur.isNotNull() & (dur > 0)
-            )
-            nt = F.size(_toks(tr)).cast("bigint")
-            return F.when(in_scope & cond_fn(nt, dur.cast("bigint")), EA.lit([err]))
-
-        return make(err_fn, EA)
-
-    return {
-        "speech_rate": conN(
-            _guarded(lambda nt, dur: nt * 60000 > max_wpm * dur, "SpeechTooFast"),
-            _guarded(lambda nt, dur: nt * 60000 < min_wpm * dur, "SpeechTooSlow"),
-        )
-    }
+    in_scope = "transcript != '' AND dur_ms > 0"
+    words = (
+        r"CAST(size(filter(split(lower(transcript), '\\s+'), t -> t != '')) "
+        "AS BIGINT) * 60000"
+    )
+    dur = "CAST(dur_ms AS BIGINT)"
+    return gates({
+        "speech_rate": [
+            (f"{in_scope} AND {words} > {sql_lit(max_wpm)} * {dur}", "'SpeechTooFast'"),
+            (f"{in_scope} AND {words} < {sql_lit(min_wpm)} * {dur}", "'SpeechTooSlow'"),
+        ]
+    })
 
 
 #: EBU R128-style corpus loudness gate (milli-units of operators/loudness.py)
@@ -123,37 +119,14 @@ def bandwidth_rules(
       upsampled from a lower-rate original (or lossy-transcoded through
       one), i.e. the metadata overstates the information content — the
       corpus fault a sample-rate whitelist cannot see."""
-
-    def _unmeasurable(row):
-        return F.when(
-            row.getField("decode_error").isNull()
-            & row.getField("rolloff99_hz").isNull(),
-            EA.lit(["Unmeasurable"]),
-        )
-
-    def _upsampled(row):
-        r99 = row.getField("rolloff99_hz")
-        return F.when(
-            (r99 * nyq_factor <= row.getField("src_sr"))
-            & (row.getField("hf_permille") <= hf_permille_max),
-            F.array(
-                F.concat(F.lit("Upsampled:"), r99.cast("string"))
-            ),
-        )
-
-    return {
-        "audio_decode": adapt(
-            field("decode_error"),
-            make(
-                lambda c: F.when(
-                    c.isNotNull(), F.array(F.concat(F.lit("DecodeError:"), c))
-                ),
-                EA,
-            ),
-        ),
-        "bandwidth_unmeasurable": make(_unmeasurable, EA),
-        "upsample_provenance": make(_upsampled, EA),
-    }
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "bandwidth_unmeasurable": [
+            ("decode_error IS NULL AND rolloff99_hz IS NULL", "'Unmeasurable'")],
+        "upsample_provenance": [(
+            f"rolloff99_hz * {sql_lit(nyq_factor)} <= src_sr "
+            f"AND hf_permille <= {sql_lit(hf_permille_max)}", "'Upsampled:' || rolloff99_hz")],
+    })
 
 
 #: waveform-defect corpus gates (units of operators/defects.py)
@@ -168,9 +141,8 @@ def defect_rules(
     dc_permille_limit: int = DC_PERMILLE_LIMIT,
 ) -> dict:
     """Waveform-defect gates over the ``audio_defects`` OUTPUT frame
-    (operators/defects.py) in the reference's rule algebra (adapt/field/
-    make over all-integer columns, pure Column expressions, one
-    shuffle-free Project):
+    (operators/defects.py), as SQL-text gates over all-integer columns
+    (one shuffle-free Project):
 
     * ``audio_decode`` — decode errors surface as rule violations;
     * ``clipping``     — a pinned-sample RUN of ``clip_run_limit`` or more
@@ -187,61 +159,17 @@ def defect_rules(
 
     Decode-error rows carry zeroed metrics, so the waveform rules are
     naturally inert on them (passIf semantics, no explicit guard)."""
-
-    def _silence(row):
-        return F.when(
-            (row.getField("n_samples") > 0)
-            & (row.getField("max_zero_run") == row.getField("n_samples")),
-            EA.lit(["AllSilence"]),
-        )
-
-    def _dropout(row):
-        return F.when(
-            (row.getField("max_zero_run") < row.getField("n_samples"))
-            & (row.getField("max_zero_run_ms") >= dropout_ms_limit),
-            F.array(
-                F.concat(
-                    F.lit("Dropout:"),
-                    row.getField("max_zero_run_ms").cast("string"),
-                )
-            ),
-        )
-
-    return {
-        "audio_decode": adapt(
-            field("decode_error"),
-            make(
-                lambda c: F.when(
-                    c.isNotNull(), F.array(F.concat(F.lit("DecodeError:"), c))
-                ),
-                EA,
-            ),
-        ),
-        "clipping": adapt(
-            field("max_clip_run"),
-            make(
-                lambda c: F.when(
-                    c >= clip_run_limit,
-                    F.array(
-                        F.concat(F.lit("HardClipped:"), c.cast("string"))
-                    ),
-                ),
-                EA,
-            ),
-        ),
-        "silence": make(_silence, EA),
-        "dropout": make(_dropout, EA),
-        "dc_offset": adapt(
-            field("dc_offset_permille"),
-            make(
-                lambda c: F.when(
-                    F.abs(c) >= dc_permille_limit,
-                    F.array(F.concat(F.lit("DCOffset:"), c.cast("string"))),
-                ),
-                EA,
-            ),
-        ),
-    }
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "clipping": [(f"max_clip_run >= {sql_lit(clip_run_limit)}",
+                      "'HardClipped:' || max_clip_run")],
+        "silence": [("n_samples > 0 AND max_zero_run = n_samples", "'AllSilence'")],
+        "dropout": [(
+            f"max_zero_run < n_samples AND max_zero_run_ms >= {sql_lit(dropout_ms_limit)}",
+            "'Dropout:' || max_zero_run_ms")],
+        "dc_offset": [(f"abs(dc_offset_permille) >= {sql_lit(dc_permille_limit)}",
+                       "'DCOffset:' || dc_offset_permille")],
+    })
 
 
 #: inter-channel corpus gates (units of operators/channels.py)
@@ -256,9 +184,8 @@ def channel_rules(
     imbalance_lo: int = IMBALANCE_LO_PERMILLE,
 ) -> dict:
     """Inter-channel gates over the ``audio_channels`` OUTPUT frame
-    (operators/channels.py) in the reference's rule algebra (adapt/field/
-    make over all-integer columns, pure Column expressions, one
-    shuffle-free Project):
+    (operators/channels.py), as SQL-text gates over all-integer columns
+    (one shuffle-free Project):
 
     * ``audio_decode``      — decode errors surface as rule violations;
     * ``phase_inversion``   — normalized inter-channel correlation at or
@@ -272,45 +199,16 @@ def channel_rules(
     Mono clips carry the pair metrics as NULL, so every stereo rule is
     naturally inert on them (SQL null semantics, no explicit guard) —
     the same pattern as decode-error rows in ``defect_rules``."""
-
-    def _dual(row):
-        return F.when(
-            (row.getField("dual_mono") == 1) & (row.getField("ssq_l") > 0),
-            EA.lit(["DualMono"]),
-        )
-
-    def _imbalance(row):
-        bal = row.getField("balance_permille")
-        return F.when(
-            (bal >= imbalance_hi) | (bal <= imbalance_lo),
-            F.array(F.concat(F.lit("Imbalance:"), bal.cast("string"))),
-        )
-
-    return {
-        "audio_decode": adapt(
-            field("decode_error"),
-            make(
-                lambda c: F.when(
-                    c.isNotNull(), F.array(F.concat(F.lit("DecodeError:"), c))
-                ),
-                EA,
-            ),
-        ),
-        "phase_inversion": adapt(
-            field("phase_permille"),
-            make(
-                lambda c: F.when(
-                    c <= phase_invert_permille,
-                    F.array(
-                        F.concat(F.lit("PhaseInverted:"), c.cast("string"))
-                    ),
-                ),
-                EA,
-            ),
-        ),
-        "channel_imbalance": make(_imbalance, EA),
-        "dual_mono": make(_dual, EA),
-    }
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "phase_inversion": [(f"phase_permille <= {sql_lit(phase_invert_permille)}",
+                             "'PhaseInverted:' || phase_permille")],
+        "channel_imbalance": [(
+            f"balance_permille >= {sql_lit(imbalance_hi)} "
+            f"OR balance_permille <= {sql_lit(imbalance_lo)}",
+            "'Imbalance:' || balance_permille")],
+        "dual_mono": [("dual_mono = 1 AND ssq_l > 0", "'DualMono'")],
+    })
 
 
 def flac_rules() -> dict:
@@ -332,41 +230,13 @@ def flac_rules() -> dict:
 
     Rows with NULL metrics (unparseable streams) keep every claims rule
     inert via SQL null semantics; the decode rule carries them."""
-
-    def _rate_claim(row):
-        claim, meta = row.getField("claim_sample_rate"), row.getField("sr_hz")
-        return F.when(
-            claim != meta,
-            F.array(
-                F.concat(
-                    F.lit("RateClaimMismatch:"),
-                    claim.cast("string"),
-                    F.lit("!="),
-                    meta.cast("string"),
-                )
-            ),
-        )
-
-    return {
-        "flac_decode": adapt(
-            field("decode_error"),
-            make(
-                lambda c: F.when(
-                    c.isNotNull(), F.array(F.concat(F.lit("DecodeError:"), c))
-                ),
-                EA,
-            ),
-        ),
-        "flac_md5": adapt(
-            field("md5_ok"),
-            make(lambda c: F.when(c == 0, EA.lit(["Md5Mismatch"])), EA),
-        ),
-        "flac_rate_claim": make(_rate_claim, EA),
-        "flac_unknown_length": adapt(
-            field("claim_total_samples"),
-            make(lambda c: F.when(c == 0, EA.lit(["UnknownLength"])), EA),
-        ),
-    }
+    return gates({
+        "flac_decode": [DECODE_GATE],
+        "flac_md5": [("md5_ok = 0", "'Md5Mismatch'")],
+        "flac_rate_claim": [("claim_sample_rate != sr_hz",
+                             "'RateClaimMismatch:' || claim_sample_rate || '!=' || sr_hz")],
+        "flac_unknown_length": [("claim_total_samples = 0", "'UnknownLength'")],
+    })
 
 
 def corpus_audio_rules() -> dict:
@@ -387,9 +257,8 @@ def loudness_rules(
     max_true_peak_milli: int = MAX_TRUE_PEAK_MILLI,
 ) -> dict:
     """Program-level audio gates over the ``audio_loudness`` OUTPUT frame
-    (operators/loudness.py) — the R128-style corpus window re-expressed in
-    the reference's rule algebra (adapt/field/make/conN over integer
-    milli-units, pure Column expressions, one shuffle-free Project):
+    (operators/loudness.py) — the R128-style corpus window re-expressed as
+    SQL-text gates over integer milli-units (one shuffle-free Project):
 
     * ``audio_decode``   — decode errors surface as rule violations;
     * ``loudness_measurable`` — a decodable clip whose every gating block
@@ -402,106 +271,33 @@ def loudness_rules(
 
     NULL inputs are out of scope for range/peak rules (NULL comparisons
     are NULL -> no error), mirroring the reference's passIf semantics."""
-    EA = EArray()
-
-    def _measurable(row):
-        return F.when(
-            row.getField("decode_error").isNull()
-            & row.getField("lufs_milli").isNull(),
-            EA.lit(["Unmeasurable"]),
-        )
-
-    return {
-        "audio_decode": adapt(
-            field("decode_error"),
-            make(
-                lambda c: F.when(
-                    c.isNotNull(), F.array(F.concat(F.lit("DecodeError:"), c))
-                ),
-                EA,
-            ),
-        ),
-        "loudness_measurable": make(_measurable, EA),
-        "loudness_range": adapt(
-            field("lufs_milli"),
-            conN(
-                make(
-                    lambda c: F.when(
-                        c < min_lufs_milli,
-                        F.array(F.concat(F.lit("TooQuiet:"), c.cast("string"))),
-                    ),
-                    EA,
-                ),
-                make(
-                    lambda c: F.when(
-                        c > max_lufs_milli,
-                        F.array(F.concat(F.lit("TooLoud:"), c.cast("string"))),
-                    ),
-                    EA,
-                ),
-            ),
-        ),
-        "true_peak": adapt(
-            field("true_peak_milli_dbtp"),
-            make(
-                lambda c: F.when(
-                    c > max_true_peak_milli,
-                    F.array(
-                        F.concat(F.lit("ClippingRisk:"), c.cast("string"))
-                    ),
-                ),
-                EA,
-            ),
-        ),
-    }
+    return gates({
+        "audio_decode": [DECODE_GATE],
+        "loudness_measurable": [("decode_error IS NULL AND lufs_milli IS NULL", "'Unmeasurable'")],
+        "loudness_range": [
+            (f"lufs_milli < {sql_lit(min_lufs_milli)}", "'TooQuiet:' || lufs_milli"),
+            (f"lufs_milli > {sql_lit(max_lufs_milli)}", "'TooLoud:' || lufs_milli"),
+        ],
+        "true_peak": [(f"true_peak_milli_dbtp > {sql_lit(max_true_peak_milli)}",
+                       "'ClippingRisk:' || true_peak_milli_dbtp")],
+    })
 
 
 def clips_row_rules() -> dict:
-    """Per-row schema/sanity rules over the input_hint columns — all pure
-    Column expressions (one narrow select, no shuffle)."""
-    return {
-        "clip_id_valid": adapt(
-            field("clip_id"),
-            make(
-                lambda c: F.when(c.isNull() | (c == ""), EA.lit(["ClipIdEmpty"])), EA
-            ),
-        ),
-        "sr_valid": adapt(
-            field("sr_hz"),
-            conN(
-                make(lambda c: F.when(c.isNull() | (c <= 0), EA.lit(["SampleRateNonPositive"])), EA),
-                make(
-                    lambda c: F.when(
-                        c.isNotNull() & (c > 0) & ~c.isin(ALLOWED_SR),
-                        EA.lit(["SampleRateNotAllowed"]),
-                    ),
-                    EA,
-                ),
-            ),
-        ),
-        "dur_positive": adapt(
-            field("dur_ms"),
-            make(lambda c: F.when(c.isNull() | (c <= 0), EA.lit(["DurationNonPositive"])), EA),
-        ),
-        "codec_allowed": adapt(
-            field("codec"),
-            make(
-                lambda c: F.when(
-                    c.isNull() | ~c.isin(ALLOWED_CODECS),
-                    F.array(F.concat(F.lit("CodecNotAllowed:"), F.coalesce(c, F.lit("null")))),
-                ),
-                EA,
-            ),
-        ),
-        "transcript_nonempty": adapt(
-            field("transcript"),
-            make(lambda c: F.when(c.isNull() | (c == ""), EA.lit(["TranscriptEmpty"])), EA),
-        ),
-        "bytes_present": adapt(
-            field("bytes"),
-            make(lambda c: F.when(c.isNull() | (F.length(c) == 0), EA.lit(["BytesEmpty"])), EA),
-        ),
-    }
+    """Per-row schema/sanity rules over the input_hint columns, as SQL-text
+    gates (one narrow select, no shuffle)."""
+    return gates({
+        "clip_id_valid": [("clip_id IS NULL OR clip_id = ''", "'ClipIdEmpty'")],
+        "sr_valid": [
+            ("sr_hz IS NULL OR sr_hz <= 0", "'SampleRateNonPositive'"),
+            (f"sr_hz > 0 AND sr_hz NOT IN {sql_lit(ALLOWED_SR)}", "'SampleRateNotAllowed'"),
+        ],
+        "dur_positive": [("dur_ms IS NULL OR dur_ms <= 0", "'DurationNonPositive'")],
+        "codec_allowed": [(f"codec IS NULL OR codec NOT IN {sql_lit(ALLOWED_CODECS)}",
+                           "'CodecNotAllowed:' || coalesce(codec, 'null')")],
+        "transcript_nonempty": [("transcript IS NULL OR transcript = ''", "'TranscriptEmpty'")],
+        "bytes_present": [("bytes IS NULL OR length(bytes) = 0", "'BytesEmpty'")],
+    })
 
 
 def _fingerprint_cols(
@@ -574,6 +370,13 @@ def _cfg_fingerprint(*parts) -> int:
 
     digest = hashlib.md5(repr(parts).encode()).digest()[:8]
     return int.from_bytes(digest, "big", signed=True)
+
+
+def _gate_text(rules: dict) -> tuple:
+    """A rule set's resume-key part: every rule's name with its gate text,
+    so a changed threshold, list or error string under the same rule name
+    invalidates like a data change."""
+    return tuple((name, rule.sql) for name, rule in rules.items())
 
 
 @dataclass
@@ -821,7 +624,7 @@ def _run_stages(
     vio_frames.append(
         _sharded_stage(
             spark, clips, manifest, "row_rules",
-            stage_keys(_cfg_fingerprint("row_rules", tuple(sorted(rules)))),
+            stage_keys(_cfg_fingerprint("row_rules", _gate_text(rules))),
             (lambda todo: todo.drop("bytes")) if run_audio else (lambda todo: todo),
             rules, report,
         )
@@ -872,12 +675,13 @@ def _run_stages(
     # (appended / changed clips shards) recomputes only the affected shards.
     if run_audio:
         t0 = time.time()
+        rules = audio_rules(snr_db_min)
         vio_frames.append(
             _sharded_stage(
                 spark, clips, manifest, "audio",
-                stage_keys(_cfg_fingerprint("audio", snr_db_min, ref_rows) ^ ref_fp),
+                stage_keys(_cfg_fingerprint("audio", _gate_text(rules), ref_rows) ^ ref_fp),
                 lambda todo: with_audio_invariant(todo, clips_ref),
-                audio_rules(snr_db_min), report,
+                rules, report,
             )
         )
         report.stage_wall_s["audio"] = time.time() - t0

@@ -70,6 +70,29 @@ def drain_query(query, expected_input_rows: int, settle_batches: int = 1,
     )
 
 
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger_once: bool,
+):
+    """Start ``stream_df`` through ``foreachBatch``, calling
+    ``handle(batch_df, batch_id)`` on every non-empty micro-batch, with its
+    progress in ``checkpoint_dir``; ``trigger_once`` processes what is
+    available and stops.  Returns the started StreamingQuery."""
+
+    def non_empty(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            handle(batch_df, batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(non_empty).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def attach_rules(stream_df: DataFrame, rules: Mapping[str, Rule]) -> DataFrame:
     """Add one verdict struct per rule + ``__violations`` / ``__wrong``
     columns to a (possibly streaming) DataFrame — a single narrow select.
@@ -94,8 +117,6 @@ def validate_stream(
     produces.  Returns the started StreamingQuery."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         res = validate(batch_df, rules, key_cols=key_cols)
         # barrier=False: localCheckpoint inside foreachBatch blows the
         # stream-execution thread's (smaller) stack at plan time
@@ -103,12 +124,7 @@ def validate_stream(
         # lazy plan is fine here
         on_batch(res.valid(), res.violations(barrier=False), batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
 
 
 def streaming_duplicate_clips(
@@ -231,19 +247,12 @@ def profile_stream(
     from valor_spark.operators.audio import audio_profile, audio_quality_rules
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         prof = audio_profile(batch_df, silence_threshold=silence_threshold)
         res = validate(prof, audio_quality_rules(), key_cols=["clip_id"])
         # barrier=False: see validate_stream above (foreachBatch stack)
         on_batch(prof, res.violations(barrier=False), batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
 
 
 def drift_stream(
@@ -269,16 +278,9 @@ def drift_stream(
     from valor_spark.operators.drift import psi_df
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         on_batch(psi_df(batch_df, baseline_df, col), batch_df, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
 
 
 def drift_report_stream(
@@ -302,8 +304,6 @@ def drift_report_stream(
     from valor_spark.operators.drift import drift_report
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         on_batch(
             drift_report(batch_df, baseline_df, numeric=numeric,
                          categorical=categorical),
@@ -311,12 +311,7 @@ def drift_report_stream(
             batch_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
 
 
 def streaming_near_dup(

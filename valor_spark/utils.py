@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numbers
 import os
 import zipfile
 
@@ -15,6 +16,22 @@ def sql_str(value: str) -> str:
     """A Python string as a SQL string literal (Spark's default backslash
     escapes)."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_lit(value) -> str:
+    """A Python threshold as a typed SQL literal, so a comparison keeps the
+    type ``F.lit`` would give it: an integer as an integer literal, a
+    float as a double (``30.0D``), a ``str`` via :func:`sql_str`, and a
+    list or tuple as the parenthesized body of an ``IN`` list."""
+    if isinstance(value, (list, tuple)):
+        return "(" + ", ".join(sql_lit(v) for v in value) + ")"
+    if isinstance(value, str):
+        return sql_str(value)
+    if isinstance(value, numbers.Integral):
+        return str(int(value))
+    if isinstance(value, numbers.Real):
+        return f"{float(value)!r}D"
+    raise TypeError(f"no SQL literal for {value!r}")
 
 
 def spread_width(
