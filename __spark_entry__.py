@@ -219,6 +219,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's min(id) (content-derived), so the result is independent of
     micro-batch delivery order; batch 0 IS the baseline file, so its row
     pins psi = 0.0 exactly."""
+    import shutil
     import tempfile
 
     from valor_spark.streaming.validate_stream import drift_stream
@@ -237,12 +238,15 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     ckpt = tempfile.mkdtemp(prefix="gate_stream_drift_ckpt_")
-    q = drift_stream(
-        stream, baseline, "amount", on_batch, ckpt, trigger_once=True
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_drift: StreamingQuery did not finish in 300s")
+    try:
+        q = drift_stream(
+            stream, baseline, "amount", on_batch, ckpt, trigger_once=True
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("stream_drift: StreamingQuery did not finish in 300s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
     return spark.createDataFrame(collected, "min_id int, psi double")
 
 
@@ -743,21 +747,23 @@ def q_stream_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     ckpt = tempfile.mkdtemp(prefix="gate_stream_ckpt_")
-    q = validate_stream(
-        stream,
-        rules,
-        key_cols=["id"],
-        on_batch=on_batch,
-        checkpoint_dir=ckpt,
-        trigger_once=True,
-    )
-    if not q.awaitTermination(300):
-        # a partial result would hash-compare nondeterministically against
-        # the full-union oracle, and the stream would keep running under
-        # the remaining gate queries — fail loudly instead
-        q.stop()
-        raise RuntimeError("stream_validate: StreamingQuery did not finish in 300s")
-    shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
+    try:
+        q = validate_stream(
+            stream,
+            rules,
+            key_cols=["id"],
+            on_batch=on_batch,
+            checkpoint_dir=ckpt,
+            trigger_once=True,
+        )
+        if not q.awaitTermination(300):
+            # a partial result would hash-compare nondeterministically against
+            # the full-union oracle, and the stream would keep running under
+            # the remaining gate queries — fail loudly instead
+            q.stop()
+            raise RuntimeError("stream_validate: StreamingQuery did not finish in 300s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
     return spark.createDataFrame(
         [(r["id"], r["rule"], r["error"]) for r in collected],
         "id int, rule string, error string",
@@ -1180,6 +1186,7 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     append mode the trailing windows would wait for a watermark that never
     advances past end-of-stream); the watermark declaration still bounds
     state in a live deployment."""
+    import shutil
     import tempfile
 
     from valor_spark.streaming.validate_stream import windowed_violation_counts
@@ -1215,16 +1222,19 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         last.extend(batch_df.collect())
 
     ckpt = tempfile.mkdtemp(prefix="gate_stream_win_ckpt_")
-    q = (
-        windowed.writeStream.outputMode("complete")
-        .foreachBatch(on_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_windowed_counts: query did not finish in 300s")
+    try:
+        q = (
+            windowed.writeStream.outputMode("complete")
+            .foreachBatch(on_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("stream_windowed_counts: query did not finish in 300s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
     return spark.createDataFrame(
         last,
         "window_start timestamp_ntz, window_end timestamp_ntz, "
@@ -1438,11 +1448,13 @@ def q_stream_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         collected.extend(prof_df.collect())
 
     ckpt = tempfile.mkdtemp(prefix="gate_audio_stream_ckpt_")
-    q = profile_stream(stream, on_batch, ckpt, trigger_once=True)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_audio_profile: StreamingQuery did not finish in 300s")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        q = profile_stream(stream, on_batch, ckpt, trigger_once=True)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("stream_audio_profile: StreamingQuery did not finish in 300s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
     return spark.createDataFrame(
         collected,
         "clip_id string, n_samples int, peak_abs int, sum_sq bigint, "
@@ -1717,9 +1729,10 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is discovered ACROSS batches (or within one) exactly once; the
     aggregated hit counts must equal the batch winnow_pairs oracle —
     stream execution, batch truth."""
+    import shutil
     import tempfile
 
-    from valor_spark.streaming.validate_stream import streaming_near_dup
+    from valor_spark.streaming.validate_stream import drain_query, streaming_near_dup
 
     src = _ensure_stream_docs(sf_dir)
     docs_schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -1733,21 +1746,22 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         hits.extend(batch_df.collect())
 
-    ckpt = tempfile.mkdtemp(prefix="gate_stream_neardup_ckpt_")
-    # drain_query, NOT trigger(availableNow)/processAllAvailable: with a
-    # finite state TTL (the safe default) the engine keeps scheduling
-    # no-data batches to service pending ProcessingTimeTimeouts, so both
-    # hang forever (measured: Spark 4.1).
-    from valor_spark.streaming.validate_stream import drain_query
-
     n_docs = spark.read.parquet(src).count()
-    q = (
-        streaming_near_dup(stream)
-        .writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    drain_query(q, expected_input_rows=n_docs)
+    ckpt = tempfile.mkdtemp(prefix="gate_stream_neardup_ckpt_")
+    try:
+        # drain_query, NOT trigger(availableNow)/processAllAvailable: with a
+        # finite state TTL (the safe default) the engine keeps scheduling
+        # no-data batches to service pending ProcessingTimeTimeouts, so both
+        # hang forever (measured: Spark 4.1).  It stops the query.
+        q = (
+            streaming_near_dup(stream)
+            .writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        drain_query(q, expected_input_rows=n_docs)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
     hit_df = spark.createDataFrame(
         [(r["doc_a"], r["doc_b"]) for r in hits] or [], "doc_a bigint, doc_b bigint"
     )

@@ -2,6 +2,7 @@
 matching oracle (or is deliberately rows-only), and entry() smokes."""
 
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -27,8 +28,11 @@ def test_entry_smoke(spark):
 
 
 @pytest.mark.parametrize("name", sorted(E.queries()))
-def test_query_runs_and_is_nonempty_schema(spark, name):
+def test_query_runs_and_is_nonempty_schema(spark, name, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df = E.queries()[name](spark, SF)
     assert df.columns, name
     # runs without error; row count >= 0 (some are legitimately small)
     assert df.count() >= 0
+    # a streaming query's checkpoint dir is per-call scratch: none may leak
+    assert not list(tmp_path.glob("gate_*")), name

@@ -526,13 +526,3 @@ def fmap_err(rule: Rule, fn: Callable[[Column], Column], etype: ErrType | None =
         return mk(r.getField(WRONG), fn(r.getField(ERR)), et)
 
     return Rule(f, et)
-
-
-# ---------------------------------------------------------------------------
-# running rules (validateP equivalent for single columns; the full-table
-# engine lives in valor_spark.plans.engine)
-# ---------------------------------------------------------------------------
-
-def verdict_col(rule: Rule, col: Column) -> Column:
-    """Apply a rule to a column, producing the verdict struct."""
-    return rule(col)

@@ -80,11 +80,6 @@ def _marker_hits_t(toks: Column, markers: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def marker_hits(col: Column, markers: list[str]) -> Column:
-    """How many tokens are in the marker set."""
-    return _marker_hits_t(tokens(col), markers)
-
-
 def _lang_id_t(toks: Column) -> Column:
     hits = {lang: _marker_hits_t(toks, ms) for lang, ms in LANG_MARKERS.items()}
     best = F.lit("und")
@@ -120,10 +115,6 @@ def _stopword_ratio_t(toks: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column) -> Column:
-    return _stopword_ratio_t(tokens(col))
-
-
 def _quality_score_t(toks: Column, text: Column) -> Column:
     n = F.size(toks)
     len_score = F.least(n / F.lit(50.0), F.lit(1.0))
@@ -131,12 +122,6 @@ def _quality_score_t(toks: Column, text: Column) -> Column:
     sw = _stopword_ratio_t(toks)
     sw_score = F.when((sw > 0.05) & (sw < 0.6), F.lit(1.0)).otherwise(F.lit(0.5))
     return F.round((len_score * 0.4 + punct_pen * 0.3 + sw_score * 0.3), 4)
-
-
-def quality_score(col: Column) -> Column:
-    """Composite quality heuristic in [0,1]: rewards moderate length, low
-    punctuation density, and presence (but not dominance) of stopwords."""
-    return _quality_score_t(tokens(col), col)
 
 
 def fingerprint(col: Column, length: int = 16) -> Column:
@@ -304,13 +289,6 @@ def shingles_t(toks: Column, n: int = 5) -> Column:
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
         )
     )
-
-
-def shingles(col: Column, n: int = 5) -> Column:
-    """Shingles straight from a text column — small-data/test convenience
-    only; hot paths materialize tokens in a lower select and use
-    :func:`shingles_t`."""
-    return shingles_t(tokens(col), n)
 
 
 def doc_repetition(

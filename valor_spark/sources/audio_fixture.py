@@ -22,11 +22,16 @@ end-to-end gate on the payload invariant, not a tautology.
 
 from __future__ import annotations
 
-import os
 from decimal import ROUND_HALF_UP, Decimal
 
 from valor_spark.sources import synthetic as S
-from valor_spark.sources.rowspec import ClipSpec, expected_clips, ref_present
+from valor_spark.sources.fixture_writer import fixture
+from valor_spark.sources.rowspec import (
+    ClipSpec,
+    expected_clips,
+    ref_present,
+    ref_transcript,
+)
 
 N_CLIPS = 3000
 MAX_SAMPLES = 256
@@ -37,13 +42,11 @@ N_HEADER_MISMATCH = 5
 #: .fixtures dir can never grade new code against old ground truth
 #: (v2: compressed-codec plants — G.711 raw + WAV-contained, IMA ADPCM)
 FIXTURE_VERSION = 3  # v3: FLAC plants in _codec_plants + flac/channels fixtures
-
-
-def _fixture_tag() -> str:
-    import hashlib
-
-    cfg = repr((FIXTURE_VERSION, N_CLIPS, MAX_SAMPLES, SNR_DB_MIN, N_HEADER_MISMATCH))
-    return hashlib.md5(cfg.encode()).hexdigest()[:8]
+#: the tag key of every clips-family fixture (audio_fixture and flac_fixture)
+AUDIO_KEY = (FIXTURE_VERSION, N_CLIPS, MAX_SAMPLES, SNR_DB_MIN, N_HEADER_MISMATCH)
+#: the data table of every per-family clip fixture (bw, chan, def, flac,
+#: fp, fu, loudness, rs)
+CLIPS_DDL = "clip_id string, bytes binary, sr_hz int, codec string"
 
 
 def _spark_round_str(v: float, digits: int = 2) -> str:
@@ -55,11 +58,34 @@ def _spark_round_str(v: float, digits: int = 2) -> str:
     return repr(float(d))
 
 
-def _clip_bytes(spec: ClipSpec) -> bytes:
-    """Identical to synthetic._bytes_generator for one row (ref=False)."""
+def _spec_pcm(spec: ClipSpec):
+    """The PCM one clips row carries: synthesised from the spec, halved
+    for a truncated row."""
     pcm = S.synth_pcm(spec.g, spec.sr_hz, spec.dur_ms, MAX_SAMPLES, spec.corrupted)
     if spec.truncated:
         pcm = pcm[: len(pcm) // 2]
+    return pcm
+
+
+def _hdrmm_pcm(k: int):
+    """The PCM of the ``hdrmm_<k>`` WAV-header/sr_hz mismatch plant."""
+    import numpy as np
+
+    return np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2")
+
+
+def _tone(f: float, n: int, amp: float, phase: float = 0.0, sr: int = 16000):
+    """``n`` int16 samples of a sine at ``f`` Hz, rounded and clipped."""
+    import numpy as np
+
+    t = np.arange(n) / sr
+    x = amp * np.sin(2 * np.pi * f * t + phase)
+    return np.clip(np.rint(x), -32768, 32767).astype(np.int16)
+
+
+def _clip_bytes(spec: ClipSpec) -> bytes:
+    """Identical to synthetic._bytes_generator for one row (ref=False)."""
+    pcm = _spec_pcm(spec)
     if spec.codec == "wav":
         return S.wrap_wav(pcm, spec.sr_hz)
     return pcm.tobytes()  # raw s16le (also for planted bad codecs)
@@ -117,17 +143,6 @@ def _codec_plants() -> list[dict]:
         snr_db,
     )
 
-    def g711_wav(tag: int, payload: bytes, rate: int) -> bytes:
-        import struct
-
-        fmt = struct.pack("<HHIIHH", tag, 1, rate, rate, 1, 8)
-        chunks = b""
-        for cid, body in ((b"fmt ", fmt), (b"data", payload)):
-            chunks += cid + struct.pack("<I", len(body)) + body
-            if len(body) & 1:
-                chunks += b"\x00"
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
     plants: list[dict] = []
 
     def add(cid, raw, sr, codec, ref_pcm, decoded, extra_viol=()):
@@ -164,7 +179,7 @@ def _codec_plants() -> list[dict]:
     enc = encode_g711(src, "alaw")
     add(
         "g711_wav6",
-        g711_wav(6, enc, 16000),
+        _g711_wav(6, enc, 16000),
         16000,
         "wav",
         src,
@@ -211,6 +226,20 @@ def _codec_plants() -> list[dict]:
     return plants
 
 
+def _g711_wav(tag: int, payload: bytes, rate: int) -> bytes:
+    """A mono 8-bit G.711 payload in a WAV container with format ``tag``
+    (6 = A-law, 7 = mu-law)."""
+    import struct
+
+    fmt = struct.pack("<HHIIHH", tag, 1, rate, rate, 1, 8)
+    chunks = b""
+    for cid, body in ((b"fmt ", fmt), (b"data", payload)):
+        chunks += cid + struct.pack("<I", len(body)) + body
+        if len(body) & 1:
+            chunks += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
 def _adpcm_decoded(wav_bytes: bytes, n: int):
     """Decode a tag-0x11 container back to PCM for the oracle side (same
     decoder the engine dispatches to — see _codec_plants docstring)."""
@@ -221,29 +250,14 @@ def _adpcm_decoded(wav_bytes: bytes, n: int):
     return pcm
 
 
-def build_audio_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_audio", AUDIO_KEY, "clips", "ref", "expected")
+def build_audio_fixture(fixture_dir: str):
     """Write the three parquets (idempotent); returns their paths."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_audio_{name}_{tag}.parquet")
-        for name in ("clips", "ref", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
     specs = expected_clips(N_CLIPS, MAX_SAMPLES)
-
-    clips_rows = []
-    for s in specs:
-        clips_rows.append(
-            (s.clip_id, _clip_bytes(s), s.sr_hz, s.dur_ms, s.codec, s.transcript)
-        )
-    from valor_spark.sources.rowspec import ref_transcript
-
+    clips_rows = [
+        (s.clip_id, _clip_bytes(s), s.sr_hz, s.dur_ms, s.codec, s.transcript)
+        for s in specs
+    ]
     ref_rows = []
     for s in specs:
         if not s.is_dup and not s.is_hot and ref_present(s):
@@ -260,10 +274,8 @@ def build_audio_fixture(fixture_dir: str) -> dict[str, str]:
 
     # explicit WAV-header/sr_hz mismatch plants (the generator's WAVs are
     # header-consistent by construction)
-    import numpy as np
-
     for k in range(N_HEADER_MISMATCH):
-        pcm = np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2")
+        pcm = _hdrmm_pcm(k)
         cid = f"hdrmm_{k}"
         clips_rows.append((cid, S.wrap_wav(pcm, 8000), 16000, 4, "wav", "hdr"))
         ref_rows.append((cid, pcm.tobytes(), "hdr"))
@@ -283,40 +295,29 @@ def build_audio_fixture(fixture_dir: str) -> dict[str, str]:
         for rule, error in p["violations"]:
             expected_rows.append((p["clip_id"], rule, error))
 
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in clips_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in clips_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in clips_rows], pa.int32()),
-                "dur_ms": pa.array([r[3] for r in clips_rows], pa.int32()),
-                "codec": pa.array([r[4] for r in clips_rows], pa.string()),
-                "transcript": pa.array([r[5] for r in clips_rows], pa.string()),
-            }
+    return {
+        "clips": (
+            "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+            "transcript string",
+            clips_rows,
         ),
-        paths["clips"],
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in ref_rows], pa.string()),
-                "pcm_ref": pa.array([r[1] for r in ref_rows], pa.binary()),
-                "transcript_ref": pa.array([r[2] for r in ref_rows], pa.string()),
-            }
-        ),
-        paths["ref"],
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in expected_rows], pa.string()),
-                "rule": pa.array([r[1] for r in expected_rows], pa.string()),
-                "error": pa.array([r[2] for r in expected_rows], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+        "ref": ("clip_id string, pcm_ref binary, transcript_ref string", ref_rows),
+        "expected": ("clip_id string, rule string, error string", expected_rows),
+    }
+
+
+def _decoded_rows():
+    """``(clip_id, codec, sr_hz, pcm)`` for every clips-fixture row, in
+    table order: the spec rows (PCM from the spec, None for an undecodable
+    codec), the ``hdrmm_*`` plants (at their metadata rate) and the codec
+    plants (their ``decoded`` PCM)."""
+    for s in expected_clips(N_CLIPS, MAX_SAMPLES):
+        pcm = _spec_pcm(s) if s.codec in ("pcm_s16le", "wav") else None
+        yield s.clip_id, s.codec, s.sr_hz, pcm
+    for k in range(N_HEADER_MISMATCH):
+        yield f"hdrmm_{k}", "wav", 16000, _hdrmm_pcm(k)
+    for p in _codec_plants():
+        yield p["clip_id"], p["codec"], p["sr_hz"], p["decoded"]
 
 
 def _profile_int_stats(pcm, thr: int) -> tuple[int, int, int, int, int, int, int]:
@@ -347,61 +348,25 @@ def _profile_int_stats(pcm, thr: int) -> tuple[int, int, int, int, int, int, int
 PROFILE_SILENCE_THRESHOLD = 512
 
 
-def build_audio_profile_fixture(fixture_dir: str) -> str:
+@fixture(f"clips_audio_profile_{PROFILE_SILENCE_THRESHOLD}", AUDIO_KEY)
+def build_audio_profile_fixture(fixture_dir: str):
     """Expected integer profile rows for EVERY clips-parquet row (dups and
     hot keys included — profiling is per-row, no ref join), written as
     parquet; returns the path.  Depends on build_audio_fixture for the
     clips table itself."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _fixture_tag()
-    path = os.path.join(
-        fixture_dir, f"clips_audio_profile_{PROFILE_SILENCE_THRESHOLD}_{tag}.parquet"
-    )
-    if os.path.exists(path):
-        return path
     build_audio_fixture(fixture_dir)  # ensure the clips parquet exists
-
     rows = []
-
-    def add(clip_id, stats, err):
-        rows.append((clip_id, *stats, err))
-
-    zero = (0, 0, 0, 0, 0, 0, 0)
-    for s in expected_clips(N_CLIPS, MAX_SAMPLES):
-        if s.codec not in ("pcm_s16le", "wav"):
-            add(s.clip_id, zero, f"unsupported_codec:{s.codec}")
-            continue
-        pcm = S.synth_pcm(s.g, s.sr_hz, s.dur_ms, MAX_SAMPLES, s.corrupted)
-        if s.truncated:
-            pcm = pcm[: len(pcm) // 2]
-        add(s.clip_id, _profile_int_stats(pcm, PROFILE_SILENCE_THRESHOLD), None)
-    for k in range(N_HEADER_MISMATCH):
-        pcm = np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2")
-        add(f"hdrmm_{k}", _profile_int_stats(pcm, PROFILE_SILENCE_THRESHOLD), None)
-    for p in _codec_plants():
-        add(p["clip_id"], _profile_int_stats(p["decoded"], PROFILE_SILENCE_THRESHOLD), None)
-
-    cols = list(zip(*rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "n_samples": pa.array(cols[1], pa.int32()),
-                "peak_abs": pa.array(cols[2], pa.int32()),
-                "sum_sq": pa.array(cols[3], pa.int64()),
-                "n_clipped": pa.array(cols[4], pa.int32()),
-                "n_silent": pa.array(cols[5], pa.int32()),
-                "lead_silence": pa.array(cols[6], pa.int32()),
-                "trail_silence": pa.array(cols[7], pa.int32()),
-                "decode_error": pa.array(cols[8], pa.string()),
-            }
-        ),
-        path,
+    for cid, codec, _sr, pcm in _decoded_rows():
+        if pcm is None:
+            rows.append((cid, 0, 0, 0, 0, 0, 0, 0, f"unsupported_codec:{codec}"))
+        else:
+            rows.append((cid, *_profile_int_stats(pcm, PROFILE_SILENCE_THRESHOLD), None))
+    return (
+        "clip_id string, n_samples int, peak_abs int, sum_sq bigint, "
+        "n_clipped int, n_silent int, lead_silence int, trail_silence int, "
+        "decode_error string",
+        rows,
     )
-    return path
 
 
 SEGMENTS_PARAMS = (512, 16, 4)  # threshold, min_gap, min_len
@@ -421,56 +386,21 @@ def _segments_for(pcm, thr: int, gap: int, mlen: int):
     return [(int(s), int(e)) for s, e in zip(starts, ends) if e - s >= mlen]
 
 
-def build_audio_segments_fixture(fixture_dir: str) -> str:
+@fixture("clips_audio_segments_{}_{}_{}".format(*SEGMENTS_PARAMS), AUDIO_KEY)
+def build_audio_segments_fixture(fixture_dir: str):
     """Expected (clip_id, seg_idx, start_sample, end_sample) rows for every
     decodable clips-parquet row; undecodable / fully-silent clips have no
     rows.  Independent derivation: spec -> synth_pcm -> numpy runs."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    thr, gap, mlen = SEGMENTS_PARAMS
-    tag = _fixture_tag()
-    path = os.path.join(
-        fixture_dir, f"clips_audio_segments_{thr}_{gap}_{mlen}_{tag}.parquet"
-    )
-    if os.path.exists(path):
-        return path
     build_audio_fixture(fixture_dir)
-
     rows = []
-
-    def add(clip_id, pcm):
-        seg = 0
-        for s, e in _segments_for(pcm, thr, gap, mlen):
-            rows.append((clip_id, seg, s, e))
-            seg += 1
-
-    for sp in expected_clips(N_CLIPS, MAX_SAMPLES):
-        if sp.codec not in ("pcm_s16le", "wav"):
-            continue
-        pcm = S.synth_pcm(sp.g, sp.sr_hz, sp.dur_ms, MAX_SAMPLES, sp.corrupted)
-        if sp.truncated:
-            pcm = pcm[: len(pcm) // 2]
-        add(sp.clip_id, pcm)
-    for k in range(N_HEADER_MISMATCH):
-        add(f"hdrmm_{k}", np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2"))
-    for p in _codec_plants():
-        add(p["clip_id"], p["decoded"])
-
-    cols = list(zip(*rows)) if rows else ([], [], [], [])
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "seg_idx": pa.array(cols[1], pa.int32()),
-                "start_sample": pa.array(cols[2], pa.int32()),
-                "end_sample": pa.array(cols[3], pa.int32()),
-            }
-        ),
-        path,
+    for cid, _codec, _sr, pcm in _decoded_rows():
+        if pcm is not None:
+            for seg, (s, e) in enumerate(_segments_for(pcm, *SEGMENTS_PARAMS)):
+                rows.append((cid, seg, s, e))
+    return (
+        "clip_id string, seg_idx int, start_sample int, end_sample int",
+        rows,
     )
-    return path
 
 
 def _spectrum_for(pcm, sr: int):
@@ -487,112 +417,55 @@ def _spectrum_for(pcm, sr: int):
     return spectral_ints(pcm, sr)
 
 
-def build_audio_spectrum_fixture(fixture_dir: str) -> str:
+@fixture("clips_audio_spectrum", AUDIO_KEY)
+def build_audio_spectrum_fixture(fixture_dir: str):
     """Expected integer spectrum rows for every clips-parquet row
     (spectral analysis is per-row — dups/hot keys included), written as
     parquet; returns the path.  The DECODE path is independently derived
     (spec -> synth_pcm vs engine bytes -> decode); the spectral arithmetic
     is shared with the engine — see ``_spectrum_for`` for why and where
-    the analytic cross-check lives."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _fixture_tag()
-    path = os.path.join(fixture_dir, f"clips_audio_spectrum_{tag}.parquet")
-    if os.path.exists(path):
-        return path
+    the analytic cross-check lives.  The engine converts bins with the
+    METADATA rate, so the ``hdrmm_*`` rows use 16000, not their planted
+    WAV header rate — sr_header_consistent owns that mismatch."""
     build_audio_fixture(fixture_dir)
-
     rows = []
-    zero = (0, 0, 0, 0, 0)
-    for sp in expected_clips(N_CLIPS, MAX_SAMPLES):
-        if sp.codec not in ("pcm_s16le", "wav"):
-            rows.append((sp.clip_id, *zero, f"unsupported_codec:{sp.codec}"))
-            continue
-        pcm = S.synth_pcm(sp.g, sp.sr_hz, sp.dur_ms, MAX_SAMPLES, sp.corrupted)
-        if sp.truncated:
-            pcm = pcm[: len(pcm) // 2]
-        rows.append((sp.clip_id, *_spectrum_for(pcm, sp.sr_hz), None))
-    for k in range(N_HEADER_MISMATCH):
-        pcm = np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2")
-        # the engine converts bins with the METADATA rate (16000), not the
-        # planted WAV header rate — sr_header_consistent owns that mismatch
-        rows.append((f"hdrmm_{k}", *_spectrum_for(pcm, 16000), None))
-    for p in _codec_plants():
-        rows.append((p["clip_id"], *_spectrum_for(p["decoded"], p["sr_hz"]), None))
-
-    cols = list(zip(*rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "n_samples": pa.array(cols[1], pa.int32()),
-                "dom_bin": pa.array(cols[2], pa.int32()),
-                "dom_hz": pa.array(cols[3], pa.int32()),
-                "second_bin": pa.array(cols[4], pa.int32()),
-                "impurity_milli": pa.array(cols[5], pa.int32()),
-                "decode_error": pa.array(cols[6], pa.string()),
-            }
-        ),
-        path,
+    for cid, codec, sr, pcm in _decoded_rows():
+        if pcm is None:
+            rows.append((cid, 0, 0, 0, 0, 0, f"unsupported_codec:{codec}"))
+        else:
+            rows.append((cid, *_spectrum_for(pcm, sr), None))
+    return (
+        "clip_id string, n_samples int, dom_bin int, dom_hz int, "
+        "second_bin int, impurity_milli int, decode_error string",
+        rows,
     )
-    return path
 
 
-def build_audio_dedup_fixture(fixture_dir: str) -> str:
+@fixture("clips_audio_dedup", AUDIO_KEY)
+def build_audio_dedup_fixture(fixture_dir: str):
     """Expected content-dedup groups ``(content_hash, n, first_clip_id)``
     for the clips parquet — independent derivation: spec -> synth_pcm ->
     md5 over the canonical int16 bytes, grouped in plain Python.  The
     planted duplicate rows (id % DUP_STRIDE, exact copies of the previous
     id's content under the SAME clip_id) and the degenerate all-empty-PCM
-    rows (bad sr/dur strides) form the groups."""
+    rows (bad sr/dur strides) form the groups; undecodable rows (identity
+    unknown) are excluded."""
     import hashlib
     from collections import defaultdict
 
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    tag = _fixture_tag()
-    path = os.path.join(fixture_dir, f"clips_audio_dedup_{tag}.parquet")
-    if os.path.exists(path):
-        return path
     build_audio_fixture(fixture_dir)
-
     groups: dict[str, list[str]] = defaultdict(list)
-    for sp in expected_clips(N_CLIPS, MAX_SAMPLES):
-        if sp.codec not in ("pcm_s16le", "wav"):
-            continue  # undecodable: identity unknown, excluded
-        pcm = S.synth_pcm(sp.g, sp.sr_hz, sp.dur_ms, MAX_SAMPLES, sp.corrupted)
-        if sp.truncated:
-            pcm = pcm[: len(pcm) // 2]
-        h = hashlib.md5(np.ascontiguousarray(pcm, "<i2").tobytes()).hexdigest()
-        groups[h].append(sp.clip_id)
-    for k in range(N_HEADER_MISMATCH):
-        pcm = np.arange(-32 * (k + 1), 32 * (k + 1), k + 1, dtype="<i2")
-        h = hashlib.md5(np.ascontiguousarray(pcm, "<i2").tobytes()).hexdigest()
-        groups[h].append(f"hdrmm_{k}")
-    for p in _codec_plants():
-        h = hashlib.md5(
-            np.ascontiguousarray(p["decoded"], "<i2").tobytes()
-        ).hexdigest()
-        groups[h].append(p["clip_id"])
-
-    rows = [
-        (h, len(ids), min(ids)) for h, ids in groups.items() if len(ids) > 1
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "content_hash": pa.array([r[0] for r in rows], pa.string()),
-                "n": pa.array([r[1] for r in rows], pa.int64()),
-                "first_clip_id": pa.array([r[2] for r in rows], pa.string()),
-            }
-        ),
-        path,
+    for cid, _codec, _sr, pcm in _decoded_rows():
+        if pcm is not None:
+            h = hashlib.md5(np.ascontiguousarray(pcm, "<i2").tobytes()).hexdigest()
+            groups[h].append(cid)
+    return (
+        "content_hash string, n bigint, first_clip_id string",
+        [(h, len(ids), min(ids)) for h, ids in groups.items() if len(ids) > 1],
     )
-    return path
+
 
 def _loudness_clip_set():
     """Deterministic clip set for the loudness gate — seconds-long signals
@@ -675,31 +548,20 @@ def _loudness_clip_set():
     return rows
 
 
-def build_audio_loudness_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_loudness_v3", AUDIO_KEY, "data", "expected")
+def build_audio_loudness_fixture(fixture_dir: str):
     """Write the loudness clips + expected parquets (idempotent); returns
     their paths.  Expected rows are ``loudness_ints`` over the locally-
     derived PCM (shared arithmetic, independently-exercised DECODE path —
     same split as the spectrum fixture; the analytic anchors are the
     BS.1770 48 kHz coefficient table and the 997 Hz -3.01 LKFS
     calibration in tests/test_audio.py)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from valor_spark.operators.audio import decode_one
     from valor_spark.operators.loudness import loudness_ints
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_loudness_v3_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    data_rows, expected_rows = [], []
-    for cid, raw, sr, codec, decoded in _loudness_clip_set():
-        data_rows.append((cid, raw, sr, codec))
+    rows = _loudness_clip_set()
+    expected_rows = []
+    for cid, raw, sr, codec, decoded in rows:
         if decoded is None:  # error plant: replay the engine's error string
             _sig, _r, err = decode_one(raw, codec)
             assert err is not None, cid
@@ -707,35 +569,15 @@ def build_audio_loudness_fixture(fixture_dir: str) -> dict[str, str]:
         else:
             n, nb, gb, lufs, peak, tp = loudness_ints(decoded, sr)
             expected_rows.append((cid, n, nb, gb, lufs, peak, tp, None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": (
+            "clip_id string, n_samples int, n_blocks int, gated_blocks int, "
+            "lufs_milli int, peak_milli_dbfs int, true_peak_milli_dbtp int, "
+            "decode_error string",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "n_samples": pa.array(cols[1], pa.int32()),
-                "n_blocks": pa.array(cols[2], pa.int32()),
-                "gated_blocks": pa.array(cols[3], pa.int32()),
-                "lufs_milli": pa.array(cols[4], pa.int32()),
-                "peak_milli_dbfs": pa.array(cols[5], pa.int32()),
-                "true_peak_milli_dbtp": pa.array(cols[6], pa.int32()),
-                "decode_error": pa.array(cols[7], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
 def _fp_programs():
@@ -826,35 +668,13 @@ def _fp_clip_set():
     return rows
 
 
-def build_audio_fp_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_fp_v1", AUDIO_KEY, "data", "expected")
+def build_audio_fp_fixture(fixture_dir: str):
     """Write the perceptual-fingerprint clips + ANALYTIC expected-pairs
     parquets (idempotent): expected = every unordered pair inside one
     variant group — derived from the plant structure alone, with NO reuse
     of the engine's fingerprint arithmetic (a fully independent oracle)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_fp_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
     rows = _fp_clip_set()
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in rows], pa.string()),
-                "bytes": pa.array([r[1] for r in rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in rows], pa.int32()),
-                "codec": pa.array([r[3] for r in rows], pa.string()),
-            }
-        ),
-        paths["data"],
-    )
     groups: dict[str, list[str]] = {}
     for cid, _b, _sr, _c, grp in rows:
         if grp is not None:
@@ -866,16 +686,10 @@ def build_audio_fp_fixture(fixture_dir: str) -> dict[str, str]:
             for j in range(i + 1, len(ms)):
                 pairs.append((ms[i], ms[j]))
     pairs.sort()
-    pq.write_table(
-        pa.table(
-            {
-                "clip_a": pa.array([p[0] for p in pairs], pa.string()),
-                "clip_b": pa.array([p[1] for p in pairs], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": ("clip_a string, clip_b string", pairs),
+    }
 
 
 def _bandwidth_clip_set():
@@ -936,27 +750,16 @@ def _bandwidth_clip_set():
     return rows
 
 
-def build_audio_bandwidth_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_bw_v2", AUDIO_KEY, "data", "expected")
+def build_audio_bandwidth_fixture(fixture_dir: str):
     """Write the bandwidth clips + expected parquets (idempotent);
     expected rows are ``bandwidth_ints`` over the locally-derived PCM."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from valor_spark.operators.audio import decode_one
     from valor_spark.operators.bandwidth import bandwidth_ints
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_bw_v2_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    data_rows, expected_rows = [], []
-    for cid, raw, sr, codec, decoded in _bandwidth_clip_set():
-        data_rows.append((cid, raw, sr, codec))
+    rows = _bandwidth_clip_set()
+    expected_rows = []
+    for cid, raw, sr, codec, decoded in rows:
         if decoded is None:
             _sig, _r, err = decode_one(raw, codec)
             assert err is not None, cid
@@ -964,34 +767,14 @@ def build_audio_bandwidth_fixture(fixture_dir: str) -> dict[str, str]:
         else:
             n, r95, r99, hf = bandwidth_ints(decoded, sr)
             expected_rows.append((cid, sr, n, r95, r99, hf, None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": (
+            "clip_id string, src_sr int, n_samples int, rolloff95_hz int, "
+            "rolloff99_hz int, hf_permille int, decode_error string",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "src_sr": pa.array(cols[1], pa.int32()),
-                "n_samples": pa.array(cols[2], pa.int32()),
-                "rolloff95_hz": pa.array(cols[3], pa.int32()),
-                "rolloff99_hz": pa.array(cols[4], pa.int32()),
-                "hf_permille": pa.array(cols[5], pa.int32()),
-                "decode_error": pa.array(cols[6], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
 def _py_defects(vals, sr):
@@ -1072,26 +855,15 @@ def _defects_clip_set():
     return rows
 
 
-def build_audio_defects_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_def_v1", AUDIO_KEY, "data", "expected")
+def build_audio_defects_fixture(fixture_dir: str):
     """Write the defect clips + expected parquets (idempotent); expected
     rows come from the pure-python _py_defects arithmetic."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from valor_spark.operators.audio import decode_one
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_def_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    data_rows, expected_rows = [], []
-    for cid, raw, sr, codec, vals in _defects_clip_set():
-        data_rows.append((cid, raw, sr, codec))
+    rows = _defects_clip_set()
+    expected_rows = []
+    for cid, raw, sr, codec, vals in rows:
         if vals is None:
             _sig, _r, err = decode_one(raw, codec)
             assert err is not None, cid
@@ -1099,35 +871,15 @@ def build_audio_defects_fixture(fixture_dir: str) -> dict[str, str]:
         else:
             n, c, mcr, mzr, zms, dc = _py_defects(vals, sr)
             expected_rows.append((cid, n, c, mcr, mzr, zms, dc, None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": (
+            "clip_id string, n_samples int, clipped_samples int, "
+            "max_clip_run int, max_zero_run int, max_zero_run_ms int, "
+            "dc_offset_permille int, decode_error string",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "n_samples": pa.array(cols[1], pa.int32()),
-                "clipped_samples": pa.array(cols[2], pa.int32()),
-                "max_clip_run": pa.array(cols[3], pa.int32()),
-                "max_zero_run": pa.array(cols[4], pa.int32()),
-                "max_zero_run_ms": pa.array(cols[5], pa.int32()),
-                "dc_offset_permille": pa.array(cols[6], pa.int32()),
-                "decode_error": pa.array(cols[7], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
 def _resample_expected(f_hz: int, n_in: int, sr_in: int, sr_out: int):
@@ -1151,15 +903,11 @@ def _resample_clip_set(target_sr: int = 16000):
     directions, fractional-length rows, codec rows (mu-law, ADPCM), a
     near-source-Nyquist tone (its 12.5 kHz image must NOT win the
     spectrum after upsampling), and error plants."""
-    import numpy as np
-
     from valor_spark.operators import adpcm as AD
     from valor_spark.operators.audio import encode_g711
 
-    def tone(f, sr, n, amp=20000.0, phase=0.3):
-        t = np.arange(n) / sr
-        x = amp * np.sin(2 * np.pi * f * t + phase)
-        return np.clip(np.rint(x), -32768, 32767).astype(np.int16)
+    def tone(f, sr, n):
+        return _tone(f, n, 20000.0, phase=0.3, sr=sr)
 
     rows = []
 
@@ -1206,49 +954,18 @@ def _resample_clip_set(target_sr: int = 16000):
     return rows
 
 
-def build_audio_resample_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_rs_v1", AUDIO_KEY, "data", "expected")
+def build_audio_resample_fixture(fixture_dir: str):
     """Write the re-rate clips + expected parquets (idempotent)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_rs_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
     rows = _resample_clip_set()
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in rows], pa.string()),
-                "bytes": pa.array([r[1] for r in rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in rows], pa.int32()),
-                "codec": pa.array([r[3] for r in rows], pa.string()),
-            }
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": (
+            "clip_id string, src_sr int, out_sr int, n_in int, n_out int, "
+            "dom_hz int, decode_error string",
+            [r[4] for r in rows],
         ),
-        paths["data"],
-    )
-    exp = [r[4] for r in rows]
-    cols = list(zip(*exp))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "src_sr": pa.array(cols[1], pa.int32()),
-                "out_sr": pa.array(cols[2], pa.int32()),
-                "n_in": pa.array(cols[3], pa.int32()),
-                "n_out": pa.array(cols[4], pa.int32()),
-                "dom_hz": pa.array(cols[5], pa.int32()),
-                "decode_error": pa.array(cols[6], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
 def _fused_clip_set():
@@ -1277,35 +994,24 @@ def _fused_clip_set():
     return rows
 
 
-def build_audio_fused_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_fu_v1", AUDIO_KEY, "data", "expected")
+def build_audio_fused_fixture(fixture_dir: str):
     """Write the fused clips + expected parquets (idempotent).  Expected
     rows call the SAME per-family kernels over locally-decoded PCM
     (operators/fused.py::fused_ints) — the fusion plumbing, Arrow
     batching, and error contract are what this gate proves; each
     family's arithmetic has its own analytic anchors in pytest and its
     own driver gate row."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    import numpy as np
 
     from valor_spark.operators.audio import decode_one
     from valor_spark.operators.fused import FUSED_SCHEMA, fused_ints
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_fu_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    import numpy as np
-
     err_row = (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, None, None, None,
                None, None, None, 0, 0, None, 0)
-    data_rows, expected_rows = [], []
-    for cid, raw, sr, codec in _fused_clip_set():
-        data_rows.append((cid, raw, sr, codec))
+    rows = _fused_clip_set()
+    expected_rows = []
+    for cid, raw, sr, codec in rows:
         if codec == "pcm_s16le":
             sig, err = np.frombuffer(raw, "<i2"), None
         else:
@@ -1314,29 +1020,10 @@ def build_audio_fused_fixture(fixture_dir: str) -> dict[str, str]:
             expected_rows.append((cid, sr, *err_row, err))
         else:
             expected_rows.append((cid, sr, *fused_ints(sig, sr), None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
-        ),
-        paths["data"],
-    )
-    names = [f.strip().split(" ")[0] for f in FUSED_SCHEMA.split(",")]
-    typemap = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64()}
-    types = [typemap[f.strip().split(" ")[1]] for f in FUSED_SCHEMA.split(",")]
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {n: pa.array(list(c), t) for n, c, t in zip(names, cols, types)}
-        ),
-        paths["expected"],
-    )
-    return paths
+    return {
+        "data": (CLIPS_DDL, rows),
+        "expected": (FUSED_SCHEMA, expected_rows),
+    }
 
 
 def _py_channels(chans: list[list[int]]):
@@ -1395,10 +1082,8 @@ def _channels_clip_set():
 
     from valor_spark.operators.audio import encode_g711
 
-    def tone(f, n, amp, phase=0.0, sr=16000):
-        t = np.arange(n) / sr
-        x = amp * np.sin(2 * np.pi * f * t + phase)
-        return [int(v) for v in np.clip(np.rint(x), -32768, 32767).astype(np.int64)]
+    def tone(f, n, amp, phase=0.0):
+        return [int(v) for v in _tone(f, n, amp, phase)]
 
     rows = []
     n = 1600
@@ -1425,20 +1110,11 @@ def _channels_clip_set():
     ci = tone(660.0, n, 5000.0, phase=1.1)
     rows.append(("ch_3ch", _wav_multi([li, ri, ci], 16000), 16000, "wav", [li, ri, ci]))
     # G.711-in-WAV (format tag 6): wave.Error -> shared mono decode
-    import struct
-
     from valor_spark.operators.audio import ALAW_DECODE_LUT
 
     enc = encode_g711(np.asarray(li, np.int16), "alaw")
     dec = [int(v) for v in ALAW_DECODE_LUT[np.frombuffer(enc, np.uint8)]]
-    fmt = struct.pack("<HHIIHH", 6, 1, 16000, 16000, 1, 8)
-    chunks = b""
-    for cid_, body in ((b"fmt ", fmt), (b"data", enc)):
-        chunks += cid_ + struct.pack("<I", len(body)) + body
-        if len(body) & 1:
-            chunks += b"\x00"
-    g711 = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-    rows.append(("ch_g711_wav", g711, 16000, "wav", [dec]))
+    rows.append(("ch_g711_wav", _g711_wav(6, enc, 16000), 16000, "wav", [dec]))
     # error plants
     rows.append(("ch_trunc", _wav_multi([li, ri], 16000)[:40], 16000, "wav", None))
     rows.append(("ch_null", None, 16000, "wav", None))
@@ -1446,27 +1122,16 @@ def _channels_clip_set():
     return rows
 
 
-def build_audio_channels_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("clips_chan_v1", AUDIO_KEY, "data", "expected")
+def build_audio_channels_fixture(fixture_dir: str):
     """Write the channel-QC clips + expected parquets (idempotent);
     expected rows come from the pure-python _py_channels arithmetic over
     the planted channel lists (error plants replay decode errors)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from valor_spark.operators.channels import channel_frames
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_chan_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    data_rows, expected_rows = [], []
-    for cid, raw, sr, codec, chans in _channels_clip_set():
-        data_rows.append((cid, raw, sr, codec))
+    rows = _channels_clip_set()
+    expected_rows = []
+    for cid, raw, sr, codec, chans in rows:
         if chans is None:
             _frames, err = channel_frames(raw, codec)
             assert err is not None, cid
@@ -1475,34 +1140,12 @@ def build_audio_channels_fixture(fixture_dir: str) -> dict[str, str]:
             )
         else:
             expected_rows.append((cid, *_py_channels(chans), None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
+    return {
+        "data": (CLIPS_DDL, [r[:4] for r in rows]),
+        "expected": (
+            "clip_id string, n_channels int, n_frames int, ssq_l bigint, "
+            "ssq_r bigint, dot_lr bigint, dual_mono int, balance_permille int, "
+            "phase_permille int, decode_error string",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array(cols[0], pa.string()),
-                "n_channels": pa.array(cols[1], pa.int32()),
-                "n_frames": pa.array(cols[2], pa.int32()),
-                "ssq_l": pa.array(cols[3], pa.int64()),
-                "ssq_r": pa.array(cols[4], pa.int64()),
-                "dot_lr": pa.array(cols[5], pa.int64()),
-                "dual_mono": pa.array(cols[6], pa.int32()),
-                "balance_permille": pa.array(cols[7], pa.int32()),
-                "phase_permille": pa.array(cols[8], pa.int32()),
-                "decode_error": pa.array(cols[9], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }

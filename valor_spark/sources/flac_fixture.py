@@ -20,12 +20,13 @@ they are not transcriptions of one another.
 from __future__ import annotations
 
 import hashlib
-import os
 import struct
 
 import numpy as np
 
 from valor_spark.operators.flac import FIXED_COEFFS, crc8, crc16
+from valor_spark.sources.audio_fixture import AUDIO_KEY, CLIPS_DDL, _tone
+from valor_spark.sources.fixture_writer import fixture
 
 _BLOCKSIZE_CODE = {
     192: 1, 576: 2, 1152: 3, 2304: 4, 4608: 5, 256: 8, 512: 9,
@@ -236,12 +237,6 @@ def encode_streaminfo_only(
     return bytes(out)
 
 
-def _tone(f: float, n: int, amp: float, phase: float = 0.0, sr: int = 16000):
-    t = np.arange(n) / sr
-    x = amp * np.sin(2 * np.pi * f * t + phase)
-    return np.clip(np.rint(x), -32768, 32767).astype(np.int16)
-
-
 def _flac_clip_set() -> list[dict]:
     """Plant rows: clip_id, bytes, sr_hz (the corpus's claimed rate), and
     the spec-side facts the expected table derives from."""
@@ -307,33 +302,25 @@ def _flac_clip_set() -> list[dict]:
     return rows
 
 
-def build_flac_fixture(fixture_dir: str) -> dict[str, str]:
+FLAC_EXPECTED_DDL = (
+    "clip_id string, sr_hz int, claim_sample_rate int, claim_channels int, "
+    "claim_bps int, claim_total_samples bigint, claim_min_blocksize int, "
+    "claim_max_blocksize int, has_md5 int, decoded_samples bigint, "
+    "decoded_rate int, md5_ok int, decode_error string"
+)
+
+
+@fixture("clips_flac_v1", AUDIO_KEY, "data", "expected")
+def build_flac_fixture(fixture_dir: str):
     """Write the FLAC clips + expected probe parquets (idempotent).
 
     Expected VALUE columns come from the plant spec (``_flac_clip_set``
     claims/facts); only the typed ERROR strings of the failure plants are
     replayed through ``probe_one`` (error plumbing, not arithmetic)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    from valor_spark.operators.audio import field_names
     from valor_spark.operators.flac import probe_one
-    from valor_spark.sources.audio_fixture import _fixture_tag
 
-    tag = _fixture_tag()
-    paths = {
-        name: os.path.join(fixture_dir, f"clips_flac_v1_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
-    col_names = [
-        "claim_sample_rate", "claim_channels", "claim_bps",
-        "claim_total_samples", "claim_min_blocksize", "claim_max_blocksize",
-        "has_md5", "decoded_samples", "decoded_rate", "md5_ok",
-        "decode_error",
-    ]
+    col_names = field_names(FLAC_EXPECTED_DDL)[2:]
     data_rows, expected_rows = [], []
     for p in _flac_clip_set():
         data_rows.append((p["clip_id"], p["raw"], p["sr_hz"], "flac"))
@@ -353,33 +340,11 @@ def build_flac_fixture(fixture_dir: str) -> dict[str, str]:
             assert probed["decode_error"] is None, (
                 p["clip_id"], probed["decode_error"],
             )
-        expected_rows.append((p["clip_id"], p["sr_hz"], exp))
-
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in data_rows], pa.string()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-                "sr_hz": pa.array([r[2] for r in data_rows], pa.int32()),
-                "codec": pa.array([r[3] for r in data_rows], pa.string()),
-            }
-        ),
-        paths["data"],
-    )
-    pa_types = {
-        "claim_total_samples": pa.int64(), "decoded_samples": pa.int64(),
-        "decode_error": pa.string(),
+        expected_rows.append((p["clip_id"], p["sr_hz"], *exp.values()))
+    return {
+        "data": (CLIPS_DDL, data_rows),
+        "expected": (FLAC_EXPECTED_DDL, expected_rows),
     }
-    table = {
-        "clip_id": pa.array([r[0] for r in expected_rows], pa.string()),
-        "sr_hz": pa.array([r[1] for r in expected_rows], pa.int32()),
-    }
-    for c in col_names:
-        table[c] = pa.array(
-            [r[2][c] for r in expected_rows], pa_types.get(c, pa.int32())
-        )
-    pq.write_table(pa.table(table), paths["expected"])
-    return paths
 
 
 __all__ = [

@@ -11,12 +11,14 @@ are all genuinely end-to-end tested, not tautological.
 
 from __future__ import annotations
 
-import os
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
+from valor_spark.sources.fixture_writer import fixture
+
 N_IMAGES = 120
+N_JPEG = 60
 FEATURE_DIM = 4
 #: bump when the expected-stats derivation changes (baked into filenames so
 #: stale .fixtures can't grade new code against old ground truth)
@@ -24,6 +26,7 @@ FEATURE_DIM = 4
 #: variants), exercising the real zlib+numpy PNG decoder end-to-end
 #: v3: every other PNG row is Adam7-interlaced
 FIXTURE_VERSION = 4
+IMAGES_DDL = "id bigint, bytes binary"
 
 
 def _round_half_up(v: float, digits: int) -> float:
@@ -80,25 +83,10 @@ def _encode(i: int, img: np.ndarray):
     return b"P5\n%d %d\n255\n" % (w, h) + img.tobytes(), "pgm"
 
 
-def build_image_fixture(fixture_dir: str) -> dict[str, str]:
+@fixture("images", (FIXTURE_VERSION, N_IMAGES, FEATURE_DIM), "data", "expected")
+def build_image_fixture(fixture_dir: str):
     """Write images + expected parquets (idempotent); returns their paths."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from valor_spark.operators.multimodal import block_features, fake_decode
-
-    import hashlib
-
-    tag = hashlib.md5(
-        repr((FIXTURE_VERSION, N_IMAGES, FEATURE_DIM)).encode()
-    ).hexdigest()[:8]
-    paths = {
-        name: os.path.join(fixture_dir, f"images_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
 
     data_rows, expected_rows = [], []
     for i in range(N_IMAGES):
@@ -155,35 +143,20 @@ def build_image_fixture(fixture_dir: str) -> dict[str, str]:
             )
         )
 
-    pq.write_table(
-        pa.table(
-            {
-                "id": pa.array([r[0] for r in data_rows], pa.int64()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-            }
+    return {
+        "data": (IMAGES_DDL, data_rows),
+        "expected": (
+            "id bigint, format string, width int, height int, channels int, "
+            "mean_intensity double, features array<double>, error string",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "id": pa.array(cols[0], pa.int64()),
-                "format": pa.array(cols[1], pa.string()),
-                "width": pa.array(cols[2], pa.int32()),
-                "height": pa.array(cols[3], pa.int32()),
-                "channels": pa.array(cols[4], pa.int32()),
-                "mean_intensity": pa.array(cols[5], pa.float64()),
-                "features": pa.array(cols[6], pa.list_(pa.float64())),
-                "error": pa.array(cols[7], pa.string()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
-def build_jpeg_fixture(fixture_dir: str) -> dict[str, str]:
+# "jpeg2": layout rotation gained progressive + per-component scans —
+# local salt bump (same role as FIXTURE_VERSION, scoped to this fixture)
+@fixture("images_jpeg", (FIXTURE_VERSION, N_JPEG, "jpeg2"), "data", "expected")
+def build_jpeg_fixture(fixture_dir: str):
     """JPEG-gate fixture: real JPEG bytes rotating every supported stream
     layout — sequential baseline (gray/RGB, 4:4:4 and 4:2:0, restart
     markers, odd dims), PROGRESSIVE SOF2 (full four-scan-type script:
@@ -194,29 +167,12 @@ def build_jpeg_fixture(fixture_dir: str) -> dict[str, str]:
     values are pytest-verified via PSNR, not hash-graded; the gate grades
     that the decoder really parses each entropy layout and reconstructs
     shape/metadata distributed under Spark)."""
-    import hashlib as _hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    import hashlib
 
     from valor_spark.operators.jpeg import encode_jpeg
 
-    n = 60
-    # "jpeg2": layout rotation gained progressive + per-component scans —
-    # local salt bump (same role as FIXTURE_VERSION, scoped to this fixture)
-    tag = _hashlib.md5(
-        repr((FIXTURE_VERSION, n, "jpeg2")).encode()
-    ).hexdigest()[:8]
-    paths = {
-        name: os.path.join(fixture_dir, f"images_jpeg_{name}_{tag}.parquet")
-        for name in ("data", "expected")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(fixture_dir, exist_ok=True)
-
     data_rows, expected_rows = [], []
-    for i in range(n):
+    for i in range(N_JPEG):
         img = _source_image(1000 + i)  # same pattern family, distinct seeds
         img3 = img if img.ndim == 3 else img[:, :, None]
         h, w, c = img3.shape
@@ -236,59 +192,30 @@ def build_jpeg_fixture(fixture_dir: str) -> dict[str, str]:
         if i % 11 == 7:  # planted truncation
             raw = raw[: len(raw) // 2]
             err = "truncated"
-        sha1 = _hashlib.sha1(raw).hexdigest()
+        sha1 = hashlib.sha1(raw).hexdigest()
         data_rows.append((i, raw))
         if err is not None:
             expected_rows.append((i, "jpeg", len(raw), sha1, None, None, None, True))
         else:
             expected_rows.append((i, "jpeg", len(raw), sha1, w, h, c, False))
 
-    pq.write_table(
-        pa.table(
-            {
-                "id": pa.array([r[0] for r in data_rows], pa.int64()),
-                "bytes": pa.array([r[1] for r in data_rows], pa.binary()),
-            }
+    return {
+        "data": (IMAGES_DDL, data_rows),
+        "expected": (
+            "id bigint, format string, n_bytes int, content_sha1 string, "
+            "width int, height int, channels int, has_error boolean",
+            expected_rows,
         ),
-        paths["data"],
-    )
-    cols = list(zip(*expected_rows))
-    pq.write_table(
-        pa.table(
-            {
-                "id": pa.array(cols[0], pa.int64()),
-                "format": pa.array(cols[1], pa.string()),
-                "n_bytes": pa.array(cols[2], pa.int32()),
-                "content_sha1": pa.array(cols[3], pa.string()),
-                "width": pa.array(cols[4], pa.int32()),
-                "height": pa.array(cols[5], pa.int32()),
-                "channels": pa.array(cols[6], pa.int32()),
-                "has_error": pa.array(cols[7], pa.bool_()),
-            }
-        ),
-        paths["expected"],
-    )
-    return paths
+    }
 
 
-def build_image_dhash_fixture(fixture_dir: str) -> str:
+@fixture("images_dhash", (FIXTURE_VERSION, N_IMAGES, "dhash"))
+def build_image_dhash_fixture(fixture_dir: str):
     """Expected perceptual-duplicate groups ``(dhash, n, first_id)`` —
     spec-side mirror of operators/multimodal.py::dhash_hex over the SOURCE
     pixel arrays (the gate decodes the encoded bytes; truncated and opaque
     plants are excluded, their pixels being unknown to the engine too)."""
-    import hashlib as _hashlib
     from collections import defaultdict
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tag = _hashlib.md5(
-        repr((FIXTURE_VERSION, N_IMAGES, "dhash")).encode()
-    ).hexdigest()[:8]
-    path = os.path.join(fixture_dir, f"images_dhash_{tag}.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(fixture_dir, exist_ok=True)
 
     groups: dict[str, list[int]] = defaultdict(list)
     for i in range(N_IMAGES):
@@ -307,15 +234,7 @@ def build_image_dhash_fixture(fixture_dir: str) -> str:
             val = (val << 1) | int(b)
         groups[format(val, "016x")].append(i)
 
-    rows = [(hh, len(ids), min(ids)) for hh, ids in groups.items() if len(ids) > 1]
-    pq.write_table(
-        pa.table(
-            {
-                "dhash": pa.array([r[0] for r in rows], pa.string()),
-                "n": pa.array([r[1] for r in rows], pa.int64()),
-                "first_id": pa.array([r[2] for r in rows], pa.int64()),
-            }
-        ),
-        path,
+    return (
+        "dhash string, n bigint, first_id bigint",
+        [(hh, len(ids), min(ids)) for hh, ids in groups.items() if len(ids) > 1],
     )
-    return path

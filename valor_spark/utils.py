@@ -34,13 +34,16 @@ def sql_lit(value) -> str:
     raise TypeError(f"no SQL literal for {value!r}")
 
 
-def spread_width(
-    df,
-    per_part_bytes: int = 128 << 10,
-    floor: int = 1,
-    rows_per_part: int = 4000,
-    count_below_bytes: int = 256 << 20,
-) -> int:
+#: spread_width's tuning: bytes and rows per spread partition, the
+#: narrowest spread, and the byte estimate below which an exact row count
+#: refines the width
+SPREAD_PART_BYTES = 128 << 10
+SPREAD_PART_ROWS = 4000
+SPREAD_FLOOR = 1
+SPREAD_COUNT_BELOW_BYTES = 256 << 20
+
+
+def spread_width(df) -> int:
     """Scale-adaptive width for the round-robin spread in front of a
     CPU-heavy per-row pass (fingerprint kernels, tokenize chains).
 
@@ -50,17 +53,18 @@ def spread_width(
     and the width also becomes the map side of every downstream exchange.
     Width = Spark's own plan-estimated ``sizeInBytes`` (file bytes x filter
     selectivity — a driver-side lookup, no job) divided by
-    ``per_part_bytes``, clamped to ``[floor, 2 x defaultParallelism]`` — so
-    a 100 TB input still saturates the cluster while a gate-sized frame
-    runs in a handful of tasks.
+    ``SPREAD_PART_BYTES``, clamped to ``[SPREAD_FLOOR, 2 x
+    defaultParallelism]`` — so a 100 TB input still saturates the cluster
+    while a gate-sized frame runs in a handful of tasks.
 
     Spark's default filter selectivity badly over-estimates highly
     selective gate filters (``doc_id < 200`` on a 50k-row table estimates
     43%, actual 0.4% — measured 2.9 s vs 0.7 s for the downstream
     fingerprint chain).  So when the byte estimate is small
-    (``count_below_bytes``, bounding the probe at a ~256 MB column-pruned
-    scan) the width is refined by an exact row count; above the threshold
-    the count could itself be a full scan, so the byte estimate stands."""
+    (``SPREAD_COUNT_BELOW_BYTES``, bounding the probe at a ~256 MB
+    column-pruned scan) the width is refined by an exact row count; above
+    the threshold the count could itself be a full scan, so the byte
+    estimate stands."""
     sc = df.sparkSession.sparkContext
     cap = sc.defaultParallelism * 2
     try:
@@ -69,13 +73,15 @@ def spread_width(
         )
     except Exception:  # estimation is best-effort; fall back to full width
         return cap
-    w_bytes = max(floor, min(cap, (est + per_part_bytes - 1) // per_part_bytes))
-    if w_bytes > floor and est <= count_below_bytes:
+    w_bytes = max(
+        SPREAD_FLOOR, min(cap, (est + SPREAD_PART_BYTES - 1) // SPREAD_PART_BYTES)
+    )
+    if w_bytes > SPREAD_FLOOR and est <= SPREAD_COUNT_BELOW_BYTES:
         try:
             n = df.count()
         except Exception:
             return w_bytes
-        w_rows = max(floor, (n + rows_per_part - 1) // rows_per_part)
+        w_rows = max(SPREAD_FLOOR, (n + SPREAD_PART_ROWS - 1) // SPREAD_PART_ROWS)
         return min(w_bytes, w_rows)
     return w_bytes
 
