@@ -214,23 +214,29 @@ def q_val_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DRIFT in the graded gate: each file-source micro-batch's
     `amount` distribution is PSI-scored against the first file's (the
-    fixed baseline) inside foreachBatch — batch psi_df, stream execution
-    (streaming/validate_stream.py::drift_stream).  Rows are keyed by the
-    batch's min(id) (content-derived), so the result is independent of
+    fixed baseline, built by baseline_from) inside foreachBatch — batch
+    drift_report, stream execution
+    (streaming/validate_stream.py::drift_report_stream).  Rows are keyed by
+    the batch's min(id) (content-derived), so the result is independent of
     micro-batch delivery order; batch 0 IS the baseline file, so its row
     pins psi = 0.0 exactly."""
     import shutil
     import tempfile
 
-    from valor_spark.streaming.validate_stream import drift_stream
+    from valor_spark.streaming.validate_stream import drift_report_stream
 
     src = _ensure_stream_fixture()
-    baseline = spark.read.parquet(os.path.join(src, "f1.parquet"))
+    baseline = DR.baseline_from(
+        spark.read.parquet(os.path.join(src, "f1.parquet")),
+        numeric_cols={},
+        categorical_cols=["amount"],
+    )
     collected: list = []
 
-    def on_batch(psi_df_: DataFrame, batch_df: DataFrame, batch_id: int) -> None:
-        key = batch_df.agg(F.min("id").alias("min_id"))
-        collected.extend(key.crossJoin(psi_df_).collect())
+    def on_batch(results: list, batch_df: DataFrame, batch_id: int) -> None:
+        (psi,) = results
+        min_id = batch_df.agg(F.min("id")).first()[0]
+        collected.append((min_id, float(psi.value)))
 
     stream = (
         spark.readStream.schema("id int, name string, amount int")
@@ -239,15 +245,18 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ckpt = tempfile.mkdtemp(prefix="gate_stream_drift_ckpt_")
     try:
-        q = drift_stream(
-            stream, baseline, "amount", on_batch, ckpt, trigger_once=True
+        q = drift_report_stream(
+            stream, baseline, on_batch, ckpt,
+            categorical={"amount": {}}, trigger_once=True,
         )
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("stream_drift: StreamingQuery did not finish in 300s")
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)  # per-call scratch, never resumed
-    return spark.createDataFrame(collected, "min_id int, psi double")
+    return spark.createDataFrame(collected, "min_id int, psi double").select(
+        "min_id", F.round("psi", 6).alias("psi")
+    )
 
 
 def q_val_speech_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,33 +451,45 @@ def q_region_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_psi_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _event_halves(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The drift queries' two samples of ``events``: the even-user half
+    (observed) and the odd-user half (reference)."""
     ev = _t(spark, sf_dir, "events")
-    obs = ev.filter(F.col("user_id") % 2 == 0)
-    base = ev.filter(F.col("user_id") % 2 == 1)
-    return DR.psi_df(obs, base, "event_type")
+    return ev.filter(F.col("user_id") % 2 == 0), ev.filter(F.col("user_id") % 2 == 1)
+
+
+def q_psi_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PSI of events.event_type between the even/odd user halves:
+    drift_report of the observed half against baseline_from of the
+    reference half."""
+    obs, base = _event_halves(spark, sf_dir)
+    baseline = DR.baseline_from(base, numeric_cols={}, categorical_cols=["event_type"])
+    (psi,) = DR.drift_report(obs, baseline, categorical={"event_type": {}})
+    return spark.createDataFrame([(float(psi.value),)], "psi double").select(
+        F.round("psi", 6).alias("psi")
+    )
 
 
 def q_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned KS drift entirely as DataFrame ops (the PSI counterpart of
-    psi_event_types): sup |ECDF delta| between the even/odd user halves of
-    events.value over the 0..500/20 grid.  The only unpartitioned window
-    runs over <= nbins(=20) histogram rows by construction."""
-    ev = _t(spark, sf_dir, "events")
-    return DR.ks_df(
-        ev.filter(F.col("user_id") % 2 == 0),
-        ev.filter(F.col("user_id") % 2 == 1),
-        "value",
-        0.0,
-        500.0,
-        20,
+    """Binned KS drift (the numeric counterpart of psi_event_types): sup
+    |ECDF delta| between the even/odd user halves of events.value over the
+    0..500/20 grid — drift_report against baseline_from."""
+    obs, base = _event_halves(spark, sf_dir)
+    baseline = DR.baseline_from(
+        base, numeric_cols={"value": (0.0, 500.0, 20)}, categorical_cols=[]
+    )
+    (ks,) = DR.drift_report(
+        obs, baseline, numeric={"value": dict(lo=0.0, hi=500.0, nbins=20)}
+    )
+    return spark.createDataFrame([(float(ks.value),)], "ks double").select(
+        F.round("ks", 6).alias("ks")
     )
 
 
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    return DR.numeric_histogram(ev, "value", 0.0, 500.0, 20).withColumnRenamed(
-        "cnt", "n"
+    return DR.histograms(ev, {"value": dict(lo=0.0, hi=500.0, nbins=20)}, {}).select(
+        F.col("key").cast("int").alias("bin"), F.col("cnt").alias("n")
     )
 
 
@@ -1243,14 +1264,18 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson chi-square categorical drift (operators/drift.py::chi2_df)
-    between the even/odd user halves of events.event_type — the
-    expected-count-weighted complement of PSI; integer counts in, one
+    """Pearson chi-square categorical drift between the even/odd user
+    halves of events.event_type — the expected-count-weighted complement
+    of PSI: drift_report against baseline_from, integer counts in, one
     rounded float out."""
-    ev = _t(spark, sf_dir, "events")
-    obs = ev.filter(F.col("user_id") % 2 == 0)
-    base = ev.filter(F.col("user_id") % 2 == 1)
-    return DR.chi2_df(obs, base, "event_type")
+    obs, base = _event_halves(spark, sf_dir)
+    baseline = DR.baseline_from(base, numeric_cols={}, categorical_cols=["event_type"])
+    (chi2,) = DR.drift_report(
+        obs, baseline, categorical={"event_type": dict(metrics=("chi2",))}
+    )
+    return spark.createDataFrame(
+        [(float(chi2.value), chi2.dof)], "chi2 double, dof bigint"
+    ).select(F.round("chi2", 6).alias("chi2"), "dof")
 
 
 def q_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,9 +1315,7 @@ def q_drift_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi-square's pass bar is the scale-free Wilson-Hilferty critical value
     for the realized dof.  Oracle: each statistic recomputed directly
     between the two halves in SQL."""
-    ev = _t(spark, sf_dir, "events")
-    obs = ev.filter(F.col("user_id") % 2 == 0)
-    base = ev.filter(F.col("user_id") % 2 == 1)
+    obs, base = _event_halves(spark, sf_dir)
     baseline = DR.baseline_from(
         base, numeric_cols={"value": (0.0, 500.0, 20)},
         categorical_cols=["event_type"],

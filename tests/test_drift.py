@@ -1,5 +1,7 @@
-"""KS / PSI drift: statistics vs hand-computed numpy, and end-to-end
-baseline-vs-shifted detection on the synthetic clips table."""
+"""KS / PSI / chi-square drift: statistics vs hand-computed numpy, the one
+histogram scan, the NULL semantics, and end-to-end baseline-vs-shifted
+detection on the synthetic clips table.  Every frame-level check goes
+through the one mechanism: ``baseline_from`` + ``drift_report``."""
 
 import numpy as np
 import pytest
@@ -36,11 +38,16 @@ def test_psi_handles_missing_categories():
     assert np.isfinite(v)
 
 
-def test_numeric_histogram_clamps_and_counts(spark):
+def test_histograms_clamp_and_count(spark):
     df = spark.createDataFrame([(x,) for x in [-5.0, 0.0, 9.9, 10.0, 99.0]], "v double")
-    h = {r["bin"]: r["cnt"] for r in D.numeric_histogram(df, "v", 0.0, 100.0, 10).collect()}
+    hist = D.histograms(df, {"v": dict(lo=0.0, hi=100.0, nbins=10)}, {})
+    h = {int(r["key"]): r["cnt"] for r in hist.collect()}
     # -5 clamps to bin 0; 0 and 9.9 -> bin 0; 10.0 -> bin 1; 99 -> bin 9
     assert h == {0: 3, 1: 1, 9: 1}
+
+
+_DUR = {"dur_ms": dict(lo=0.0, hi=1001.0, nbins=20)}
+_SR = {"sr_hz": dict(threshold=0.2)}
 
 
 def test_end_to_end_no_drift(spark):
@@ -49,8 +56,7 @@ def test_end_to_end_no_drift(spark):
     baseline = D.baseline_from(
         ok, numeric_cols={"dur_ms": (0.0, 1001.0, 20)}, categorical_cols=["sr_hz"]
     ).cache()
-    ks = D.ks_drift(ok, "dur_ms", baseline, lo=0.0, hi=1001.0, nbins=20)
-    psi = D.psi_drift(ok, "sr_hz", baseline)
+    ks, psi = D.drift_report(ok, baseline, numeric=_DUR, categorical=_SR)
     assert ks.passed and ks.value < 1e-9
     assert psi.passed and psi.value < 1e-9
 
@@ -62,27 +68,30 @@ def test_end_to_end_detects_shift(spark):
         ok, numeric_cols={"dur_ms": (0.0, 1001.0, 20)}, categorical_cols=["sr_hz"]
     ).cache()
     shifted = ok.withColumn("dur_ms", F.col("dur_ms") + 400)
-    ks = D.ks_drift(shifted, "dur_ms", baseline, lo=0.0, hi=1001.0, nbins=20)
+    (ks,) = D.drift_report(shifted, baseline, numeric=_DUR)
     assert not ks.passed and ks.value > 0.3
     skewed = ok.withColumn(
         "sr_hz", F.when(F.col("sr_hz") == 8000, 16000).otherwise(F.col("sr_hz"))
     )
-    psi = D.psi_drift(skewed, "sr_hz", baseline)
+    (psi,) = D.drift_report(skewed, baseline, categorical=_SR)
     assert not psi.passed
 
 
 def test_drift_report_single_scan_matches_per_metric(spark):
-    """drift_report (one scan for all metrics) must agree with the
-    per-metric ks_drift / psi_drift to float precision."""
+    """drift_report (one scan for all metrics, each column restricted by
+    its own ``pred``) must agree with one report per metric over the
+    pre-filtered frame to float precision."""
     clips = S.clips(spark, n=1500, n_shards=4, with_audio=False)
     ok = clips.filter((F.col("dur_ms") > 0) & (F.col("sr_hz") > 0))
     baseline = D.baseline_from(
         ok, numeric_cols={"dur_ms": (0.0, 1001.0, 20)}, categorical_cols=["sr_hz"]
     ).cache()
-    want_ks = D.ks_drift(
-        clips.filter(F.col("dur_ms") > 0), "dur_ms", baseline, 0.0, 1001.0, 20
+    (want_ks,) = D.drift_report(
+        clips.filter(F.col("dur_ms") > 0), baseline, numeric=_DUR
     )
-    want_psi = D.psi_drift(clips.filter(F.col("sr_hz") > 0), "sr_hz", baseline)
+    (want_psi,) = D.drift_report(
+        clips.filter(F.col("sr_hz") > 0), baseline, categorical=_SR
+    )
     got = {
         (r.column, r.metric): r
         for r in D.drift_report(
@@ -100,10 +109,10 @@ def test_drift_report_single_scan_matches_per_metric(spark):
 
 def test_drift_report_chi2_same_scan(spark):
     """metrics=("psi","chi2") derives BOTH statistics from the one exploded
-    -key histogram: chi2 agrees with the chi2_df operator run on equivalent
-    raw frames, dof is realized union-categories - 1, and the default
-    threshold is the scale-free Wilson-Hilferty critical value."""
-    from valor_spark.operators.drift import chi2_critical, chi2_df
+    -key histogram: chi2 equals the hand-computed value, dof is realized
+    union-categories - 1, and the default threshold is the scale-free
+    Wilson-Hilferty critical value."""
+    from valor_spark.operators.drift import chi2_critical
 
     obs = spark.createDataFrame([("a",)] * 30 + [("b",)] * 10, "k string")
     base = spark.createDataFrame([("a",)] * 20 + [("b",)] * 20, "k string")
@@ -114,9 +123,9 @@ def test_drift_report_chi2_same_scan(spark):
             obs, baseline, categorical={"k": dict(metrics=("psi", "chi2"))}
         )
     }
-    want = chi2_df(obs, base, "k").collect()[0]
-    assert abs(rep["chi2"].value - want["chi2"]) < 1e-9
-    assert rep["chi2"].dof == want["dof"] == 1
+    # expected counts: a 20, b 20; chi2 = (30-20)^2/20 + (10-20)^2/20 = 10.0
+    assert abs(rep["chi2"].value - 10.0) < 1e-9
+    assert rep["chi2"].dof == 1
     assert abs(rep["chi2"].threshold - chi2_critical(1)) < 1e-12
     assert not rep["chi2"].passed  # chi2=10.0 > 3.84 critical
     assert "psi" in rep and rep["psi"].dof is None
@@ -193,38 +202,90 @@ def test_drift_report_stream_matches_batch(spark, tmp_path):
     assert got == want and ("k", "chi2") in want
 
 
-def test_psi_drift_string_categorical_baseline(spark):
+def test_psi_string_categorical_baseline(spark):
     """A genuinely string-typed category (e.g. codec) in the baseline: the
     baseline carries it in the `category` column (the legacy numeric bin_lo
     encoding remains a fallback) — previously str(int(bin_lo)) raised."""
     rows = [(i, ["wav", "pcm_s16le", "flac"][i % 3]) for i in range(90)]
     df = spark.createDataFrame(rows, "id int, codec string")
     baseline = D.baseline_from(df, numeric_cols={}, categorical_cols=["codec"])
-    same = D.psi_drift(df, "codec", baseline)
+    codec = {"codec": dict(threshold=0.01)}
+    (same,) = D.drift_report(df, baseline, categorical=codec)
     assert same.value < 1e-9 and same.passed
     skewed = df.filter(F.col("codec") != "flac")
-    drifted = D.psi_drift(skewed, "codec", baseline)
-    assert drifted.value > 0.1
-    # drift_report path decodes the same way
-    rep = D.drift_report(skewed, baseline, categorical={"codec": dict(threshold=0.01)})
-    assert rep[0].metric == "psi" and abs(rep[0].value - drifted.value) < 1e-12
+    (drifted,) = D.drift_report(skewed, baseline, categorical=codec)
+    # observed 1/2, 1/2, 0 (clamped to EPS) against 1/3 each
+    p = np.array([0.5, 0.5, D.EPS])
+    q = np.full(3, 1 / 3)
+    want = float(np.sum((p - q) * np.log(p / q)))
+    assert drifted.metric == "psi" and abs(drifted.value - want) < 1e-9
+    assert drifted.value > 0.1 and not drifted.passed
 
 
-def test_chi2_df_hand_computed(spark):
-    from valor_spark.operators.drift import chi2_df
-
+def test_chi2_hand_computed(spark):
     obs = spark.createDataFrame([("a",)] * 30 + [("b",)] * 10, "k string")
     base = spark.createDataFrame([("a",)] * 20 + [("b",)] * 20, "k string")
-    row = chi2_df(obs, base, "k").collect()[0]
+    chi2 = {"k": dict(metrics=("chi2",))}
+
+    def score(o, b):
+        baseline = D.baseline_from(b, numeric_cols={}, categorical_cols=["k"])
+        (r,) = D.drift_report(o, baseline, categorical=chi2)
+        return r
+
+    r = score(obs, base)
     # expected counts: a 20, b 20; chi2 = (30-20)^2/20 + (10-20)^2/20 = 10.0
-    assert row["chi2"] == 10.0 and row["dof"] == 1
+    assert r.value == 10.0 and r.dof == 1
 
     # identical distributions -> 0; category missing from base -> finite
-    same = chi2_df(obs, obs, "k").collect()[0]
-    assert same["chi2"] == 0.0
+    assert score(obs, obs).value == 0.0
     novel = spark.createDataFrame([("zzz",)] * 5, "k string")
-    v = chi2_df(novel, base, "k").collect()[0]
-    assert v["chi2"] > 1e6  # epsilon-share expected count -> huge penalty
+    assert score(novel, base).value > 1e6  # epsilon-share expected count
+
+
+def test_null_is_neither_category_nor_bin(spark, tmp_path):
+    """A NULL value enters no histogram: a frame with NULL categories and
+    NULL numeric values, scored against itself, reads psi 0, chi2 0 with
+    dof = distinct non-NULL categories - 1, and KS 0 — through
+    drift_report and through drift_report_stream alike.  Dropping the
+    NULL rows moves no share either."""
+    from valor_spark.streaming.validate_stream import drift_report_stream
+
+    ddl = "id int, k string, v double"
+    rows = [(1, "a", 1.0), (2, "b", None), (3, None, 7.0),
+            (4, "a", 12.0), (5, "c", None), (6, None, 19.0)]
+    df = spark.createDataFrame(rows, ddl)
+    numeric = {"v": dict(lo=0.0, hi=20.0, nbins=4)}
+    categorical = {"k": dict(metrics=("psi", "chi2"))}
+    baseline = D.baseline_from(
+        df, numeric_cols={"v": (0.0, 20.0, 4)}, categorical_cols=["k"]
+    )
+    assert baseline.filter(F.col("category").isNull()
+                           & (F.col("column_name") == "k")).count() == 0
+
+    def readings(results):
+        return {(r.metric, r.value, r.dof) for r in results}
+
+    want = {("ks", 0.0, None), ("psi", 0.0, None), ("chi2", 0.0, 2)}
+    assert readings(D.drift_report(df, baseline, numeric=numeric,
+                                   categorical=categorical)) == want
+    no_null_k = df.filter(F.col("k").isNotNull())
+    no_null_v = df.filter(F.col("v").isNotNull())
+    assert readings(D.drift_report(no_null_k, baseline, categorical=categorical)) \
+        == {("psi", 0.0, None), ("chi2", 0.0, 2)}
+    assert readings(D.drift_report(no_null_v, baseline, numeric=numeric)) \
+        == {("ks", 0.0, None)}
+
+    src = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(src)
+    got: list = []
+    q = drift_report_stream(
+        spark.readStream.schema(ddl).parquet(src), baseline,
+        lambda results, _batch, _id: got.append(readings(results)),
+        str(tmp_path / "ckpt"), numeric=numeric, categorical=categorical,
+        trigger_once=True,
+    )
+    assert q.awaitTermination(120)
+    assert got == [want]
 
 
 def test_corr_stats_matches_numpy_and_is_partition_stable(spark):

@@ -286,8 +286,8 @@ def test_profile_stream_batch_parity(spark, tmp_path_factory):
 
 
 def test_drift_stream_matches_batch_psi(spark, tmp_path_factory):
-    from valor_spark.operators.drift import psi_df
-    from valor_spark.streaming.validate_stream import drift_stream
+    from valor_spark.operators.drift import baseline_from, drift_report
+    from valor_spark.streaming.validate_stream import drift_report_stream
 
     src = str(tmp_path_factory.mktemp("dsrc"))
     # two files with deliberately different category mixes
@@ -304,12 +304,17 @@ def test_drift_stream_matches_batch_psi(spark, tmp_path_factory):
     for j, f in enumerate(sorted(_g.glob(src + "/*/part-*.parquet"))):
         shutil.copyfile(f, f"{flat}/f{j}.parquet")
 
-    baseline = spark.read.parquet(f"{flat}/f0.parquet")
+    baseline = baseline_from(
+        spark.read.parquet(f"{flat}/f0.parquet"),
+        numeric_cols={}, categorical_cols=["cat"],
+    )
+    categorical = {"cat": {}}
     got: dict[int, float] = {}
 
-    def on_batch(psi_frame, batch_df, batch_id):
+    def on_batch(results, batch_df, batch_id):
         key = batch_df.agg(F.min("id")).collect()[0][0]
-        got[key] = psi_frame.collect()[0]["psi"]
+        (psi,) = results
+        got[key] = psi.value
 
     stream = (
         spark.readStream.schema("id int, cat int")
@@ -317,16 +322,20 @@ def test_drift_stream_matches_batch_psi(spark, tmp_path_factory):
         .parquet(flat)
     )
     ckpt = str(tmp_path_factory.mktemp("dckpt"))
-    q = drift_stream(stream, baseline, "cat", on_batch, ckpt, trigger_once=True)
+    q = drift_report_stream(
+        stream, baseline, on_batch, ckpt, categorical=categorical,
+        trigger_once=True,
+    )
     assert q.awaitTermination(120)
 
     # stream execution, batch truth: each micro-batch's PSI equals the
     # batch operator on the same file; the baseline batch scores 0.0
     for fname, key in (("f0", 0), ("f1", 100)):
-        want = psi_df(
-            spark.read.parquet(f"{flat}/{fname}.parquet"), baseline, "cat"
-        ).collect()[0]["psi"]
-        assert got[key] == want
+        (want,) = drift_report(
+            spark.read.parquet(f"{flat}/{fname}.parquet"), baseline,
+            categorical=categorical,
+        )
+        assert got[key] == want.value
     assert got[0] == 0.0
     assert got[100] > 0.1
 

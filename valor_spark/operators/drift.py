@@ -1,17 +1,25 @@
-"""Distribution-drift checks: binned KS and PSI (north_rule).
+"""Distribution-drift checks: binned KS, PSI and chi-square (north_rule).
 
 No scipy in the environment — the statistics are hand-rolled: the heavy part
-(histogramming 10^12 rows) is a single DataFrame aggregation; the finish
-(cumulative sums over a few dozen bins) is driver-side numpy, which is O(bins)
-and scale-free.
+(histogramming 10^12 rows) is ONE DataFrame aggregation, :func:`histograms`,
+that serves every column's histogram from a single scan; the finish
+(cumulative sums over a few dozen bins) is driver-side numpy, one function
+per statistic (:func:`ks_statistic`, :func:`psi_statistic`,
+:func:`chi2_statistic`), which is O(bins) and scale-free.
 
 * KS (used on ``dur_ms``): sup |ECDF_obs - ECDF_baseline| over shared bins.
 * PSI (used on ``sr_hz``): sum((p-q) * ln(p/q)) with epsilon clamping.
+* chi-square: observed counts against baseline shares, epsilon clamping.
 
 The baseline is a tiny histogram table ``(column_name, bin_lo, bin_hi,
-expected_share)`` (FIXTURES.md §3) — yesterday's distribution; at production
-scale it is itself produced by :func:`numeric_histogram` on a previous run
-and persisted.
+expected_share[, category])`` (FIXTURES.md §3) — yesterday's distribution;
+:func:`baseline_from` builds it from a reference frame through the same
+:func:`histograms` scan, and :func:`drift_report` scores a frame against it.
+Comparing two frames is those two calls composed.
+
+NULL semantics: a NULL value is neither a category nor a bin.  It enters no
+histogram, on either side, so it neither adds a category (or a degree of
+freedom) nor moves any share.
 """
 
 from __future__ import annotations
@@ -28,8 +36,7 @@ EPS = 1e-9
 
 def _bin_expr(col: str, lo: float, hi: float, nbins: int):
     """Uniform-bin index Column: floor((x - lo)/width) clamped to
-    [0, nbins-1] — the ONE definition both numeric_histogram and
-    drift_report use (duplicated copies drift apart)."""
+    [0, nbins-1] — the ONE definition of a numeric bin."""
     width = (hi - lo) / nbins
     b = F.floor((F.col(col).cast("double") - F.lit(lo)) / F.lit(width))
     return F.greatest(F.lit(0), F.least(F.lit(nbins - 1), b)).cast("int")
@@ -63,43 +70,18 @@ def _baseline_bins(base_rows, col: str, lo: float, hi: float, nbins: int) -> dic
     return base
 
 
-def numeric_histogram(
-    df: DataFrame, col: str, lo: float, hi: float, nbins: int
-) -> DataFrame:
-    """Uniform-bin histogram as one aggregation: ``(bin, cnt)``.
-
-    Values outside [lo, hi) clamp to the edge bins (bin 0 / nbins-1); NULLs
-    are dropped.  One shuffle of at most ``nbins`` rows after map-side
-    partial aggregation — skew-free by construction."""
-    return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(_bin_expr(col, lo, hi, nbins).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def categorical_histogram(df: DataFrame, col: str) -> DataFrame:
-    """Exact value histogram ``(value, cnt)`` (for low-cardinality columns
-    like ``sr_hz``)."""
-    return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _histograms(df: DataFrame, numeric: dict, categorical: dict) -> DataFrame:
+def histograms(df: DataFrame, numeric: dict, categorical: dict) -> DataFrame:
     """Every requested histogram from ONE scan of ``df``: ``(kind, col, key,
     cnt)`` rows, kind ``"n"`` (key = uniform-bin index) or ``"c"`` (key =
     the category value), both keys as strings.
 
     ``numeric``: {col: {lo, hi, nbins, pred?}}; ``categorical``: {col:
-    {pred?}}.  Each row projects one struct key per column (NULL when the
-    value is NULL or ``pred`` fails), explodes, and a single count
-    aggregate with map-side combine feeds all parts — at 100 TB the scan IS
-    the cost, so one pass replaces one scan per histogram.  Struct keys,
-    not delimited strings: column names and category values may contain
-    any character."""
+    {pred?}}.  Values outside [lo, hi) clamp to the edge bins.  Each row
+    projects one struct key per column (NULL when the value is NULL or
+    ``pred`` fails), explodes, and a single count aggregate with map-side
+    combine feeds all parts — at 100 TB the scan IS the cost, so one pass
+    replaces one scan per histogram.  Struct keys, not delimited strings:
+    column names and category values may contain any character."""
 
     def key(kind: str, col: str, spec: dict, value):
         cond = F.col(col).isNotNull()
@@ -150,8 +132,8 @@ def psi_statistic(obs: dict, base: dict) -> float:
 def chi2_statistic(obs: dict, base_shares: dict) -> tuple[float, int]:
     """Pearson chi-square of observed COUNTS against baseline SHARES ->
     ``(chi2, dof)``.  Expected counts = clamped baseline share x observed
-    total (same epsilon policy as :func:`psi_statistic` / :func:`chi2_df`,
-    so categories absent from the baseline draw a finite-but-huge penalty);
+    total (same epsilon policy as :func:`psi_statistic`, so categories
+    absent from the baseline draw a finite-but-huge penalty);
     dof = union categories - 1."""
     keys = sorted(set(obs) | set(base_shares))
     n_o = np.array([obs.get(k, 0) for k in keys], dtype=np.float64)
@@ -186,38 +168,6 @@ class DriftResult:
         return self.value <= self.threshold
 
 
-def ks_drift(
-    df: DataFrame,
-    col: str,
-    baseline: DataFrame,
-    lo: float,
-    hi: float,
-    nbins: int,
-    threshold: float = 0.1,
-) -> DriftResult:
-    """KS drift of ``col`` against a baseline histogram table filtered to
-    ``column_name == col`` whose bins must be the same uniform grid."""
-    obs_rows = numeric_histogram(df, col, lo, hi, nbins).collect()
-    obs = {r["bin"]: r["cnt"] for r in obs_rows}
-    base = _baseline_bins(baseline.collect(), col, lo, hi, nbins)
-    return DriftResult(col, "ks", ks_statistic(obs, base), threshold)
-
-
-def psi_drift(
-    df: DataFrame,
-    col: str,
-    baseline: DataFrame,
-    threshold: float = 0.2,
-) -> DriftResult:
-    """PSI drift of a categorical column against baseline expected shares
-    (``bin_lo`` holds the category value for categorical baselines)."""
-    obs_rows = categorical_histogram(df, col).collect()
-    obs = {r["value"]: r["cnt"] for r in obs_rows}
-    base_rows = baseline.filter(F.col("column_name") == col).collect()
-    base = {_cat_key(r): r["expected_share"] for r in base_rows}
-    return DriftResult(col, "psi", psi_statistic(obs, base), threshold)
-
-
 def drift_report(
     df: DataFrame,
     baseline: DataFrame,
@@ -233,12 +183,12 @@ def drift_report(
     threshold defaults to the Wilson-Hilferty 95% critical value for the
     realized dof (scale-free — see :func:`chi2_critical`), overridable via
     ``chi2_threshold``.  Every histogram comes from the one scan of
-    :func:`_histograms`; ``pred`` optionally restricts which rows enter
+    :func:`histograms`; ``pred`` optionally restricts which rows enter
     that column's histogram (e.g. only positive durations)."""
     numeric = numeric or {}
     categorical = categorical or {}
     obs: dict[tuple, dict] = {}
-    for r in _histograms(df, numeric, categorical).collect():
+    for r in histograms(df, numeric, categorical).collect():
         obs.setdefault((r["kind"], r["col"]), {})[r["key"]] = r["cnt"]
 
     base_rows = baseline.collect()
@@ -276,64 +226,6 @@ def drift_report(
     return results
 
 
-def ks_df(
-    obs: DataFrame,
-    base: DataFrame,
-    col: str,
-    lo: float,
-    hi: float,
-    nbins: int,
-    round_to: int = 6,
-) -> DataFrame:
-    """Binned KS statistic between two DataFrames' distributions of ``col``,
-    entirely as DataFrame ops — one row ``(ks)``.
-
-    sup |cumsum(p) - cumsum(q)| over the shared uniform bins; the cumulative
-    window runs over at most ``nbins`` rows (the heavy part is the two
-    histogram aggregations, each one scan with map-side combine)."""
-    o = (
-        obs.filter(F.col(col).isNotNull())
-        .groupBy(_bin_expr(col, lo, hi, nbins).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("bin", (F.col("n") / F.sum("n").over(Window.partitionBy())).alias("p"))
-    )
-    b = (
-        base.filter(F.col(col).isNotNull())
-        .groupBy(_bin_expr(col, lo, hi, nbins).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("bin", (F.col("n") / F.sum("n").over(Window.partitionBy())).alias("q"))
-    )
-    j = o.join(b, on="bin", how="full_outer").select(
-        "bin",
-        F.coalesce("p", F.lit(0.0)).alias("p"),
-        F.coalesce("q", F.lit(0.0)).alias("q"),
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = j.select(
-        (F.sum("p").over(w) - F.sum("q").over(w)).alias("d")
-    )
-    return cum.agg(F.round(F.max(F.abs(F.col("d"))), round_to).alias("ks"))
-
-
-def psi_df(obs: DataFrame, base: DataFrame, col: str, round_to: int = 6) -> DataFrame:
-    """PSI between two DataFrames' distributions of ``col``, entirely as
-    DataFrame ops (no driver-side collect) — one row ``(psi)``.
-
-    Shares are epsilon-clamped so categories missing on one side contribute
-    a finite penalty (same formula as :func:`psi_statistic`)."""
-    o = obs.groupBy(F.col(col).cast("string").alias("k")).agg(F.count(F.lit(1)).alias("n"))
-    b = base.groupBy(F.col(col).cast("string").alias("k")).agg(F.count(F.lit(1)).alias("n"))
-    o = o.select("k", (F.col("n") / F.sum("n").over(Window.partitionBy())).alias("p"))
-    b = b.select("k", (F.col("n") / F.sum("n").over(Window.partitionBy())).alias("q"))
-    j = o.join(b, on="k", how="full_outer").select(
-        F.greatest(F.coalesce("p", F.lit(0.0)), F.lit(EPS)).alias("p"),
-        F.greatest(F.coalesce("q", F.lit(0.0)), F.lit(EPS)).alias("q"),
-    )
-    return j.agg(
-        F.round(F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))), round_to).alias("psi")
-    )
-
-
 def baseline_from(
     df: DataFrame,
     numeric_cols: dict,
@@ -349,7 +241,7 @@ def baseline_from(
     rows carry NULL."""
     # ONE scan for every histogram (row order is arbitrary; every consumer
     # builds dicts or joins)
-    hist = _histograms(
+    hist = histograms(
         df,
         {c: dict(lo=lo, hi=hi, nbins=nb) for c, (lo, hi, nb) in numeric_cols.items()},
         {c: {} for c in categorical_cols},
@@ -376,43 +268,4 @@ def baseline_from(
         F.when(is_num, bin_hi_n).otherwise(F.col("key").try_cast("double")).alias("bin_hi"),
         (F.col("cnt") / total).alias("expected_share"),
         F.when(is_num, F.lit(None).cast("string")).otherwise(F.col("key")).alias("category"),
-    )
-
-
-def chi2_df(obs: DataFrame, base: DataFrame, col: str, round_to: int = 6) -> DataFrame:
-    """Pearson chi-square drift statistic between two DataFrames'
-    categorical distributions of ``col``, entirely as DataFrame ops — one
-    row ``(chi2, dof)``.  Complements :func:`psi_df` (PSI weights by share
-    delta; chi-square weights by expected count, so small-expected
-    categories surface).  Expected counts derive from the baseline's share
-    of each category scaled to the observed total; categories absent from
-    the baseline get the epsilon share (finite penalty, same clamping
-    policy as PSI).  All inputs to the float expression are exact integer
-    counts, so the only float nondeterminism is the final <=#categories-row
-    sum — rounded like psi_df."""
-    o = obs.groupBy(F.col(col).cast("string").alias("k")).agg(
-        F.count(F.lit(1)).alias("n_o")
-    )
-    b = base.groupBy(F.col(col).cast("string").alias("k")).agg(
-        F.count(F.lit(1)).alias("n_b")
-    )
-    j = (
-        o.join(b, on="k", how="full_outer")
-        .select(
-            F.coalesce("n_o", F.lit(0)).cast("double").alias("n_o"),
-            F.coalesce("n_b", F.lit(0)).cast("double").alias("n_b"),
-        )
-        .withColumn("tot_o", F.sum("n_o").over(Window.partitionBy()))
-        .withColumn("tot_b", F.sum("n_b").over(Window.partitionBy()))
-        .select(
-            "n_o",
-            (F.greatest(F.col("n_b") / F.col("tot_b"), F.lit(EPS)) * F.col("tot_o")).alias("exp"),
-        )
-    )
-    return j.agg(
-        F.round(
-            F.sum((F.col("n_o") - F.col("exp")) * (F.col("n_o") - F.col("exp")) / F.col("exp")),
-            round_to,
-        ).alias("chi2"),
-        (F.count(F.lit(1)) - 1).cast("bigint").alias("dof"),
     )

@@ -10,8 +10,7 @@ the reference is reader-style lookups against a "database"
 * the error value ``e`` -> a verdict struct column per named rule, flattened
   to violation rows ``(keys..., rule, path, error)``;
 * the effect monad      -> *context stages* that join/broadcast reference
-  DataFrames (or whole-table aggregates) into context columns **before** the
-  vectorized row rules run.  Effects are hoisted to a pre-pass; observable
+  DataFrames into context columns **before** the vectorized row rules run.  Effects are hoisted to a pre-pass; observable
   behavior matches the reference because its monads are commutative readers.
 
 Scale notes (100 TB design):
@@ -21,15 +20,14 @@ Scale notes (100 TB design):
   rule's verdict is materialized once (avoids Catalyst re-deriving shared
   sub-rules for wrongness vs payload).
 * Context stages prefer ``F.broadcast`` for small reference tables and
-  left-semi/anti joins otherwise; whole-table aggregates are computed once
-  per run and broadcast back as one-row literals.
+  left-semi/anti joins otherwise.
 * The violations DataFrame is produced by ONE explode over a per-row
   violation array — not a union of per-rule scans.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -161,22 +159,6 @@ class Membership(ContextStage):
         return joined.withColumn(
             self.context_col, F.coalesce(F.col(self.context_col), F.lit(False))
         )
-
-
-@dataclass
-class LiteralContext(ContextStage):
-    """Attach driver-computed scalars (e.g. whole-table stats thresholds) as
-    literal columns — one-row context broadcast for free via constant folding."""
-
-    values: Mapping[str, object] = dc_field(default_factory=dict)
-
-    def __post_init__(self) -> None:
-        self.adds = tuple(self.values)
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        for name, v in self.values.items():
-            df = df.withColumn(name, F.lit(v))
-        return df
 
 
 # ---------------------------------------------------------------------------

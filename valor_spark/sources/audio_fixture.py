@@ -22,6 +22,7 @@ end-to-end gate on the payload invariant, not a tautology.
 
 from __future__ import annotations
 
+import functools
 from decimal import ROUND_HALF_UP, Decimal
 
 from valor_spark.sources import synthetic as S
@@ -121,7 +122,8 @@ def _expected_for(spec: ClipSpec) -> list[tuple[str, str]]:
     return out
 
 
-def _codec_plants() -> list[dict]:
+@functools.cache
+def _codec_plants() -> tuple[dict, ...]:
     """Compressed-codec plant rows exercising decode_one's fallback paths
     (raw G.711 mu/A-law, G.711-in-WAV tag 6, IMA ADPCM tag 0x11) through
     EVERY audio gate row — the invariant, profile, segments, spectrum and
@@ -132,7 +134,11 @@ def _codec_plants() -> list[dict]:
     checks are the SNR-vs-ORIGINAL-reference gate below, whose reference
     predates the encode, and the codec unit tests' scalar cross-checks /
     table landmarks in tests/test_audio.py).  Violations mirror the engine's
-    rule order: decode -> length -> SNR -> transcript -> header rate."""
+    rule order: decode -> length -> SNR -> transcript -> header rate.
+
+    Built once per process: five builders replay the plants and each encode
+    pass costs ~0.15 s.  The PCM arrays are read-only, so no caller can
+    change what the next one reads."""
     import numpy as np
 
     from valor_spark.operators import adpcm as AD
@@ -146,6 +152,9 @@ def _codec_plants() -> list[dict]:
     plants: list[dict] = []
 
     def add(cid, raw, sr, codec, ref_pcm, decoded, extra_viol=()):
+        for pcm in (ref_pcm, decoded):
+            if pcm is not None:
+                pcm.setflags(write=False)
         viols = []
         if ref_pcm is not None:
             v = snr_db(decoded, ref_pcm)
@@ -223,7 +232,7 @@ def _codec_plants() -> list[dict]:
         src,
         extra_viol=[("sr_header_consistent", "SampleRateHeaderMismatch:8000!=16000")],
     )
-    return plants
+    return tuple(plants)
 
 
 def _g711_wav(tag: int, payload: bytes, rate: int) -> bytes:

@@ -49,8 +49,3 @@ def load_clips(
     if columns:
         df = df.select(*columns)
     return df
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-generated TPC-H-ish parquet (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

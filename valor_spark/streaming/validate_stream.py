@@ -10,7 +10,10 @@ to a streaming DataFrame unchanged.  This module provides:
   ``foreachBatch`` (each micro-batch reuses the batch engine, so violation
   output is byte-identical to the batch path);
 * :func:`windowed_violation_counts` — watermarked per-window violation
-  metrics (late data handled by the watermark).
+  metrics (late data handled by the watermark);
+* :func:`drift_report_stream` — every micro-batch scored for KS / PSI /
+  chi-square drift against a fixed baseline by the batch
+  ``drift_report`` (the one drift mechanism, operators/drift.py).
 
 Scale notes: rule evaluation stays in the stream's narrow stage (no
 shuffle); only the windowed metrics aggregate state, bounded by the
@@ -255,34 +258,6 @@ def profile_stream(
     return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
 
 
-def drift_stream(
-    stream_df: DataFrame,
-    baseline_df: DataFrame,
-    col: str,
-    on_batch: Callable[[DataFrame, DataFrame, int], None],
-    checkpoint_dir: str,
-    trigger_once: bool = False,
-):
-    """Distribution-drift monitoring at INGEST time: every micro-batch's
-    categorical distribution of ``col`` is PSI-scored against a FIXED
-    baseline (the training/reference distribution) with the batch
-    ``psi_df`` operator unchanged inside ``foreachBatch`` — the streaming
-    shape of the north_rule drift check (alert while the feed lands, not
-    after the next full scan).  ``on_batch(psi_row_df, batch_df,
-    batch_id)`` receives the one-row PSI frame plus the batch itself so
-    callers can key the score by batch content (order-independent) rather
-    than batch id.  The baseline is a plain DataFrame captured in the
-    closure: re-evaluated per batch, O(categories) after the groupBy, and
-    identical to what the batch path would compute — stream execution,
-    batch truth."""
-    from valor_spark.operators.drift import psi_df
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        on_batch(psi_df(batch_df, baseline_df, col), batch_df, batch_id)
-
-    return _start_foreach_batch(stream_df, handle, checkpoint_dir, trigger_once)
-
-
 def drift_report_stream(
     stream_df: DataFrame,
     baseline_df: DataFrame,
@@ -292,15 +267,17 @@ def drift_report_stream(
     categorical: dict | None = None,
     trigger_once: bool = False,
 ):
-    """ALL drift metrics (KS + PSI + chi-square) per micro-batch from ONE
-    scan of the batch: the batch :func:`~valor_spark.operators.drift.
-    drift_report` operator runs unchanged inside ``foreachBatch`` against a
-    FIXED baseline histogram table, so each arriving batch is read once for
-    every configured metric (vs one pass per metric with the single-metric
-    wrappers).  ``on_batch(results, batch_df, batch_id)`` receives the
-    ``list[DriftResult]``; the baseline is the tiny ``(column_name, bin_lo,
-    bin_hi, expected_share, category)`` frame ``baseline_from`` builds —
-    stream execution, batch truth."""
+    """Distribution-drift monitoring at INGEST time: ALL drift metrics (KS +
+    PSI + chi-square) per micro-batch from ONE scan of the batch.  The batch
+    :func:`~valor_spark.operators.drift.drift_report` operator runs
+    unchanged inside ``foreachBatch`` against a FIXED baseline histogram
+    table, so each arriving batch is read once for every configured metric
+    and alerts while the feed lands, not after the next full scan.
+    ``on_batch(results, batch_df, batch_id)`` receives the
+    ``list[DriftResult]`` plus the batch itself, so callers can key the
+    scores by batch content rather than batch id; the baseline is the tiny
+    ``(column_name, bin_lo, bin_hi, expected_share, category)`` frame
+    ``baseline_from`` builds — stream execution, batch truth."""
     from valor_spark.operators.drift import drift_report
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
